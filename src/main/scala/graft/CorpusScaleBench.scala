@@ -912,11 +912,11 @@ object CorpusScaleBench {
         // The index pieces themselves stay persisted by design (they ARE
         // the standing state) and were materialized by count(), so
         // dropping the bases costs only a possible recompute while they
-        // stay on disk. Since r19 the sweep ALSO drops verifyPruned's
-        // touched-id checkpoints, which are NOT recomputable — safe here
-        // because this tick's pair frame was materialized by the
-        // localCheckpoint(true)+count above (see the sweep's scaladoc for
-        // the hardened contract).
+        // stay on disk. The sweep ALSO drops the probe's candidate pin
+        // and verifyPruned's touched-id pins — persisted frames, so like
+        // the bases they only cost a recompute if read again, and this
+        // tick's pair frame was already materialized by the
+        // localCheckpoint(true)+count above.
         queries.DedupOps.releaseAllMinhashBases(spark)
       }
 
@@ -1003,14 +1003,12 @@ object CorpusScaleBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // campaign-log hygiene (VERDICT r19 item 4): every registry-swept
-    // localCheckpoint unpersist emits a benign but alarming Spark WARN
-    // ("RDD N was locally checkpointed, its lineage has been truncated
-    // and cannot be recomputed after unpersisting") — K per campaign
-    // read as data-loss alarms. It is benign UNDER the materialize-first
-    // contract, whose violations now warn explicitly and specifically
-    // (DedupOps.warnIfUnmaterialized), so the blanket message is
-    // suppressed in the campaign MAINS only; library sessions keep it.
+    // campaign-log hygiene (VERDICT r19 item 4): each localCheckpoint
+    // unpersist logs a benign but alarming WARN ("RDD N was locally
+    // checkpointed … cannot be recomputed after unpersisting"); here they
+    // come from DedupOps.checkpointReleasable (connected-components
+    // rounds, sem-dedup loser frames), released after their consumers
+    // ran. Suppressed in the campaign MAINS only; library sessions keep it.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)
@@ -1280,14 +1278,12 @@ object VectorGen {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // campaign-log hygiene (VERDICT r19 item 4): every registry-swept
-    // localCheckpoint unpersist emits a benign but alarming Spark WARN
-    // ("RDD N was locally checkpointed, its lineage has been truncated
-    // and cannot be recomputed after unpersisting") — K per campaign
-    // read as data-loss alarms. It is benign UNDER the materialize-first
-    // contract, whose violations now warn explicitly and specifically
-    // (DedupOps.warnIfUnmaterialized), so the blanket message is
-    // suppressed in the campaign MAINS only; library sessions keep it.
+    // campaign-log hygiene (VERDICT r19 item 4): each localCheckpoint
+    // unpersist logs a benign but alarming WARN ("RDD N was locally
+    // checkpointed … cannot be recomputed after unpersisting"); here they
+    // come from DedupOps.checkpointReleasable (connected-components
+    // rounds, sem-dedup loser frames), released after their consumers
+    // ran. Suppressed in the campaign MAINS only; library sessions keep it.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)

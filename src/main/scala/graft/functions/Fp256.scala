@@ -158,47 +158,6 @@ object Fp256 {
     * saved multiplies on a multiplyHigh-intrinsic JVM. */
   def sqr(a: Array[Long], out: Array[Long]): Unit = mul(a, a, out)
 
-  /** 8 limbs → 4 limbs mod p. */
-  private def reduce512(r: Array[Long], out: Array[Long]): Unit = {
-    // fold 1: t = low4 + high4 * C  (≤ 5 limbs)
-    val t = new Array[Long](4)
-    var carry = 0L
-    var i = 0
-    while (i < 4) {
-      val hi = r(i + 4)
-      val lo = hi * C
-      val up = umulHi(hi, C)
-      val s1 = r(i) + lo
-      val c1 = carryOf(r(i), lo, s1)
-      val s2 = s1 + carry
-      val c2 = carryOf(s1, carry, s2)
-      t(i) = s2
-      carry = up + c1 + c2
-      i += 1
-    }
-    val t4 = carry
-    // fold 2: add t4 * C (2-limb value) to t
-    val lo2 = t4 * C
-    val hi2 = umulHi(t4, C)
-    var s = t(0) + lo2
-    var c = carryOf(t(0), lo2, s)
-    out(0) = s
-    val s1 = t(1) + hi2
-    val ca = carryOf(t(1), hi2, s1)
-    val s2 = s1 + c
-    val cb = carryOf(s1, c, s2)
-    out(1) = s2
-    c = ca + cb
-    s = t(2) + c
-    c = carryOf(t(2), c, s)
-    out(2) = s
-    s = t(3) + c
-    c = carryOf(t(3), c, s)
-    out(3) = s
-    if (c != 0) addSmall(out, C) // fold 3 (extremely rare; result < p + small)
-    condSubP(out)
-  }
-
   /** x += small (mod 2^256); wrap implies value left the 2^256 range, which
     * our callers use exactly as "+ C ≡ − p". */
   @inline private def addSmall(x: Array[Long], v: Long): Unit = {

@@ -74,30 +74,6 @@ object Secp256k1 {
     Pt(x3, y3, z3)
   }
 
-  /** Mixed addition: Jacobian P + affine (x2, y2) — fewer field mults than
-    * the general add (the affine point has Z = 1). */
-  private def addAffine(p: Pt, x2: BigInteger, y2: BigInteger): Pt = {
-    if (p.isInfinity) return Pt(x2, y2, BigInteger.ONE)
-    val z1z1 = mod(p.z.multiply(p.z))
-    val u2 = mod(x2.multiply(z1z1))
-    val s2 = mod(y2.multiply(z1z1).multiply(p.z))
-    val h = mod(u2.subtract(p.x))
-    val r = mod(s2.subtract(p.y))
-    if (h.signum == 0) {
-      if (r.signum == 0) return dbl(p)
-      return Infinity
-    }
-    val h2 = mod(h.multiply(h))
-    val h3 = mod(h2.multiply(h))
-    val u1h2 = mod(p.x.multiply(h2))
-    val x3 = mod(r.multiply(r).subtract(h3).subtract(u1h2.shiftLeft(1)))
-    val y3 = mod(r.multiply(u1h2.subtract(x3)).subtract(p.y.multiply(h3)))
-    Pt(x3, y3, mod(h.multiply(p.z)))
-  }
-
-  private def negate(p: Pt): Pt =
-    if (p.isInfinity) p else Pt(p.x, P.subtract(p.y), p.z)
-
   /** Width-w NAF digits (LSB first): zero or odd with |d| < 2^(w-1);
     * nonzero density ~1/(w+1). Runs on 64-bit limbs — the digit loop
     * iterates once per scalar bit, so BigInteger churn here showed up in
@@ -161,16 +137,6 @@ object Secp256k1 {
     pts.map(toAffine)
   }
 
-  /** Odd Jacobian multiples 1·P, 3·P, …, 15·P. */
-  private def oddMultiples(p: Pt): Array[Pt] = {
-    val tab = new Array[Pt](8)
-    tab(0) = p
-    val p2 = dbl(p)
-    var i = 1
-    while (i < 8) { tab(i) = add(tab(i - 1), p2); i += 1 }
-    tab
-  }
-
   // ── limb-based Jacobian arithmetic (hot ladder path) ─────────────────
   // Same formulas as the BigInteger versions above, on Fp256 limbs: no
   // object churn in the inner loop beyond small fixed arrays, no
@@ -180,15 +146,6 @@ object Secp256k1 {
   private final class JPt(val x: Array[Long], val y: Array[Long], val z: Array[Long])
   private def jInf: JPt = new JPt(new Array[Long](4), new Array[Long](4), new Array[Long](4))
   @inline private def jIsInf(p: JPt): Boolean = Fp256.isZero(p.z)
-
-  private def jFrom(p: Pt): JPt =
-    if (p.isInfinity) jInf
-    else new JPt(Fp256.fromBigInteger(p.x), Fp256.fromBigInteger(p.y),
-      Fp256.fromBigInteger(p.z))
-
-  private def jToPt(p: JPt): Pt =
-    if (jIsInf(p)) Infinity
-    else Pt(Fp256.toBigInteger(p.x), Fp256.toBigInteger(p.y), Fp256.toBigInteger(p.z))
 
   private def jDbl(p: JPt): JPt = {
     if (jIsInf(p) || Fp256.isZero(p.y)) return jInf
@@ -239,39 +196,6 @@ object Secp256k1 {
     val z3 = new Array[Long](4)
     Fp256.mul(p.z, q.z, t); Fp256.mul(h, t, z3)
     new JPt(x3, y3, z3)
-  }
-
-  /** Mixed addition with an affine (x2, y2) point (Z2 = 1). */
-  private def jAddAffine(p: JPt, x2: Array[Long], y2: Array[Long]): JPt = {
-    if (jIsInf(p)) return new JPt(Fp256.copy(x2), Fp256.copy(y2),
-      Array(1L, 0L, 0L, 0L))
-    val z1z1 = new Array[Long](4); Fp256.sqr(p.z, z1z1)
-    val u2 = new Array[Long](4); Fp256.mul(x2, z1z1, u2)
-    val t = new Array[Long](4)
-    val s2 = new Array[Long](4); Fp256.mul(y2, z1z1, t); Fp256.mul(t, p.z, s2)
-    val h = new Array[Long](4); Fp256.sub(u2, p.x, h)
-    val r = new Array[Long](4); Fp256.sub(s2, p.y, r)
-    if (Fp256.isZero(h)) {
-      if (Fp256.isZero(r)) return jDbl(p)
-      return jInf
-    }
-    val h2 = new Array[Long](4); Fp256.sqr(h, h2)
-    val h3 = new Array[Long](4); Fp256.mul(h2, h, h3)
-    val u1h2 = new Array[Long](4); Fp256.mul(p.x, h2, u1h2)
-    val x3 = new Array[Long](4); Fp256.sqr(r, x3)
-    Fp256.sub(x3, h3, x3); Fp256.sub(x3, u1h2, x3); Fp256.sub(x3, u1h2, x3)
-    val y3 = new Array[Long](4)
-    Fp256.sub(u1h2, x3, y3); Fp256.mul(r, Fp256.copy(y3), y3)
-    Fp256.mul(p.y, h3, t); Fp256.sub(y3, t, y3)
-    val z3 = new Array[Long](4); Fp256.mul(h, p.z, z3)
-    new JPt(x3, y3, z3)
-  }
-
-  private def jNegate(p: JPt): JPt = {
-    if (jIsInf(p)) return p
-    val ny = new Array[Long](4)
-    Fp256.sub(new Array[Long](4), p.y, ny)
-    new JPt(p.x, ny, p.z)
   }
 
   // ── GLV endomorphism (secp256k1 has φ(x,y) = (βx, y) = λ·(x,y)) ──────
@@ -380,10 +304,6 @@ object Secp256k1 {
     val k2 = c1.multiply(v1._2).add(c2.multiply(v2._2)).negate
     (k1, k2)
   }
-
-  /** φ applied to a Jacobian point: (βX, Y, Z). */
-  private def endo(p: Pt, beta: BigInteger): Pt =
-    if (p.isInfinity) p else Pt(mod(p.x.multiply(beta)), p.y, p.z)
 
   /** φ applied to the affine G table. */
   private lazy val gEndoTable: Array[(BigInteger, BigInteger)] =

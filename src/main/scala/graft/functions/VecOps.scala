@@ -239,10 +239,10 @@ object VecNearestOps {
       if (cm.isNullAt(j)) { j += 1 }
       else {
       val entry = cm.getStruct(j, 2)
+      if (entry.isNullAt(0) || entry.isNullAt(1)) { j += 1 }
+      else {
       val c = entry.getLong(0)
       val m = entry.getArray(1)
-      if (m == null || entry.isNullAt(0)) { j += 1 }
-      else {
       // the three dots, each accumulated in index order like VecDot
       val ne = e.numElements()
       val nm = m.numElements()

@@ -948,14 +948,12 @@ object SemIndexJob {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // campaign-log hygiene (VERDICT r19 item 4): every registry-swept
-    // localCheckpoint unpersist emits a benign but alarming Spark WARN
-    // ("RDD N was locally checkpointed, its lineage has been truncated
-    // and cannot be recomputed after unpersisting") — K per campaign
-    // read as data-loss alarms. It is benign UNDER the materialize-first
-    // contract, whose violations now warn explicitly and specifically
-    // (DedupOps.warnIfUnmaterialized), so the blanket message is
-    // suppressed in the campaign MAINS only; library sessions keep it.
+    // campaign-log hygiene (VERDICT r19 item 4): each localCheckpoint
+    // unpersist logs a benign but alarming WARN ("RDD N was locally
+    // checkpointed … cannot be recomputed after unpersisting"); here they
+    // come from DedupOps.checkpointReleasable (connected-components
+    // rounds, sem-dedup loser frames), released after their consumers
+    // ran. Suppressed in the campaign MAINS only; library sessions keep it.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)

@@ -172,176 +172,34 @@ object DedupOps {
     val sid = System.identityHashCode(s)
     minhashBaseMemo.keys.filter(_._1 == sid)
       .foreach(k => SessionCaches.release(s, s"dedup.minhash.base:${k._2}"))
-    // the pruned verify's checkpointed touched-id sets ride the same
-    // sweep (ADVICE r18): each verifyPruned call pins one localCheckpoint
-    // for its size gate + broadcast, and like the internal
-    // touchedExisting bases the CALLER never sees the frame to release
-    // it — a K-day loop would otherwise retain K checkpoint RDDs for the
-    // session's lifetime (the r13 retained-state class).
-    //
-    // CONTRACT HARDENING (review r19): the DISK_ONLY bases above are
-    // recomputable from lineage, so sweeping them early only costs a
-    // recompute — but an unpersisted localCheckpoint is UNRECOVERABLE
-    // (lineage truncated). Callers must MATERIALIZE every pruned-verify
-    // output (count/collect/checkpoint) before calling this sweep; a
-    // sweep between plan construction and materialization fails the
-    // later job with "Checkpoint block not found" instead of slowing
-    // it. Every current call site (the daily loop's per-tick sweep)
-    // materializes first.
-    touchedCheckpointMemo.keys.filter(_._1 == sid)
+    // the internal frames persistTracked pins ride the same sweep
+    // (ADVICE r18): the CALLER never sees them to release them.
+    pinnedMemo.keys.filter(_._1 == sid)
       .foreach(k => SessionCaches.release(s, s"dedup.touched:${k._2}"))
   }
 
-  /** The checkpointed candidate-touched id frames [[verifyPruned]] pins
-    * for its size gate + static broadcast, tracked so the
-    * [[releaseAllMinhashBases]] sweep (and the session-end finalizer)
-    * can unpersist them once the verify output is materialized — the
-    * frames are internal to verifyPruned, so no caller can name them
-    * (ADVICE r18: they previously stayed checkpointed for the session's
-    * lifetime). Keyed by a per-call sequence, not a plan hash: two
-    * verify passes over identical plans still pin two distinct
-    * checkpoints. Each entry carries a MATERIALIZED bit (ADVICE r19):
-    * the sweep's materialize-first contract was comment-only, and a
-    * caller sweeping between plan construction and consumer
-    * materialization would fail far from the cause with "Checkpoint
-    * block not found" — the bit is flipped by a per-session
-    * QueryExecutionListener when any successful Dataset action's
-    * executed plan scans the checkpoint's RDD, and the release path
-    * warns LOUDLY when it drops a checkpoint no action ever read. */
-  /** `rdd` is the checkpoint's PERSISTED internal RDD (off the analyzed
-    * LogicalRDD) — the release path must unpersist THAT, not the
-    * Dataset: `Dataset.unpersist` only uncaches CacheManager-registered
-    * plans, and a localCheckpoint is never registered there, so the r19
-    * sweep's df-level unpersist silently freed nothing (caught by the
-    * r20 MinhashCacheSpec release test; [[checkpointReleasable]] had
-    * always released at the RDD level for exactly this reason). */
-  private case class TrackedCheckpoint(
-      rdd: Option[org.apache.spark.rdd.RDD[_]], rddId: Int,
-      materialized: java.util.concurrent.atomic.AtomicBoolean,
-      session: java.lang.ref.WeakReference[SparkSession])
-  private val touchedCheckpointMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, Long), TrackedCheckpoint]
-  private val touchedCheckpointSeq =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-  private val ckptObserverHooked =
-    scala.collection.concurrent.TrieMap.empty[Int, Boolean]
+  private val pinnedMemo =
+    scala.collection.concurrent.TrieMap.empty[(Int, Long), DataFrame]
+  private val pinnedSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** RDD ids behind every RDDScanExec in an executed plan, descending
-    * into settled adaptive subplans: AdaptiveSparkPlanExec AND the
-    * QueryStageExec wrappers it materializes (Result/Shuffle/Broadcast
-    * stages) are all LEAF nodes — tree traversal stops at each without
-    * the recursion (observed: a count's executed plan reads
-    * ADAPTIVE[ResultQueryStageExec] at the top level with every real
-    * operator inside the stage's `plan`). Best-effort: a plan shape
-    * this misses costs one advisory warning, never correctness. */
-  private def rddScanIds(
-      p: org.apache.spark.sql.execution.SparkPlan): Seq[Int] =
-    p.collect {
-      case r: org.apache.spark.sql.execution.RDDScanExec => Seq(r.rdd.id)
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        rddScanIds(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        rddScanIds(q.plan)
-    }.flatten
-
-  /** Advisory check on the release path (ADVICE r19): an unpersisted
-    * localCheckpoint is UNRECOVERABLE, so dropping one that no action
-    * ever read means a later consumer dies with "Checkpoint block not
-    * found" far from this cause. QueryExecutionListener callbacks ride
-    * the async bus BEHIND the just-finished action's own stage events,
-    * so a release right after a heavy materialization can race a bus
-    * backlog measured in seconds — the poll gives it up to 10 s to flip
-    * the bit before the alarm, and only costs time on the
-    * (contract-violating) path the warning exists for. */
-  /** Drain the shared listener bus (bounded) so a LATE-but-delivered
-    * QueryExecutionListener event can still flip the bit before the
-    * alarm: on a contended box the bus backlog was measured exceeding
-    * the full 10 s poll (no drops logged — pure delivery latency), which
-    * made the advisory below fire on a contract-HONORING release (the
-    * ADVICE r20 failure mode, seen live as a MinhashCacheSpec flake).
-    * `listenerBus`/`waitUntilEmpty` are package-private — reflection,
-    * best-effort; on any failure the wall-clock poll still stands. */
-  private def drainListenerBus(s: SparkSession): Unit =
-    try {
-      val sc = s.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      val bounded =
-        try bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-        catch { case _: NoSuchMethodException => null }
-      if (bounded != null) bounded.invoke(bus, java.lang.Long.valueOf(30000L))
-      else bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      ()
-    } catch { case _: Throwable => () }
-
-  private def warnIfUnmaterialized(tc: TrackedCheckpoint): Unit = {
-    var i = 0
-    // quick poll first (the common case is sub-second delivery), then one
-    // deterministic bus drain, then the remainder of the bounded poll
-    while (!tc.materialized.get() && i < 10) { Thread.sleep(200); i += 1 }
-    if (!tc.materialized.get())
-      Option(tc.session.get()).foreach(drainListenerBus)
-    while (!tc.materialized.get() && i < 50) { Thread.sleep(200); i += 1 }
-    if (!tc.materialized.get())
-      System.err.println("[dedup] WARNING: releasing a localCheckpoint " +
-        s"(RDD ${tc.rddId}) that no completed action ever read — if a " +
-        "plan built on it is materialized later it will fail with " +
-        "'Checkpoint block not found'. Materialize every pruned-verify/" +
-        "index-probe output before releaseAllMinhashBases (or the " +
-        "per-call release thunk) runs.")
-  }
-
-  /** Eager localCheckpoint + registry-track a small internal frame so
-    * the [[releaseAllMinhashBases]] sweep (or session end) unpersists
-    * it — the shared discipline of [[verifyPruned]]'s touched sets and
-    * [[minhashPairsAgainstIndex]]'s candidate pairs. Returns the pinned
-    * frame and an early-release thunk for callers that drop it sooner
-    * (verifyPruned's beyond-ceiling fallback;
-    * [[minhashPairsAgainstIndexReleasable]] consumers). Materialize
-    * every consumer before the sweep runs — see the sweep's scaladoc;
-    * violations are caught by [[warnIfUnmaterialized]]. */
-  private def trackCheckpoint(df: DataFrame): (DataFrame, () => Unit) = {
+  /** Eager `persist(MEMORY_AND_DISK)` + count of an internal frame —
+    * [[verifyPruned]]'s touched ids and [[minhashPairsAgainstIndex]]'s
+    * candidate pairs — tracked so the [[releaseAllMinhashBases]] sweep
+    * (or session end) unpersists it; a K-day loop otherwise retained K
+    * pins for the session's lifetime. Keyed by a per-call sequence, not
+    * a plan hash. Returns the frame, its row count and an idempotent
+    * early-release thunk. A cache, not a localCheckpoint: the plan keeps
+    * its lineage, so a release before a consumer's action costs that
+    * action a recompute, never a "Checkpoint block not found". */
+  private def persistTracked(df: DataFrame): (DataFrame, Long, () => Unit) = {
     val s = df.sparkSession
-    val t = df.localCheckpoint(true)
-    val internalRdd = t.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.headOption
-    val tracked = TrackedCheckpoint(internalRdd,
-      internalRdd.map(_.id).getOrElse(-1),
-      new java.util.concurrent.atomic.AtomicBoolean(false),
-      new java.lang.ref.WeakReference(s))
-    val key = (System.identityHashCode(s), touchedCheckpointSeq.incrementAndGet())
-    touchedCheckpointMemo.put(key, tracked)
-    // one materialization observer per session: any successful Dataset
-    // action whose executed plan scans a tracked checkpoint RDD flips
-    // its bit. Bounded work per action — a plan walk, and only while
-    // this session tracks checkpoints.
-    val sid = key._1
-    if (ckptObserverHooked.putIfAbsent(sid, true).isEmpty)
-      s.listenerManager.register(
-        new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit =
-            if (touchedCheckpointMemo.keysIterator.exists(_._1 == sid)) {
-              val ids =
-                try rddScanIds(qe.executedPlan).toSet
-                catch { case _: Throwable => Set.empty[Int] }
-              if (ids.nonEmpty)
-                touchedCheckpointMemo.foreach { case ((s2, _), tc) =>
-                  if (s2 == sid && ids.contains(tc.rddId))
-                    tc.materialized.set(true)
-                }
-            }
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              error: Exception): Unit = ()
-        })
+    val t = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val n = t.count()
+    val key = (System.identityHashCode(s), pinnedSeq.incrementAndGet())
+    pinnedMemo.put(key, t)
     SessionCaches.onRelease(s, s"dedup.touched:${key._2}")(() =>
-      touchedCheckpointMemo.remove(key).foreach { tc =>
-        warnIfUnmaterialized(tc)
-        tc.rdd.foreach(_.unpersist(false))
-      })
-    (t, () => SessionCaches.release(s, s"dedup.touched:${key._2}"))
+      pinnedMemo.remove(key).foreach(_.unpersist(false)))
+    (t, n, () => SessionCaches.release(s, s"dedup.touched:${key._2}"))
   }
 
   /** LSH banding rows (doc_id, band, bucket[, extra…]) via the scan-local
@@ -457,23 +315,19 @@ object DedupOps {
     // broadcast is bare doc_ids of candidate-touched docs — bounded by
     // the near-dup candidate rate, tens of MB at 5 M docs.
     //
-    // The id set is checkpointed BEFORE the size gate counts it, so the
+    // The id set is pinned BEFORE the size gate counts it, so the
     // count and the broadcast read the same materialization (one
     // banding-aggregate evaluation either way, no second corpus pass)
     // and a beyond-ceiling set is detected before any broadcast build
     // starts (ADVICE r17 — the guard turns a mid-broadcast OOM into a
-    // planned fallback). The eager checkpoint is also why plan
-    // CONSTRUCTION through this path runs Spark jobs (a banding pass) —
-    // inherent to deciding broadcast-vs-fallback before the plan is
-    // returned; plan-shape-only callers eat that cost once.
+    // planned fallback). The eager pin is also why plan CONSTRUCTION
+    // through this path runs Spark jobs (a banding pass) — inherent to
+    // deciding broadcast-vs-fallback before the plan is returned;
+    // plan-shape-only callers eat that cost once.
     //
-    // Registered via trackCheckpoint (ADVICE r18): the checkpoint must
-    // outlive this call (the returned plan broadcasts it), so it can't
-    // be unpersisted here — the releaseAllMinhashBases sweep (or the
-    // session-end finalizer) drops it after the verify output is
-    // materialized.
-    val (t, releaseEarly) = trackCheckpoint(touched)
-    val nTouched = t.count()
+    // The pin outlives this call (the returned plan broadcasts it); the
+    // releaseAllMinhashBases sweep or session end drops it.
+    val (t, nTouched, releaseEarly) = persistTracked(touched)
     // cap by what the driver can actually collect (ADVICE r18)
     val ceiling = touchedBroadcastCeiling(
       org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
@@ -725,21 +579,17 @@ object DedupOps {
     minhashPairsAgainstIndexReleasable(s, index, existing, fresh)._1
 
   /** [[minhashPairsAgainstIndex]] plus the release thunk for its
-    * internal candidate checkpoint (VERDICT r19 item 4): the daily loop
-    * frees the checkpoint through its per-tick
-    * [[releaseAllMinhashBases]] sweep, but a LIBRARY consumer in a
-    * long-lived session without the sweep accumulated one pinned
-    * checkpoint per call with no way to name it. Call the thunk after
-    * materializing the returned pairs (count/collect/write) — it is the
-    * same contract as the sweep ([[warnIfUnmaterialized]] catches
-    * violations), idempotent, and a no-op if the sweep ran first. */
+    * internal candidate pin (VERDICT r19 item 4), for library consumers
+    * without the daily loop's [[releaseAllMinhashBases]] sweep. Call it
+    * once the returned pairs are materialized; an earlier call only
+    * makes that action recompute the candidates. Idempotent. */
   private[graft] def minhashPairsAgainstIndexReleasable(
       s: SparkSession, index: DataFrame, existing: DataFrame,
       fresh: DataFrame): (DataFrame, () => Unit) = {
     val freshBase = minhashBase(s, fresh)
     val freshBanded = minhashBanded(freshBase).select("doc_id", "band", "bucket")
     val allBanded = index.union(freshBanded)
-    // checkpointed (review r19): cand feeds the final verify join AND —
+    // pinned (review r19): cand feeds the final verify join AND —
     // via `touched` below — the semi that selects which existing docs
     // get shingled, so left lazy the freshBanded×index probe join
     // re-evaluates in every consumer (the cand-derived re-evaluation
@@ -748,7 +598,7 @@ object DedupOps {
     // releaseAllMinhashBases sweep frees it after the tick's pairs are
     // materialized; the release thunk is ALSO surfaced to the caller
     // (VERDICT r19 item 4) for sweep-less library sessions.
-    val (cand, releaseCand) = trackCheckpoint(
+    val (cand, _, releaseCand) = persistTracked(
       bandedCandidates(freshBanded, allBanded, fullSelfJoin = false))
     // verify reads shingles for fresh docs from the batch and, for the
     // existing side, ONLY for docs that actually appear in a candidate.

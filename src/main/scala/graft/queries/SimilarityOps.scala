@@ -740,7 +740,7 @@ object SimilarityOps {
     * HIERARCHICAL: a √k-sized coarse quantizer (always broadcastable)
     * shuffles the corpus ONCE on the cell id, and each cell — now
     * task-sized — re-applies the same train-assign step locally
-    * ([[localKmeans]], the recursive unit; cells past [[CellSplitCap]]
+    * ([[localKmeansProbed]], the recursive unit; cells past [[CellSplitCap]]
     * members are split into bounded contiguous ranges — see the cap's
     * scaladoc for the duplicate-funnel failure it bounds). Blocking
     * quality is
@@ -785,7 +785,7 @@ object SimilarityOps {
     * contiguous chunks — copies are interchangeable, so any chunk
     * self-contains partners. Deterministic (value hash, no seed, no
     * shuffle-order dependence); each split preserves the caller's
-    * id-sorted order, the localKmeans contract. Parameterized `cap` for
+    * id-sorted order, the localKmeansProbed contract. Parameterized `cap` for
     * the spec; production uses [[CellSplitCap]]. */
   private[graft] def cellSplits(vs: Array[(Long, Array[Double])],
       cap: Int = CellSplitCap): Iterator[Array[(Long, Array[Double])]] =
@@ -803,27 +803,6 @@ object SimilarityOps {
       }
     }
 
-  /** Task-local deterministic Lloyd over one cell — the recursive unit of
-    * the hierarchical blocking. Seeds = every (len/k)-th member of the
-    * id-sorted cell (STRIDED, not the k lowest ids: near-dup pairs tend
-    * to sit on ADJACENT ids, and lowest-k seeding made both members of
-    * such a pair their own seed — two near-identical centroids that
-    * Lloyd never merges, splitting exactly the pairs the blocking exists
-    * to find; measured at 10 M vectors the low-id subsample's recall
-    * collapsed to 0.46 vs 0.80 corpus-wide before the stride). Ties in
-    * the argmin break toward the lower centroid id; `vs` MUST be sorted
-    * by vec_id (the caller sorts) so the result is independent of
-    * shuffle arrival order. Returns the per-vector sub-cluster ids. */
-  private def localKmeans(vs: Array[(Long, Array[Double])], k: Int, lloyd: Int = 2): Array[Int] =
-    localKmeansProbed(vs, k, 0.0, lloyd).map(_._1)
-
-  /** [[localKmeans]] plus the BOUNDARY runner-up: per vector, (best sub-
-    * cluster, second sub-cluster or -1). The second is kept only when its
-    * d² is within `subMargin`× of the best — the level-2 twin of
-    * [[assignVecProbes]]' margin knob, aimed at the pairs the r12 10 M
-    * miss-split printout showed splitting across SUB-clusters within a
-    * shared cell (VERDICT r12 item 4). subMargin ≤ 1 keeps the single-
-    * assignment contract exactly (second is always -1). */
   /** The Lloyd-fit half of [[localKmeansProbed]]: strided seeds, `lloyd`
     * iterations, dead centroids dropped — returns the SETTLED centroids.
     * Exposed separately so the standing semantic index
@@ -876,6 +855,23 @@ object SimilarityOps {
     cents
   }
 
+  /** Task-local deterministic Lloyd over one cell — the recursive unit of
+    * the hierarchical blocking. Seeds = every (len/k)-th member of the
+    * id-sorted cell (STRIDED, not the k lowest ids: near-dup pairs tend
+    * to sit on ADJACENT ids, and lowest-k seeding made both members of
+    * such a pair their own seed — two near-identical centroids that
+    * Lloyd never merges, splitting exactly the pairs the blocking exists
+    * to find; measured at 10 M vectors the low-id subsample's recall
+    * collapsed to 0.46 vs 0.80 corpus-wide before the stride). Ties in
+    * the argmin break toward the lower centroid id; `vs` MUST be sorted
+    * by vec_id (the caller sorts) so the result is independent of
+    * shuffle arrival order. Returns per vector (best sub-cluster, second
+    * sub-cluster or -1): the BOUNDARY runner-up is kept only when its d²
+    * is within `subMargin`× of the best — the level-2 twin of
+    * [[assignVecProbes]]' margin knob, aimed at the pairs the r12 10 M
+    * miss-split printout showed splitting across SUB-clusters within a
+    * shared cell (VERDICT r12 item 4). subMargin ≤ 1 keeps the single-
+    * assignment contract exactly (second is always -1). */
   private[graft] def localKmeansProbed(vs: Array[(Long, Array[Double])], k: Int,
       subMargin: Double, lloyd: Int = 2): Array[(Int, Int)] = {
     val dim = vs.head._2.length
@@ -1465,8 +1461,19 @@ object SimilarityOps {
     val w = Window.partitionBy("vec_id", "cell")
       .orderBy(col("d2"), col("sub"))
     val keepN = if (subProbeMargin > 1.0) 2 else 1
+    // broadcast the sub table iff a bounded row probe fits it under the
+    // broadcast threshold. A live index's sub lineage estimates at GBs
+    // for a KB table, so an estimate-gated hint never fired and AQE
+    // broadcast whichever join side's stage finished first: the plan
+    // (and its map-side partial group limit) followed task timing.
+    val subCap = math.min(Int.MaxValue - 1L,
+      s.sessionState.conf.autoBroadcastJoinThreshold / SubRowBytes)
+    val sub =
+      if (subCap > 0 && index.sub.limit(subCap.toInt + 1).count() <= subCap)
+        broadcast(index.sub)
+      else index.sub
     val ranked = emb.join(cells, Seq("vec_id"))
-      .join(graft.ops.Hints.broadcastIfSmall(index.sub), Seq("cell"))
+      .join(sub, Seq("cell"))
       .withColumn("d2",
         vec_dot(col("embedding"), col("embedding"))
           - lit(2.0) * vec_dot(col("embedding"), col("m"))

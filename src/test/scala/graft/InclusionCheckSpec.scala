@@ -176,9 +176,12 @@ class InclusionCheckSpec extends AnyFunSuite {
 
   test("batched JSON-RPC resolution matches the join path and the " +
     "sequential path; blocks still fetched once each") {
+    // one defined row order for both the enrich input and the simulated
+    // chunk walk below: sorted, then concatenated into one partition
+    val ordered = inputDf.sort("hash").coalesce(1)
     withRpcServer() { (uri, receiptReqs, blockReqs) =>
       val stats = InclusionCheck.Stats(spark)
-      val out = InclusionCheck.enrich(inputDf.repartition(1),
+      val out = InclusionCheck.enrich(ordered,
         InclusionCheck.JsonRpcFactory(uri), Some(stats),
         rpcBatchSize = 64).persist()
       out.count()
@@ -197,8 +200,7 @@ class InclusionCheckSpec extends AnyFunSuite {
       // as misses; pending hashes re-probe every chunk) — deterministic
       // for this fixture, so simulate the documented chunk walk over the
       // same single-partition row order and require equality.
-      val order = inputDf.repartition(1).select("hash")
-        .collect().map(_.getString(0))
+      val order = ordered.select("hash").collect().map(_.getString(0))
       var eHits = 0L; var eMisses = 0L; var eReceipts = 0L; var eBlocks = 0L
       val cached = scala.collection.mutable.Set.empty[String]
       order.grouped(64).foreach { chunk =>

@@ -2,6 +2,7 @@ package graft
 
 import graft.queries.DedupOps
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Engine-level equivalence of the incremental pairing path (r8): banding
@@ -9,9 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * fresh-touching subset of the full batch pairing — same pairs, same
   * exact-verified Jaccard values — for any split of the corpus.
   */
-class IncrementalDedupSpec extends AnyFunSuite {
+class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
+
+  // the pruned verify and the index probe pin internal frames in the
+  // shared session's CacheManager; sweep them (and the memoized shingle
+  // bases) so later suites start from an unpinned session
+  override def afterAll(): Unit = DedupOps.releaseAllMinhashBases(spark)
 
   // planted corpus: every doc has a guaranteed near-copy at +1,000,000
   private def docs = DedupOps.withPlanted(spark, dir)

@@ -481,8 +481,8 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("single live centroid"))
     // (3) the over-cap cell splitter (the duplicate-funnel task bound):
     // size-capped, membership-preserving, per-split id-sorted (the
-    // localKmeans contract); a cell under the cap passes through as the
-    // identical single array
+    // localKmeansProbed contract); a cell under the cap passes through as
+    // the identical single array
     val vs = Array.tabulate(1000)(i => (i.toLong, Array(i.toDouble)))
     val one = queries.SimilarityOps.cellSplits(vs).toSeq
     assert(one.length == 1 && (one.head eq vs))

@@ -31,19 +31,10 @@ class MinhashCacheSpec extends AnyFunSuite {
     assert(!(a eq b))
   }
 
-  private def captureErr(body: => Unit): String = {
-    val buf = new java.io.ByteArrayOutputStream
-    val real = System.err
-    System.setErr(new java.io.PrintStream(buf, true))
-    try body finally System.setErr(real)
-    buf.toString("UTF-8")
-  }
-
-  test("releasable index probe frees its candidate checkpoint, silently when materialized") {
+  test("releasable index probe frees its candidate checkpoint") {
     // VERDICT r19 item 4: a library consumer without the daily loop's
     // global sweep needs a per-call release for the probe's internal
-    // candidate checkpoint — and a release AFTER materialization must
-    // not trip the unmaterialized-checkpoint warning (ADVICE r19).
+    // candidate pin.
     import org.apache.spark.sql.functions.col
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
     val existing = docs.filter(col("doc_id") % 10 =!= 0)
@@ -52,32 +43,36 @@ class MinhashCacheSpec extends AnyFunSuite {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val (pairs, release) = DedupOps.minhashPairsAgainstIndexReleasable(
       spark, index, existing, fresh)
-    pairs.count() // the consumer materialization the contract requires
+    pairs.count()
     val during = spark.sparkContext.getPersistentRDDs.keySet
-    assert((during -- before).nonEmpty, "no candidate checkpoint was pinned")
-    val err = captureErr { release(); release() } // idempotent
+    assert((during -- before).nonEmpty, "no candidate pin was persisted")
+    release(); release() // idempotent
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert(during.size - after.size >= 1,
       s"release freed nothing (before=${before.size}, during=${during.size}, after=${after.size})")
-    assert(!err.contains("no completed action ever read"),
-      s"materialized release still warned:\n$err")
+    DedupOps.releaseAllMinhashBases(spark)
   }
 
-  test("releasing a checkpoint no action ever read warns loudly") {
-    // ADVICE r19: the materialize-before-sweep contract was comment-only
-    // — an unpersisted localCheckpoint is unrecoverable, so a sweep
-    // between plan construction and materialization must announce
-    // itself instead of failing a later job far from the cause.
+  test("early release of the probe's pin recomputes every pair") {
+    // The candidate pin is a persisted frame, not a localCheckpoint: a
+    // release before the consumer's first action costs a recompute from
+    // lineage, never a lost block.
     import org.apache.spark.sql.functions.col
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
     val existing = docs.filter(col("doc_id") % 7 =!= 0)
     val fresh = docs.filter(col("doc_id") % 7 === 0)
     val index = DedupOps.minhashIndex(spark, existing).localCheckpoint(true)
-    val (_, release) = DedupOps.minhashPairsAgainstIndexReleasable(
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (pairs, release) = DedupOps.minhashPairsAgainstIndexReleasable(
       spark, index, existing, fresh)
-    // no action on the pairs frame — the contract violation
-    val err = captureErr { release() }
-    assert(err.contains("no completed action ever read"),
-      s"unmaterialized release did not warn:\n$err")
+    release()
+    val got = pairs.collect().toSet
+    assert(got.nonEmpty, "fixture planted no fresh-touching pair")
+    assert(got == DedupOps.minhashPairsIncremental(spark, existing, fresh)
+      .collect().toSet)
+    // the sweep leaves no pin (nor base) of these calls behind
+    DedupOps.releaseAllMinhashBases(spark)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"pins left after the sweep: $left")
   }
 }

@@ -612,5 +612,7 @@ class ScalePlanSpec extends AnyFunSuite {
     assert(lines.exists(l => l.contains("SortMergeJoin")
         && l.contains("Inner")),
       s"exact-verify joins lost their sort-merge pin:\n$plan")
+    // building the plan pinned the touched-id set; free it for later suites
+    queries.DedupOps.releaseAllMinhashBases(spark)
   }
 }

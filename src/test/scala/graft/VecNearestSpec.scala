@@ -88,4 +88,24 @@ class VecNearestSpec extends AnyFunSuite {
     val cents = df(Seq(10L -> Seq(1.0, -2.0, 0.0), 11L -> Seq(0.0, 4.0, -1.5)), "m")
     assert(nearestPath(rows, cents) == aggPath(rows, cents))
   }
+
+  test("null entry, c or m is skipped; the nearest valid entry wins") {
+    // vec_nearest is a registered session function, so degenerate cm
+    // input must degrade, not fail the task. The null-c entry sits at
+    // d² = 0: read instead of skipped, it would win as c = 0.
+    graft.functions.GraftFunctions.register(spark)
+    val entry = "struct<c:bigint,m:array<double>>"
+    val cm = array(
+      lit(null).cast(entry),
+      struct(lit(null).cast("bigint").as("c"),
+        array(lit(0.0), lit(0.0)).as("m")),
+      struct(lit(1L).as("c"), lit(null).cast("array<double>").as("m")),
+      struct(lit(7L).as("c"), array(lit(5.0), lit(5.0)).as("m")),
+      struct(lit(4L).as("c"), array(lit(1.0), lit(1.0)).as("m")))
+    val got = df(Seq(0L -> Seq(0.0, 0.0)))
+      .select(col("vec_id"),
+        graft.functions.VecOps.vec_nearest(col("embedding"), cm).as("c"))
+      .collect().map(r => (r.getLong(0), r.get(1))).toSeq
+    assert(got == Seq((0L, 4L)))
+  }
 }
