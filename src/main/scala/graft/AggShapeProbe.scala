@@ -15,7 +15,6 @@ object AggShapeProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
 
     val n = 2000000L
     val df = spark.range(n).select(

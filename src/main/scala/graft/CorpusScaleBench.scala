@@ -235,9 +235,8 @@ object CorpusScaleBench {
     * planted recall over the full corpus, and recall against the
     * brute-force exact pair set on a 100 k subsample. */
   private def semanticRun(spark: SparkSession, n: Long, probes: Int,
-      margin: Double = Double.PositiveInfinity, subMargin: Double = 0.0,
-      agg: BenchMetrics = new BenchMetrics, withStages: Boolean = false,
-      geometry: String = "iso"): Unit = {
+      margin: Double, subMargin: Double, agg: BenchMetrics, withStages: Boolean,
+      geometry: String): Unit = {
     import spark.implicits._
     val tau = 0.9
     val tag0 = f"$geometry p$probes" +

@@ -4,7 +4,6 @@ import graft.functions.TxFixtures
 import graft.ops.Sinks
 import graft.jobs.Merge
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** BASELINE.md comparison run: merge N synthetic raw txs end-to-end
   * (dedup → anti-join → parse w/ sender recovery → sources attach →

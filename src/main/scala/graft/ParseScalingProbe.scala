@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.{ParseTx, TxFixtures}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Dev probe: isolates where the parse path's wall time goes at local[32] —
   * fixture generation, raw parse throughput (direct mapPartitions, no UDF),

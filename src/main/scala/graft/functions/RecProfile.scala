@@ -42,7 +42,7 @@ object RecProfile {
       // timing we only need valid r/s/recId producing Some(_)
       val msg = e.toByteArray.takeRight(32)
       var best: Option[(BigInteger, Int)] = None
-      var s = k.modInverse(n).multiply(e.add(k.multiply(d))).mod(n) // r=k placeholder
+      val s = k.modInverse(n).multiply(e.add(k.multiply(d))).mod(n) // r=k placeholder
       // brute-force a valid combination by trying recIds over a plausible r
       // (cheap: at most 4 tries each for a few candidate r values)
       var rCand = k

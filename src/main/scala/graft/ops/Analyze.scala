@@ -1,12 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The analyzer aggregate pack (SURVEY.md §3.2; common/analyzer.go:53-213):
-  * A6-A12 computed as a handful of Spark aggregation jobs over one cached
-  * DataFrame, plus a driver-side text renderer in the reference's summary
-  * layout. Only final aggregate rows are collected — never the data.
+  * A6-A12 computed as ONE Spark aggregation over the transactions, plus a
+  * driver-side text renderer in the reference's summary layout. Only the
+  * aggregate's few dozen rows are collected — never the data.
   */
 object Analyze {
 
@@ -19,54 +20,63 @@ object Analyze {
       perType: Seq[TypeStat], perSource: Seq[SourceStat])
 
   /** txs: the merged transactions DataFrame (reference parquet schema).
-    * Applies the F1 filter itself, like NewAnalyzer2 (common/analyzer.go:68-73). */
+    * Applies the F1 filter itself, like NewAnalyzer2 (common/analyzer.go:68-73).
+    *
+    * One `groupBy(txType, source)` over `posexplode_outer(sources)`: each
+    * tx yields one row per source (one row with a null `pos` when its
+    * sources are null or empty). The tx-level stats (A6-A8, A12) read only
+    * a tx's first row, the per-source stats (A9-A11) only rows with a
+    * position, so the groups number at most types × sources. The driver
+    * folds them into the summary, in Spark's ascending order with nulls
+    * first. Two Spark jobs (the shuffle map stage and the result), no
+    * cache. */
   def summarize(txsIn: DataFrame): Summary = {
     // metadata-only archives (no rawTx) still analyze; byte stats become 0
     val rawBytes =
       if (txsIn.columns.contains("rawTx")) length(col("rawTx")).cast("long")
       else lit(0L)
-    val txs = txsIn
+    val included = col("includedAtBlockHeight") =!= 0
+    val exclusive = size(col("sources")) === 1
+    def flag(c: Column) = when(c, 1L).otherwise(0L)
+    val first = col("pos").isNull || col("pos") === 0
+    val listed = col("pos").isNotNull
+    val groups = txsIn
       .filter(!(col("includedAtBlockHeight") > 0 && col("inclusionDelayMs") <= -12000))
-      .select(col("hash"), col("txType"), rawBytes.as("rawBytes"),
-        col("sources"), col("includedAtBlockHeight"), col("timestamp"))
-      .withColumn("included", col("includedAtBlockHeight") =!= 0)
-      .cache()
-
-    // A6, A7, A12 in one pass
-    val g = txs.agg(
-      count(lit(1)).as("n"),
-      sum(when(col("included"), 1L).otherwise(0L)).as("inc"),
-      min(col("timestamp").cast("long")).as("first"),
-      max(col("timestamp").cast("long")).as("last")).head()
-    val n = g.getLong(0)
-    val inc = if (g.isNullAt(1)) 0L else g.getLong(1)
-
-    // A8: per type count + byte volume (rawTx is binary → length = bytes)
-    val perType = txs.groupBy("txType")
-      .agg(count(lit(1)).as("n"), sum(col("rawBytes")).as("bytes"))
-      .orderBy("txType").collect().toSeq
-      .map(r => TypeStat(r.getLong(0), r.getLong(1), r.getLong(2)))
-
-    // A9-A11: per source: totals, landed split, exclusive orderflow
-    val perSource = txs
-      .select(col("included"), size(col("sources")).as("nSrc"),
-        explode(col("sources")).as("source"))
-      .groupBy("source")
+      .select(col("txType"), rawBytes.as("rawBytes"), col("timestamp").cast("long").as("ts"),
+        flag(included).as("inc"), flag(!included).as("notInc"),
+        flag(exclusive).as("excl"), flag(exclusive && included).as("exclInc"),
+        posexplode_outer(col("sources")).as(Seq("pos", "source")))
+      .groupBy("txType", "source")
       .agg(
-        count(lit(1)).as("n"),
-        sum(when(col("included"), 1L).otherwise(0L)).as("onChain"),
-        sum(when(!col("included"), 1L).otherwise(0L)).as("notOnChain"),
-        sum(when(col("nSrc") === 1, 1L).otherwise(0L)).as("exclusive"),
-        sum(when(col("nSrc") === 1 && col("included"), 1L).otherwise(0L)).as("exclusiveIncluded"))
-      .orderBy("source").collect().toSeq
-      .map(r => SourceStat(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5)))
+        // A6, A7, A8, A12: each tx once, on its first row
+        count(when(first, 1)), sum(when(first, col("inc"))),
+        sum(when(first, col("rawBytes"))),
+        min(when(first, col("ts"))), max(when(first, col("ts"))),
+        // A9-A11: per source: totals, landed split, exclusive orderflow
+        count(when(listed, 1)), sum(when(listed, col("inc"))),
+        sum(when(listed, col("notInc"))), sum(when(listed, col("excl"))),
+        sum(when(listed, col("exclInc"))))
+      .collect().toSeq
 
-    txs.unpersist()
-    Summary(n, inc, n - inc,
-      if (g.isNullAt(2)) 0L else g.getLong(2),
-      if (g.isNullAt(3)) 0L else g.getLong(3),
-      perType, perSource)
+    // a group row: txType, source, then the ten aggregates above in order
+    def long(r: Row, i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+    def sums(rs: Seq[Row], cols: Seq[Int]) = cols.map(i => rs.map(long(_, i)).sum)
+    def bound(i: Int)(pick: (Long, Long) => Long) =
+      groups.filterNot(_.isNullAt(i)).map(_.getLong(i)).reduceOption(pick).getOrElse(0L)
+    val Seq(n, inc) = sums(groups, Seq(2, 3))
+
+    val perType = groups.filter(long(_, 2) > 0).groupBy(_.getLong(0)).toSeq.sortBy(_._1)
+      .map { case (t, rs) => val Seq(k, bytes) = sums(rs, Seq(2, 4)); TypeStat(t, k, bytes) }
+
+    val byUtf8: Ordering[String] = Ordering.by(UTF8String.fromString)
+    val perSource = groups.filter(long(_, 7) > 0).groupBy(r => Option(r.getString(1))).toSeq
+      .sortBy(_._1)(Ordering.Option(byUtf8))
+      .map { case (src, rs) =>
+        val Seq(k, on, off, excl, exclInc) = sums(rs, 7 to 11)
+        SourceStat(src.orNull, k, on, off, excl, exclInc)
+      }
+
+    Summary(n, inc, n - inc, bound(5)(math.min), bound(6)(math.max), perType, perSource)
   }
 
   /** Per-source stats as a DataFrame (for queries / sinks) — same

@@ -1,6 +1,13 @@
 package graft.ops
 
+import scala.util.Try
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -143,14 +150,58 @@ object Sources {
   /** S4: typed parquet archive scan with optional row cap
     * (cmd/analyze/main.go:81-107 MAX semantics). The archive's
     * TIMESTAMP_MILLIS columns come back as epoch-ms longs, the shape all
-    * downstream operators use. */
+    * downstream operators use.
+    *
+    * The data schema comes from [[footerSchema]], read on the driver, and
+    * is handed to `spark.read.schema(..)`: `spark.read.parquet(path)` alone
+    * infers it with a Spark job on every call, even for one footer.
+    * Partition columns (`day=…`) are still inferred from the paths. Where
+    * no footer schema is found, Spark infers as usual, so a path with no
+    * data file fails with Spark's own error. Globs work as in
+    * `spark.read.parquet`. */
   def readArchive(spark: SparkSession, path: String, max: Option[Int] = None): DataFrame = {
-    val df0 = spark.read.parquet(path)
+    val df0 = footerSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
     val df = df0.schema.fields.foldLeft(df0) { (d, f) =>
       if (f.dataType == TimestampType) d.withColumn(f.name, unix_millis(col(f.name)))
       else d
     }
     max.fold(df)(df.limit)
+  }
+
+  /** The data schema Spark's parquet inference gives `path` without schema
+    * merging, taken on the driver. Like Spark, it lists the leaf files
+    * under each glob match, skipping the names Spark treats as hidden
+    * (`_`/`.` prefixes except `_metadata`/`_common_metadata` and `_`-names
+    * holding `=`, and `._COPYING_` files), and reads the footer of the
+    * first file in path order; that is a summary file where the writer
+    * left one, as Spark prefers, else a data file. Only names below a
+    * match are tested, so an archive under a dot-prefixed directory still
+    * lists. The schema is Spark's row metadata JSON when the writer left
+    * one, else the converted parquet schema. None when merging is on,
+    * nothing is listed or the footer cannot be read. */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) return None
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val pattern = new Path(path)
+    val fs = pattern.getFileSystem(hadoopConf)
+    def hidden(name: String) =
+      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")) &&
+        !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+    def leaves(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath.getName))
+        .flatMap(st => if (st.isDirectory) leaves(st.getPath) else Seq(st))
+    Try {
+      Option(fs.globStatus(fs.makeQualified(pattern))).toSeq.flatten
+        .flatMap(st => leaves(st.getPath)).minByOption(_.getPath.toString)
+        .map { st =>
+          val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, hadoopConf),
+            ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
+            new ParquetToSparkSchemaConverter(conf))
+        }
+    }.toOption.flatten
   }
 
   /** Fixed schema for JSONL training-corpus documents — same shape as the

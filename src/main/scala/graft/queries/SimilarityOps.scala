@@ -256,7 +256,6 @@ object SimilarityOps {
 
   /** PQ building blocks shared by q_embed_pq and q_sim_ann_pq. */
   private object Pq {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.DataFrame
 
     /** Trained-once PQ index per (session, dataset): (codebook c1, code
@@ -541,7 +540,7 @@ object SimilarityOps {
     * (plan-asserted: ScalePlanSpec "map-side WindowGroupLimit"). */
   private def assignVecProbes(rows: org.apache.spark.sql.DataFrame,
       cents: org.apache.spark.sql.DataFrame, probes: Int,
-      margin: Double = Double.PositiveInfinity): org.apache.spark.sql.DataFrame =
+      margin: Double): org.apache.spark.sql.DataFrame =
     if (probes <= 1) assignVec(rows, cents)
     else {
       import graft.functions.VecOps.vec_dot

@@ -216,7 +216,7 @@ object H2Framing {
     * PADDED pad-length byte + trailing padding and the 5-byte PRIORITY
     * prefix (RFC 9113 §6.2) when their flags are set. */
   def headersFragment(f: Frame): Array[Byte] = {
-    var p = f.payload
+    val p = f.payload
     var start = 0
     var end = p.length
     if ((f.flags & FlagPadded) != 0) {

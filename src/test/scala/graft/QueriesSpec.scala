@@ -60,11 +60,13 @@ class QueriesSpec extends AnyFunSuite {
 
   test("merge pipeline: sources ordered by first receipt, no blacklisted keys") {
     val df = SparkEntry.queries("q_merge_pipeline")(spark, sf).cache()
-    import org.apache.spark.sql.functions._
-    val bad = Tables.events(spark, sf).filter(col("event_type") === "error")
-      .groupBy("user_id").count().filter(col("count") > 17)
-      .select("user_id")
-    assert(df.join(bad, Seq("user_id")).count() == 0)
-    assert(df.filter(size(split(col("sources"), " ")) =!= col("n_sources")).count() == 0)
+    try {
+      import org.apache.spark.sql.functions._
+      val bad = Tables.events(spark, sf).filter(col("event_type") === "error")
+        .groupBy("user_id").count().filter(col("count") > 17)
+        .select("user_id")
+      assert(df.join(bad, Seq("user_id")).count() == 0)
+      assert(df.filter(size(split(col("sources"), " ")) =!= col("n_sources")).count() == 0)
+    } finally df.unpersist()
   }
 }

@@ -4,7 +4,14 @@ import graft.functions.TxFixtures
 import graft.jobs.Merge
 import graft.ops.{Sinks, Sources}
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.JobCounter
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** File-to-file pipeline: collector CSV layouts in → merge → archive out,
@@ -102,5 +109,88 @@ class SourcesSpec extends AnyFunSuite {
     assert(gz.count() == n)
     // field-exact parity with the parquet rows
     assert(gz.exceptAll(docs).count() == 0 && docs.exceptAll(gz).count() == 0)
+  }
+
+  /** readArchive as it was before it read the footer itself: Spark infers. */
+  private def inferred(path: String): DataFrame = {
+    val df0 = spark.read.parquet(path)
+    df0.schema.fields.foldLeft(df0) { (d, f) =>
+      if (f.dataType == TimestampType) d.withColumn(f.name, unix_millis(col(f.name)))
+      else d
+    }
+  }
+
+  private def txRows(n: Int): DataFrame = spark.range(n).select(
+    (lit(1700000000000L) + col("id") * 3600000L * 7).as("timestamp"),
+    format_string("0x%064x", col("id")).as("hash"), (col("id") % 3).as("txType"),
+    array(lit("local"), when(col("id") % 2 === 0, "alchemy")).as("sources"),
+    (col("id") * 10).as("includedAtBlockHeight"),
+    (lit(1700000000000L) + col("id") * 3600000L * 7 + 5000).as("includedBlockTimestamp"),
+    lit(5000L).as("inclusionDelayMs"), unhex(lit("02f8")).as("rawTx"))
+
+  /** An archive as the reference's Go writer leaves it: parquet-hadoop
+    * example groups, INT64 TIMESTAMP_MILLIS columns, no Spark row metadata. */
+  private def writeForeignArchive(dir: String): Unit = {
+    val schema = MessageTypeParser.parseMessageType(
+      """message tx {
+        |  required int64 timestamp (TIMESTAMP(MILLIS,true));
+        |  required binary hash (STRING);
+        |  optional int32 txType (INTEGER(8,false));
+        |  optional group sources (LIST) { repeated group list { optional binary element (STRING); } }
+        |  optional int64 includedBlockTimestamp (TIMESTAMP(MILLIS,true));
+        |  optional binary rawTx;
+        |}""".stripMargin)
+    val w = ExampleParquetWriter.builder(new Path(s"$dir/part-0.parquet")).withType(schema).build()
+    val groups = new SimpleGroupFactory(schema)
+    try (0 until 5).foreach { i =>
+      val g = groups.newGroup().append("timestamp", 1700000000000L + i)
+        .append("hash", f"0x$i%064x").append("txType", i % 3)
+      g.addGroup("sources").addGroup("list").append("element", "local")
+      g.append("includedBlockTimestamp", 1700000012000L + i)
+      w.write(g)
+    } finally w.close()
+  }
+
+  test("readArchive starts no Spark job and keeps Spark's inferred schema") {
+    val dir = Files.createTempDirectory("graft-archive-schema").toString
+    val txs = txRows(40)
+    Sinks.writeDailyArchive(txs, s"$dir/daily",
+      date_format(timestamp_millis(col("timestamp")), "yyyy-MM-dd"))
+    Sinks.writeParquetArchive(txs, s"$dir/flat")
+    Sinks.writeParquetArchive(txs.drop("rawTx"), s"$dir/meta")
+    Sinks.writeParquetArchive(txs, s"$dir/.staging/flat")
+    Files.createDirectories(Paths.get(s"$dir/foreign"))
+    writeForeignArchive(s"$dir/foreign")
+    val events = graft.queries.Core.dailyEventsArchive(spark, "/root/testdata/sf0.001")
+    // Spark's committer leaves _SUCCESS and .crc files beside the data
+    val flatNames = new java.io.File(s"$dir/flat").list().toSeq
+    assert(flatNames.contains("_SUCCESS") && flatNames.exists(_.endsWith(".crc")))
+
+    val archives = Seq(s"$dir/daily", s"$dir/flat", s"$dir/meta", s"$dir/.staging/flat",
+      s"$dir/foreign", events, s"$dir/flat/part-*")
+    archives.foreach { path =>
+      val (df, jobs) = JobCounter(spark.sparkContext) {
+        val df = Sources.readArchive(spark, path)
+        df.schema
+        df
+      }
+      assert(jobs == 0, s"$path: $jobs jobs")
+      val want = inferred(path)
+      assert(df.schema == want.schema, path)
+      assert(df.exceptAll(want).isEmpty && want.exceptAll(df).isEmpty, path)
+    }
+    assert(Sources.readArchive(spark, s"$dir/daily").schema("day").dataType == DateType)
+    assert(Sources.readArchive(spark, s"$dir/foreign").schema("timestamp").dataType == LongType)
+  }
+
+  test("readArchive without a data file fails as Spark's inference does") {
+    val dir = Files.createTempDirectory("graft-archive-empty").toString
+    Files.createDirectories(Paths.get(s"$dir/empty"))
+    Files.writeString(Paths.get(s"$dir/empty/_SUCCESS"), "")
+    Seq(s"$dir/missing", s"$dir/empty", s"$dir/none-*").foreach { path =>
+      val want = intercept[AnalysisException](spark.read.parquet(path))
+      val got = intercept[AnalysisException](Sources.readArchive(spark, path))
+      assert(got.getCondition == want.getCondition, path)
+    }
   }
 }
