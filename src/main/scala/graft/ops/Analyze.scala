@@ -49,34 +49,37 @@ object Analyze {
       .groupBy("txType", "source")
       .agg(
         // A6, A7, A8, A12: each tx once, on its first row
-        count(when(first, 1)), sum(when(first, col("inc"))),
-        sum(when(first, col("rawBytes"))),
-        min(when(first, col("ts"))), max(when(first, col("ts"))),
+        count(when(first, 1)).as("n"), sum(when(first, col("inc"))).as("nInc"),
+        sum(when(first, col("rawBytes"))).as("bytes"),
+        min(when(first, col("ts"))).as("tsFirst"), max(when(first, col("ts"))).as("tsLast"),
         // A9-A11: per source: totals, landed split, exclusive orderflow
-        count(when(listed, 1)), sum(when(listed, col("inc"))),
-        sum(when(listed, col("notInc"))), sum(when(listed, col("excl"))),
-        sum(when(listed, col("exclInc"))))
+        count(when(listed, 1)).as("srcN"), sum(when(listed, col("inc"))).as("srcInc"),
+        sum(when(listed, col("notInc"))).as("srcNotInc"),
+        sum(when(listed, col("excl"))).as("srcExcl"),
+        sum(when(listed, col("exclInc"))).as("srcExclInc"))
       .collect().toSeq
 
-    // a group row: txType, source, then the ten aggregates above in order
-    def long(r: Row, i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
-    def sums(rs: Seq[Row], cols: Seq[Int]) = cols.map(i => rs.map(long(_, i)).sum)
-    def bound(i: Int)(pick: (Long, Long) => Long) =
-      groups.filterNot(_.isNullAt(i)).map(_.getLong(i)).reduceOption(pick).getOrElse(0L)
-    val Seq(n, inc) = sums(groups, Seq(2, 3))
+    def opt(r: Row, agg: String) = Option(r.getAs[java.lang.Long](agg)).map(_.longValue)
+    def long(r: Row, agg: String) = opt(r, agg).getOrElse(0L)
+    def total(rs: Seq[Row], agg: String) = rs.map(long(_, agg)).sum
+    def bound(agg: String)(pick: (Long, Long) => Long) =
+      groups.flatMap(opt(_, agg)).reduceOption(pick).getOrElse(0L)
+    val n = total(groups, "n")
+    val inc = total(groups, "nInc")
 
-    val perType = groups.filter(long(_, 2) > 0).groupBy(_.getLong(0)).toSeq.sortBy(_._1)
-      .map { case (t, rs) => val Seq(k, bytes) = sums(rs, Seq(2, 4)); TypeStat(t, k, bytes) }
+    val perType = groups.filter(long(_, "n") > 0).groupBy(r => r.getLong(r.fieldIndex("txType")))
+      .toSeq.sortBy(_._1)
+      .map { case (t, rs) => TypeStat(t, total(rs, "n"), total(rs, "bytes")) }
 
     val byUtf8: Ordering[String] = Ordering.by(UTF8String.fromString)
-    val perSource = groups.filter(long(_, 7) > 0).groupBy(r => Option(r.getString(1))).toSeq
-      .sortBy(_._1)(Ordering.Option(byUtf8))
+    val perSource = groups.filter(long(_, "srcN") > 0).groupBy(r => Option(r.getAs[String]("source")))
+      .toSeq.sortBy(_._1)(Ordering.Option(byUtf8))
       .map { case (src, rs) =>
-        val Seq(k, on, off, excl, exclInc) = sums(rs, 7 to 11)
-        SourceStat(src.orNull, k, on, off, excl, exclInc)
+        SourceStat(src.orNull, total(rs, "srcN"), total(rs, "srcInc"), total(rs, "srcNotInc"),
+          total(rs, "srcExcl"), total(rs, "srcExclInc"))
       }
 
-    Summary(n, inc, n - inc, bound(5)(math.min), bound(6)(math.max), perType, perSource)
+    Summary(n, inc, n - inc, bound("tsFirst")(math.min), bound("tsLast")(math.max), perType, perSource)
   }
 
   /** Per-source stats as a DataFrame (for queries / sinks) — same

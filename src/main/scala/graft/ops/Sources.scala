@@ -155,7 +155,9 @@ object Sources {
     * The data schema comes from [[footerSchema]], read on the driver, and
     * is handed to `spark.read.schema(..)`: `spark.read.parquet(path)` alone
     * infers it with a Spark job on every call, even for one footer.
-    * Partition columns (`day=…`) are still inferred from the paths. Where
+    * Partition columns (`day=…`) are still inferred from the paths; above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
+    * directories Spark lists them with a job of its own either way. Where
     * no footer schema is found, Spark infers as usual, so a path with no
     * data file fails with Spark's own error. Globs work as in
     * `spark.read.parquet`. */
@@ -169,16 +171,23 @@ object Sources {
   }
 
   /** The data schema Spark's parquet inference gives `path` without schema
-    * merging, taken on the driver. Like Spark, it lists the leaf files
-    * under each glob match, skipping the names Spark treats as hidden
-    * (`_`/`.` prefixes except `_metadata`/`_common_metadata` and `_`-names
-    * holding `=`, and `._COPYING_` files), and reads the footer of the
-    * first file in path order; that is a summary file where the writer
-    * left one, as Spark prefers, else a data file. Only names below a
-    * match are tested, so an archive under a dot-prefixed directory still
-    * lists. The schema is Spark's row metadata JSON when the writer left
-    * one, else the converted parquet schema. None when merging is on,
-    * nothing is listed or the footer cannot be read. */
+    * merging, taken on the driver. Spark reads the footer of the first file
+    * in path order among the files directly in each glob match and, where
+    * the tree is partitioned, those below its partition (`k=v`)
+    * directories; it skips the names it treats as hidden (`_`/`.` prefixes
+    * except `_metadata`/`_common_metadata` and `_`-names holding `=`, and
+    * `._COPYING_` files). This walks the same tree depth first, siblings
+    * sorted so that files come in path order, into partition directories
+    * and anything below them, and stops at the first file, so it lists
+    * about as many directories as the tree is deep. A tree whose files all
+    * sit in non-partition subdirectories gives Spark no file, and none
+    * here. Spark would pick a summary file
+    * (`_common_metadata`, `_metadata`) over an earlier data file; parquet
+    * writers leave them only when asked (`parquet.summary.metadata.level`).
+    * Only names below a match are tested, so an archive under a
+    * dot-prefixed directory still lists. The schema is Spark's row metadata
+    * JSON when the writer left one, else the converted parquet schema. None
+    * when merging is on, nothing is listed or the footer cannot be read. */
   private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
     val conf = spark.sessionState.conf
     if (conf.isParquetSchemaMergingEnabled) return None
@@ -189,12 +198,19 @@ object Sources {
       ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
         name.endsWith("._COPYING_")) &&
         !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
-    def leaves(p: Path): Seq[FileStatus] =
-      fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath.getName))
-        .flatMap(st => if (st.isDirectory) leaves(st.getPath) else Seq(st))
+    // a directory sorts as its leaves' common prefix, its path plus "/"
+    def key(st: FileStatus) = st.getPath.toString + (if (st.isDirectory) "/" else "")
+    def leaves(p: Path, partitioned: Boolean): Iterator[FileStatus] =
+      fs.listStatus(p).filterNot(st => hidden(st.getPath.getName)).sortBy(key).iterator
+        .flatMap { st =>
+          val inPartition = partitioned || st.getPath.getName.contains("=")
+          if (!st.isDirectory) Iterator(st)
+          else if (inPartition) leaves(st.getPath, inPartition)
+          else Iterator.empty
+        }
     Try {
-      Option(fs.globStatus(fs.makeQualified(pattern))).toSeq.flatten
-        .flatMap(st => leaves(st.getPath)).minByOption(_.getPath.toString)
+      Option(fs.globStatus(fs.makeQualified(pattern))).toSeq.flatten.sortBy(key).iterator
+        .flatMap(st => leaves(st.getPath, partitioned = false)).nextOption()
         .map { st =>
           val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, hadoopConf),
             ParquetMetadataConverter.SKIP_ROW_GROUPS)

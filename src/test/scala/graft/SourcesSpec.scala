@@ -161,13 +161,16 @@ class SourcesSpec extends AnyFunSuite {
     Sinks.writeParquetArchive(txs, s"$dir/.staging/flat")
     Files.createDirectories(Paths.get(s"$dir/foreign"))
     writeForeignArchive(s"$dir/foreign")
+    // Spark reads the first file in path order: k=b-c/… before k=b/…, as '-' sorts before '/'
+    txs.select("hash").write.parquet(s"$dir/order/k=b")
+    txs.select("timestamp").write.parquet(s"$dir/order/k=b-c")
     val events = graft.queries.Core.dailyEventsArchive(spark, "/root/testdata/sf0.001")
     // Spark's committer leaves _SUCCESS and .crc files beside the data
     val flatNames = new java.io.File(s"$dir/flat").list().toSeq
     assert(flatNames.contains("_SUCCESS") && flatNames.exists(_.endsWith(".crc")))
 
     val archives = Seq(s"$dir/daily", s"$dir/flat", s"$dir/meta", s"$dir/.staging/flat",
-      s"$dir/foreign", events, s"$dir/flat/part-*")
+      s"$dir/foreign", s"$dir/order", events, s"$dir/flat/part-*")
     archives.foreach { path =>
       val (df, jobs) = JobCounter(spark.sparkContext) {
         val df = Sources.readArchive(spark, path)
@@ -181,13 +184,16 @@ class SourcesSpec extends AnyFunSuite {
     }
     assert(Sources.readArchive(spark, s"$dir/daily").schema("day").dataType == DateType)
     assert(Sources.readArchive(spark, s"$dir/foreign").schema("timestamp").dataType == LongType)
+    assert(Sources.readArchive(spark, s"$dir/order").columns.toSeq == Seq("timestamp", "k"))
   }
 
   test("readArchive without a data file fails as Spark's inference does") {
     val dir = Files.createTempDirectory("graft-archive-empty").toString
     Files.createDirectories(Paths.get(s"$dir/empty"))
     Files.writeString(Paths.get(s"$dir/empty/_SUCCESS"), "")
-    Seq(s"$dir/missing", s"$dir/empty", s"$dir/none-*").foreach { path =>
+    // files only in a subdirectory that is no partition (k=v) directory
+    spark.range(3).write.parquet(s"$dir/nested/sub")
+    Seq(s"$dir/missing", s"$dir/empty", s"$dir/none-*", s"$dir/nested").foreach { path =>
       val want = intercept[AnalysisException](spark.read.parquet(path))
       val got = intercept[AnalysisException](Sources.readArchive(spark, path))
       assert(got.getCondition == want.getCondition, path)

@@ -1,18 +1,15 @@
 #!/usr/bin/env python3
 """Alternating parent/change pairs of one benchmark workload.
 
-    python3 tools/bench_pairs.py --workload archive_query --base HEAD~1 [--head HEAD]
+    python3 tools/bench_pairs.py --workload archive_query --base HEAD~1
         [--pairs 10] [--first-seed 1] [--workdir DIR]
 
-Exports each rev's committed files with `git archive` into --workdir (a new
-temporary directory under /tmp by default); without --head the change side
-is this checkout as it stands. Pair i runs dumpsterbench/run.py with seed
-first-seed+i on both sides, untraced, for BENCHMARK.json's run_seconds; the
-parent runs first in even pairs and second in odd ones. Prints every run's
-metrics, then per end-to-end metric each side's median and quartiles, the
-change's wins (ties count for neither) and whether a gain may be claimed:
-wins in at least nine tenths of the pairs, and a median gap wider than the
-parent's interquartile range.
+Exports the parent commit with `git archive` into <--workdir>/<its SHA> (a new
+/tmp dir by default); the change side is this checkout. Pair i runs
+dumpsterbench/run.py untraced with seed first-seed+i on both sides, parent
+first in even pairs. Prints every run, then per end-to-end metric each side's
+median and quartiles, the change's wins (ties count for neither) and whether a
+gain may be claimed: nine tenths wins and a median gap over the parent's IQR.
 """
 import argparse
 import json
@@ -24,12 +21,13 @@ import tempfile
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def export(rev, workdir):
-    dest = os.path.join(workdir, rev.replace("/", "_"))
-    if not os.path.isdir(dest):
-        os.makedirs(dest)
-        tar = subprocess.run(["git", "-C", ROOT, "archive", rev], check=True, capture_output=True).stdout
-        subprocess.run(["tar", "-x", "-C", dest], input=tar, check=True)
+def export(sha, workdir):
+    dest = os.path.join(workdir, sha)
+    if not os.path.isdir(dest):  # extracted beside it first, so a cut export is never reused
+        tar = subprocess.run(["git", "-C", ROOT, "archive", sha], check=True, capture_output=True).stdout
+        tmp = tempfile.mkdtemp(dir=workdir)
+        subprocess.run(["tar", "-x", "-C", tmp], input=tar, check=True)
+        os.rename(tmp, dest)
     return dest
 
 
@@ -50,13 +48,15 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True, choices=[w["name"] for w in bench["workloads"]])
     ap.add_argument("--base", required=True)
-    ap.add_argument("--head")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--workdir")
     a = ap.parse_args()
     workdir = a.workdir or tempfile.mkdtemp(prefix="bench_pairs_", dir="/tmp")
-    trees = {"parent": export(a.base, workdir), "change": export(a.head, workdir) if a.head else ROOT}
+    os.makedirs(workdir, exist_ok=True)
+    sha = subprocess.run(["git", "-C", ROOT, "rev-parse", "--verify", a.base + "^{commit}"],
+                         check=True, capture_output=True, text=True).stdout.strip()
+    trees = {"parent": export(sha, workdir), "change": ROOT}
     runs = {"parent": [], "change": []}
     for i in range(a.pairs):
         seed = a.first_seed + i
@@ -64,7 +64,7 @@ def main():
             runs[side].append(run(trees[side], bench, a.workload, seed))
             print(f"pair {i} seed {seed} {side}: " +
                   " ".join(f"{k}={v:.4g}" for k, v in runs[side][-1].items()), flush=True)
-    print(f"\n{a.workload}: {a.pairs} pairs, parent {a.base}, change {a.head or 'checkout'}")
+    print(f"\n{a.workload}: {a.pairs} pairs, parent {sha}, change checkout")
     for m in bench["end_to_end"]:
         k, sign = m["name"], (1 if m["better"] == "higher" else -1)
         p, c = [r[k] for r in runs["parent"]], [r[k] for r in runs["change"]]
