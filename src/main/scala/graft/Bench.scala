@@ -377,7 +377,7 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       // (r21 note: lowering AQE's coalescePartitions.minPartitionSize to
       // 64k was measured BOTH ways here — it doubles the CPU-bound parse
-      // stage's parallelism (AqeParseProbe: 16→32 parts, 1.6→1.2 s warm)
+      // stage's parallelism (r21 probe: 16→32 parts, 1.6→1.2 s warm)
       // but consistently cost more across the ~15 small shuffle-heavy
       // text/dedup queries via extra tiny tasks, net −10 % total. Left at
       // the Spark default; revisit on a box with real 32-core headroom.)
@@ -394,7 +394,7 @@ object Bench {
     // the REAL scale: sf0.01- and floor-shaped warm-ups both left AQE
     // picking different physical plans than the sfDir merge, and ~9 s of
     // one-time compile cost was still billed to q_mempool_merge
-    // (merge_sec 13.7 s vs ~5 s steady in MergeStageProbe, r10).
+    // (merge_sec 13.7 s vs ~5 s steady in a stage-timing probe, r10).
     // warmMergeShape runs Merge.run over rows [n, 2n) — identical counts
     // and cached-input plan nodes, none of the real data or caches.
     try {

@@ -39,28 +39,30 @@ object EthTx {
   /** Decode raw tx bytes → Parsed. Throws TxDecodeException on malformed
     * input; signature-recovery failure is NOT an error (from = zero address,
     * fromValid = false), matching the reference which ignores Sender errors
-    * (common/txsfile.go:166-169). */
-  def decode(raw: Array[Byte]): Parsed = {
+    * (common/txsfile.go:166-169). With `recover = false` the sender
+    * recovery is skipped (from = zero address, fromValid = false); since
+    * recovery never throws, the same inputs throw either way. */
+  def decode(raw: Array[Byte], recover: Boolean = true): Parsed = {
     if (raw.isEmpty) throw TxDecodeException("empty input")
     val first = raw(0) & 0xff
-    if (first <= 0x7f) decodeTyped(raw)
+    if (first <= 0x7f) decodeTyped(raw, recover)
     else {
       Rlp.decode(raw) match {
-        case l: Rlp.Lst => decodeLegacy(l)
-        case Rlp.Bytes(inner) => decode(inner) // double-wrapped envelope
+        case l: Rlp.Lst => decodeLegacy(l, recover)
+        case Rlp.Bytes(inner) => decode(inner, recover) // double-wrapped envelope
       }
     }
   }
 
-  def decodeHex(hexStr: String): Parsed = {
+  def decodeHex(hexStr: String, recover: Boolean = true): Parsed = {
     val h = if (hexStr.startsWith("0x")) hexStr.substring(2) else hexStr
     if (h.length % 2 != 0) throw TxDecodeException("odd-length hex")
-    decode(unhex(h))
+    decode(unhex(h), recover)
   }
 
   // ── typed envelopes ──────────────────────────────────────────────────
 
-  private def decodeTyped(raw: Array[Byte]): Parsed = {
+  private def decodeTyped(raw: Array[Byte], recover: Boolean): Parsed = {
     val txType = raw(0) & 0xff
     if (txType < 1 || txType > 4) throw TxDecodeException(s"unsupported tx type $txType")
     val body = Rlp.decode(raw.slice(1, raw.length)) match {
@@ -102,10 +104,11 @@ object EthTx {
     val canonical = if (hasSidecar) raw else minimal
     val hash = Keccak256.hash(Array(txType.toByte) ++ Rlp.encode(Rlp.Lst(payload)))
 
-    val sigHash = Keccak256.hash(
-      Array(txType.toByte) ++ Rlp.encode(Rlp.Lst(payload.take(nUnsigned))))
-    val from = Secp256k1.recoverAddress(
-      sigHash, toJBig(r), toJBig(s), yParity)
+    val from =
+      if (!recover) None
+      else Secp256k1.recoverAddress(Keccak256.hash(
+          Array(txType.toByte) ++ Rlp.encode(Rlp.Lst(payload.take(nUnsigned)))),
+        toJBig(r), toJBig(s), yParity)
 
     build(hash, chainId, txType.toLong, from, toBytes, value, nonce, gas,
       gasPrice = gasFeeCap, gasTipCap, gasFeeCap, data, canonical, hasSidecar)
@@ -113,7 +116,7 @@ object EthTx {
 
   // ── legacy ───────────────────────────────────────────────────────────
 
-  private def decodeLegacy(l: Rlp.Lst): Parsed = {
+  private def decodeLegacy(l: Rlp.Lst, recover: Boolean): Parsed = {
     if (l.items.length != 9)
       throw TxDecodeException(s"legacy: ${l.items.length} fields, want 9")
     val Vector(nonceI, gasPriceI, gasI, toI, valueI, dataI, vI, rI, sI) = l.items
@@ -128,15 +131,15 @@ object EthTx {
       else -1
 
     // EIP-155 signing payload: 6 fields (+ chainId, 0, 0 when protected)
-    val unsignedItems =
+    def unsignedItems =
       if (protectedTx)
         Vector(nonceI, gasPriceI, gasI, toI, valueI, dataI,
           Rlp.fromBigInt(chainId), Rlp.Bytes(Array.emptyByteArray), Rlp.Bytes(Array.emptyByteArray))
       else Vector(nonceI, gasPriceI, gasI, toI, valueI, dataI)
-    val sigHash = Keccak256.hash(Rlp.encode(Rlp.Lst(unsignedItems)))
     val from =
-      if (recId < 0) None
-      else Secp256k1.recoverAddress(sigHash, toJBig(r), toJBig(s), recId)
+      if (!recover || recId < 0) None
+      else Secp256k1.recoverAddress(Keccak256.hash(Rlp.encode(Rlp.Lst(unsignedItems))),
+        toJBig(r), toJBig(s), recId)
 
     val canonical = Rlp.encode(l)
     val hash = Keccak256.hash(canonical)

@@ -66,6 +66,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[ParseRawTxExpr].getName, "parse_raw_tx"),
       (exprs: Seq[Expression]) => ParseRawTxExpr(exprs.head)))
     e.injectFunction((
+      new FunctionIdentifier("raw_tx_hash"),
+      new ExpressionInfo(classOf[RawTxHashExpr].getName, "raw_tx_hash"),
+      (exprs: Seq[Expression]) => RawTxHashExpr(exprs.head)))
+    e.injectFunction((
       new FunctionIdentifier("word_ngrams"),
       new ExpressionInfo(classOf[WordNgramsExpr].getName, "word_ngrams"),
       (exprs: Seq[Expression]) => WordNgramsExpr(exprs.head, exprs(1))))
@@ -132,6 +136,8 @@ object GraftFunctions {
       "lsh_bucket", exprs => LshBucketExpr(exprs.head, exprs(1)), "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "parse_raw_tx", exprs => ParseRawTxExpr(exprs.head), "scala_udf")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "raw_tx_hash", exprs => RawTxHashExpr(exprs.head), "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "word_ngrams", exprs => WordNgramsExpr(exprs.head, exprs(1)), "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

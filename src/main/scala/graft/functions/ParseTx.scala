@@ -77,6 +77,13 @@ object ParseTx {
       case None => null
     }
 
+  /** Codegen entry point of [[RawTxHashExpr]]: the tx hash alone, by the
+    * same RLP decode and keccak as [[parseHex]] without sender recovery,
+    * so it is null on exactly the inputs [[parseHex]] rejects. */
+  def evalHash(raw: UTF8String): UTF8String =
+    try UTF8String.fromString(EthTx.decodeHex(raw.toString, recover = false).hash)
+    catch { case _: Exception => null }
+
   /** parse_raw_tx(rawHex STRING) → STRUCT(...); null on undecodable input.
     * Resolves through the function registry (registration is idempotent
     * and plan construction always runs on the driver with an active
@@ -86,6 +93,20 @@ object ParseTx {
     call_function("parse_raw_tx", c)
   }
 
+  /** raw_tx_hash(rawHex STRING) → STRING: the tx hash without sender
+    * recovery, as the codegen [[RawTxHashExpr]]; null on undecodable input. */
+  def raw_tx_hash(c: Column): Column = {
+    org.apache.spark.sql.SparkSession.getActiveSession.foreach(GraftFunctions.register)
+    call_function("raw_tx_hash", c)
+  }
+
+  /** `kernel` as a generated column, evaluated once per row, keeping only
+    * the rows whose value passes `keep`. A plain `withColumn` + `filter`
+    * re-runs the kernel in the pushed-down Filter: Catalyst copies the
+    * alias into the predicate, and a generator is not inlined that way. */
+  def evalOnce(kernel: Column, keep: Column => Column = _.isNotNull): Column =
+    explode(filter(array(kernel), keep))
+
   /** The merge-job projection: (timestamp_ms, hash, raw hex) rows →
     * TxSummaryEntry-shaped DataFrame (reference parquet schema,
     * common/txsummary.go:42-69). Undecodable rows are dropped (they go to
@@ -93,8 +114,7 @@ object ParseTx {
   def project(raw: DataFrame, tsCol: String = "timestamp_ms",
       rawHexCol: String = "raw_tx_hex"): DataFrame = {
     raw
-      .withColumn("p", parse_raw_tx(col(rawHexCol)))
-      .filter(col("p").isNotNull)
+      .withColumn("p", evalOnce(parse_raw_tx(col(rawHexCol))))
       .select(
         col(tsCol).as("timestamp"),
         col("p.hash").as("hash"),
@@ -142,3 +162,30 @@ case class ParseRawTxExpr(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): ParseRawTxExpr =
     copy(child = newChild)
 }
+
+/** The dedup key of the collector's decode: the tx hash without sender
+  * recovery ([[ParseTx.evalHash]]); null on undecodable input. */
+case class RawTxHashExpr(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"raw_tx_hash requires STRING input, got ${child.dataType.simpleString}")
+
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = true // undecodable input → null
+  override def prettyName: String = "raw_tx_hash"
+
+  override protected def nullSafeEval(input: Any): Any =
+    ParseTx.evalHash(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"""
+       |${ev.value} = graft.functions.ParseTx.evalHash($c);
+       |${ev.isNull} = ${ev.value} == null;
+     """.stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): RawTxHashExpr =
+    copy(child = newChild)
+}
+

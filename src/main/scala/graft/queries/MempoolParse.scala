@@ -101,7 +101,7 @@ object MempoolParse {
     * post-shuffle partitions by shuffle BYTES, and the A1 dedup exchange's
     * output is small enough at bench volume that the default 1 MB floor
     * coalesces the CPU-BOUND secp-recover parse stage to half the cores
-    * (AqeParseProbe: 16 → 32 partitions, 1.6 → 1.2 s warm under the
+    * (measured r21: 16 → 32 partitions, 1.6 → 1.2 s warm under the
     * floor); applied session-wide it cost ~10 % via tiny tasks on the
     * ~15 small shuffle-heavy text/dedup queries, so it is scoped to the
     * merge DAG's materializing actions only. AQE reads the conf at

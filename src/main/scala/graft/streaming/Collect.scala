@@ -155,27 +155,40 @@ object Collect {
     * the canonical raw bytes. Mirrors the reference's skip-on-error
     * `continue` branches: empty payloads and undecodable messages are
     * dropped. Produces exactly the plain [[feed]] row shape, so
-    * everything downstream (dedup, validate, sinks) is source-agnostic. */
+    * everything downstream (dedup, validate, sinks) is source-agnostic.
+    *
+    * The dedup key is the hash-only decode ([[ParseTx.raw_tx_hash]]): the
+    * same null set as the full parse, without sender recovery, which
+    * [[validate]] runs once per deduped row. Each of `from_json`, the
+    * re-encode UDF and the hash runs once per row inside a generator
+    * ([[ParseTx.evalOnce]]): a plain `withColumn` + `filter` re-runs them
+    * in the pushed-down Filter. */
   def decodeEnvelopes(msgs: DataFrame, msgCol: String = "msg"): DataFrame =
     msgs
-      .withColumn("e", from_json(col(msgCol), envelopeSchema))
-      .withColumn("raw_tx_hex",
-        when(col("source") === "bloxroute", col("e.params.result.rawTx"))
+      // the envelope JSON, parsed only for the sources that carry raw hex
+      .withColumn("r", explode(array(
+        when(col("source").isin(HexSources: _*),
+          from_json(col(msgCol), envelopeSchema).getField("params").getField("result")))))
+      .withColumn("raw_tx_hex", ParseTx.evalOnce(
+        when(col("source") === "bloxroute", col("r.rawTx"))
           // eden carries `rlp` in its WS envelope; the chainbound gRPC
           // codec ([[ProtoWire.ChainboundProto]]) spools the same shape
-          .when(col("source").isin("eden", "chainbound"), col("e.params.result.rlp"))
-          .otherwise(rebuildRawTxUdf(col(msgCol))))
-      .filter(col("raw_tx_hex").isNotNull && length(col("raw_tx_hex")) > 0)
-      .withColumn("hash", ParseTx.parse_raw_tx(col("raw_tx_hex")).getField("hash"))
-      .filter(col("hash").isNotNull)
+          .when(col("source").isin("eden", "chainbound"), col("r.rlp"))
+          .otherwise(rebuildRawTxUdf(col(msgCol))),
+        x => x.isNotNull && length(x) > 0))
+      .withColumn("hash", ParseTx.evalOnce(ParseTx.raw_tx_hash(col("raw_tx_hex"))))
       .select(col("timestamp_ms"), col("hash"), col("raw_tx_hex"), col("source"))
       .withColumn("ts", timestamp_millis(col("timestamp_ms")))
+
+  /** Sources whose envelope carries the raw hex itself. */
+  private val HexSources = Seq("bloxroute", "eden", "chainbound")
 
   /** S6: tx-object envelope → canonical raw hex (genuinely custom RLP
     * re-encode, so a UDF like the parse projection itself). */
   private val rebuildRawTxUdf =
     udf((msg: String) =>
       if (msg == null) None else graft.functions.EthTxEncode.fromRpcEnvelope(msg))
+      .withName("rebuild_raw_tx")
 
   /** A5: 30-minute-TTL streaming dedup on the tx hash
     * (dropDuplicatesWithinWatermark ≈ knownTxs map + sweeper). */
@@ -249,7 +262,9 @@ object Collect {
     * inline validation (collector/tx_processor.go:355-416). */
   def validate(stream: DataFrame): DataFrame =
     stream
-      .withColumn("p", ParseTx.parse_raw_tx(col("raw_tx_hex")))
+      // a generator keeps the parse out of the branches' pushed-down
+      // `reason` filters, which would each re-run it
+      .withColumn("p", explode(array(ParseTx.parse_raw_tx(col("raw_tx_hex")))))
       .withColumn("reason",
         when(col("p").isNull, "decode-error").otherwise(col("p.reason")))
       .drop("p")

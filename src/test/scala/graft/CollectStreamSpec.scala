@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Streaming collector semantics, driven synchronously: fixture CSV files
   * play the role of WS feed batches (spark_guide.md memory-sink pattern). */
 class CollectStreamSpec extends AnyFunSuite {
+  import CollectStreamSpec._
   private lazy val spark = SparkTestSession.spark
 
   private def writeFeed(dir: String, n: Int): Unit = {
@@ -813,11 +814,51 @@ class CollectStreamSpec extends AnyFunSuite {
       """{"timestamp_ms":2,"source":"eden","msg":"{\"params\":{\"result\":{\"rlp\":\"0xdeadbeef\"}}}"}""",
       """{"timestamp_ms":3,"source":"bloxroute","msg":"not json at all"}""")
 
+  private def edgeEnvelopes: Seq[EdgeEnvelope] = {
+    import graft.functions.{EthTx, ParseTx, Rlp}
+    def hexOf(b: Array[Byte]) = "0x" + b.map("%02x".format(_)).mkString
+    def typedItems(raw: String) =
+      Rlp.decode(EthTx.unhex(raw.stripPrefix("0x")).drop(1)).asInstanceOf[Rlp.Lst].items
+    val n = BigInt("fffffffffffffffffffffffffffffffebaaedce6af48a03bbfd25e8cd0364141", 16)
+    val fixture = TxFixtures.rawTxHex(1000L)
+    val highS = {
+      val items = typedItems(fixture)
+      hexOf(Array[Byte](2) ++ Rlp.encode(Rlp.Lst(
+        items.updated(11, Rlp.fromBigInt(n - Rlp.toBigInt(items(11)))))))
+    }
+    val legacy = Rlp.encode(Rlp.Lst(Vector(
+      Rlp.fromBigInt(BigInt(7)), Rlp.fromBigInt(BigInt(30000000000L)),
+      Rlp.fromBigInt(BigInt(21000)), Rlp.Bytes(Array.fill[Byte](20)(0x11)),
+      Rlp.fromBigInt(BigInt(12345)), Rlp.Bytes(Array.emptyByteArray),
+      Rlp.fromBigInt(BigInt(37))) ++ typedItems(fixture).takeRight(2)))
+    val unrecoverable = (1001L until 1100L).map(TxFixtures.rawTxHex)
+      .find(r => !ParseTx.parseHex(r).get.fromValid).get
+    val hexCases = Seq(
+      "" -> false, "0x" -> false, "0x02f" -> false,
+      ("0xzz" + fixture.drop(4)) -> false, fixture.dropRight(2) -> false,
+      hexOf(Rlp.encode(Rlp.Bytes(legacy))) -> false, // double-wrapped legacy
+      highS -> true, unrecoverable -> true,
+      // the reference's legacy-RLP-wrapped typed tx (rlp_test.go case 2)
+      ("0xb87802f875018201088459682f00850a3cc5ac918252089404be5b8576fc23164b9ee69577fe7857dd6be1988802c346682d9a485880c080a08679e43c770c07395663fbb7fa0d2a8ca9b9535e598c25b9794c50e664c5098ca0366a741acdb68a37df66547001cf31e0c630477f78482d3b7a5778f30c6fbfe1") -> false)
+    Seq(
+      EdgeEnvelope(90, "bloxroute", null, None),
+      EdgeEnvelope(91, "local", null, None),
+      EdgeEnvelope(92, "eden", """{"params":{"result":{}}}""", None),
+      EdgeEnvelope(93, "bloxroute", """{"params":{}}""", None)) ++
+    hexCases.zipWithIndex.map { case ((payload, sigError), k) =>
+      val (source, field) = if (k % 2 == 0) ("bloxroute", "rawTx") else ("eden", "rlp")
+      EdgeEnvelope(100L + k, source, s"""{"params":{"result":{"$field":"$payload"}}}""",
+        Some(payload), sigError)
+    }
+  }
+
   test("S6-S8: raw-rlp and tx-object envelopes decode to the plain feed rows") {
+    import graft.functions.ParseTx
     val in = Files.createTempDirectory("graft-env").toString
     val n = 60
-    val lines = envelopeLines(n)
-    Files.writeString(java.nio.file.Paths.get(s"$in/envelopes.json"), lines.mkString("\n"))
+    val edges = edgeEnvelopes
+    Files.writeString(java.nio.file.Paths.get(s"$in/envelopes.json"),
+      (envelopeLines(n) ++ edges.map(_.line)).mkString("\n"))
 
     val q = Collect.decodeEnvelopes(Collect.envelopeFeed(spark, in))
       .writeStream.format("memory").queryName("env_out")
@@ -825,15 +866,86 @@ class CollectStreamSpec extends AnyFunSuite {
     try {
       q.processAllAvailable()
       val out = spark.table("env_out")
+      val kept = edges.flatMap(e => e.payload.flatMap(ParseTx.parseHex)
+        .map(p => (e.ts, p.hash, e.payload.get, e.source)))
+      // wrapped legacy, high-s, unrecoverable and wrapped typed
+      assert(kept.size == 4)
       val expected = (0 until n).map { i =>
         val (ts, hash, raw) = TxFixtures.rawRow(i.toLong)
         (ts, hash, raw,
           Seq("bloxroute", "eden", "local")(i % 3))
-      }.toSet
+      }.toSet ++ kept
       val got = out.select("timestamp_ms", "hash", "raw_tx_hex", "source")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3))).toSet
       assert(got == expected) // hash derived from payload matches; errors skipped
+
+      // the hash-only decode keeps txs whose signature does not recover;
+      // validate's full parse trashes them
+      val reasons = Collect.validate(out).select("raw_tx_hex", "reason").collect()
+        .map(r => r.getString(0) -> Option(r.getString(1))).toMap
+      assert(reasons == got.map(r => r._3 -> ParseTx.parseHex(r._3).get.reason).toMap)
+      val sigErrors = edges.filter(_.sigError).flatMap(_.payload)
+      assert(sigErrors.size == 2 &&
+        sigErrors.forall(reasons.get(_).contains(Some("signature-error"))))
     } finally q.stop()
+  }
+
+  test("decode plans evaluate each kernel once per row") {
+    import graft.functions.{ParseRawTxExpr, ParseTx, RawTxHashExpr}
+    import org.apache.spark.sql.catalyst.expressions.{JsonToStructs, ScalaUDF}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    object Kernels extends AdaptiveSparkPlanHelper {
+      /** Kernel expression nodes in an executed plan, by kind. */
+      def apply(plan: SparkPlan): Map[String, Int] =
+        flatMap(plan)(_.expressions.flatMap(_.collect {
+          case _: ParseRawTxExpr => "parse"
+          case _: RawTxHashExpr => "hash"
+          case _: JsonToStructs => "from_json"
+          case u: ScalaUDF if u.udfName.contains("rebuild_raw_tx") => "rebuild"
+        })).groupBy(identity).map { case (k, v) => k -> v.size }
+    }
+    val in = Files.createTempDirectory("graft-env-plan").toString
+    val out = Files.createTempDirectory("graft-env-plan-out").toString
+    Files.writeString(java.nio.file.Paths.get(s"$in/envelopes.json"),
+      (envelopeLines(30) ++ edgeEnvelopes.map(_.line)).mkString("\n"))
+
+    val decoded = Collect.decodeEnvelopes(
+      spark.read.schema(Collect.envelopeFeedSchema).json(in))
+    decoded.collect()
+    assert(Kernels(decoded.queryExecution.executedPlan) ==
+      Map("hash" -> 1, "from_json" -> 1, "rebuild" -> 1))
+
+    // read from a file: over a local relation the optimizer would fold
+    // the whole projection away
+    import spark.implicits._
+    val raws = Files.createTempDirectory("graft-parse-plan").resolve("raw").toString
+    (0 until 30).map(i => (i.toLong, TxFixtures.rawTxHex(i.toLong)))
+      .toDF("timestamp_ms", "raw_tx_hex").write.parquet(raws)
+    val projected = ParseTx.project(spark.read.parquet(raws)).filter(col("reason").isNull)
+    projected.collect()
+    assert(Kernels(projected.queryExecution.executedPlan) == Map("parse" -> 1))
+
+    // the collector's queries as the benchmark wires them; without
+    // no-data batches the last execution is the batch that read the feed
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prev = spark.conf.getOption(noData)
+    val queries = try {
+      spark.conf.set(noData, "false")
+      Collect.runWith(Collect.decodeEnvelopes(Collect.envelopeFeed(spark, in)),
+        out, Trigger.AvailableNow(), Some(Seq("bloxroute", "eden", "local")),
+        Collect.dedupStateful)
+    } finally prev.fold(spark.conf.unset(noData))(spark.conf.set(noData, _))
+    try {
+      queries.foreach(_.processAllAvailable())
+      queries.foreach { q =>
+        val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+          .lastExecution.executedPlan
+        assert(Kernels(plan) == Map("hash" -> 1, "parse" -> 1, "from_json" -> 1, "rebuild" -> 1),
+          s"\n$plan")
+      }
+    } finally queries.foreach(_.stop())
   }
 
   test("S6-S10: socket-fed envelopes decode identically to the file feed") {
@@ -1293,5 +1405,25 @@ class CollectStreamSpec extends AnyFunSuite {
       assert(new java.io.File(s"$out/accepted/lang=en").exists())
       assert(new java.io.File(s"$out/accepted/lang=de").exists())
     } finally queries.foreach(q => if (q.isActive) q.stop())
+  }
+}
+
+object CollectStreamSpec {
+  /** One `{timestamp_ms, source, msg}` envelope line; a null `msgJson`
+    * is a JSON null. */
+  def envelopeLine(ts: Long, source: String, msgJson: String): String = {
+    val msg = Option(msgJson)
+      .map(m => "\"" + m.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
+      .getOrElse("null")
+    s"""{"timestamp_ms":$ts,"source":"$source","msg":$msg}"""
+  }
+
+  /** A decode edge case: its envelope line, and the raw hex its source
+    * carries. What decode keeps, and with which hash, follows from
+    * `ParseTx.parseHex` of that payload. `sigError` marks the decodable
+    * txs whose signature does not recover. */
+  final case class EdgeEnvelope(ts: Long, source: String,
+      msgJson: String, payload: Option[String], sigError: Boolean = false) {
+    def line: String = envelopeLine(ts, source, msgJson)
   }
 }
