@@ -55,9 +55,7 @@ object EthTx {
   }
 
   def decodeHex(hexStr: String, recover: Boolean = true): Parsed = {
-    val h = if (hexStr.startsWith("0x")) hexStr.substring(2) else hexStr
-    if (h.length % 2 != 0) throw TxDecodeException("odd-length hex")
-    decode(unhex(h), recover)
+    decode(unhex(if (hexStr.startsWith("0x")) hexStr.substring(2) else hexStr), recover)
   }
 
   // ── typed envelopes ──────────────────────────────────────────────────
@@ -193,11 +191,23 @@ object EthTx {
 
   private def toJBig(v: BigInt): BigInteger = v.bigInteger
 
+  /** Value of each ASCII hex digit, -1 for every other ASCII char. */
+  private val Nibble: Array[Int] = Array.tabulate(128)(c => Character.digit(c, 16))
+
+  /** Hex digits (no `0x`) → bytes. Throws [[TxDecodeException]] on odd
+    * length or on any char outside `[0-9a-fA-F]`, so a sign, a space or a
+    * stray nibble never reads as a different byte string. */
   def unhex(h: String): Array[Byte] = {
+    if ((h.length & 1) != 0) throw TxDecodeException("odd-length hex")
     val out = new Array[Byte](h.length / 2)
     var i = 0
     while (i < out.length) {
-      out(i) = Integer.parseInt(h.substring(i * 2, i * 2 + 2), 16).toByte
+      val a = h.charAt(2 * i)
+      val b = h.charAt(2 * i + 1)
+      val hi = if (a < 128) Nibble(a) else -1
+      val lo = if (b < 128) Nibble(b) else -1
+      if ((hi | lo) < 0) throw TxDecodeException("non-hex digit")
+      out(i) = ((hi << 4) | lo).toByte
       i += 1
     }
     out

@@ -18,10 +18,12 @@ object EthTxEncode {
 
   private val mapper = new ObjectMapper()
 
+  /** A JSON-RPC quantity: unsigned hex digits, odd length allowed
+    * (`0x1`); a sign or any other char throws, as [[EthTx.unhex]] does. */
   private def hexNum(n: JsonNode): BigInt = {
     if (n == null || n.isNull) return BigInt(0)
     val h = n.asText("").stripPrefix("0x")
-    if (h.isEmpty) BigInt(0) else BigInt(h, 16)
+    if (h.isEmpty) BigInt(0) else BigInt(1, EthTx.unhex(if (h.length % 2 == 0) h else "0" + h))
   }
   private def hexBytes(n: JsonNode): Array[Byte] = {
     if (n == null || n.isNull) return Array.emptyByteArray

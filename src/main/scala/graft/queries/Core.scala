@@ -179,7 +179,7 @@ object Core {
       val key = "spark.sql.streaming.stateStore.providerClass"
       val prevProvider = s.conf.getOption(key)
       graft.streaming.Collect.useRocksDbState(s)
-      // Fixture state LAYOUT, not an engine config (r22, StreamStateProbe:
+      // Fixture state LAYOUT, not an engine config (OPTIMIZATION_r22.md §5:
       // a one-shot 32-state-partition run pays ~6 s of per-instance store
       // setup/commit that 4 partitions do not — 8.0 -> 1.9 s warm minima;
       // per-key emissions are partition-count-independent, so values are

@@ -1,16 +1,23 @@
 package graft.streaming
 
 import graft.functions.ParseTx
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** The collector as a Structured Streaming job (SURVEY.md §2.7/§3.3;
-  * /root/reference/collector/tx_processor.go:201-313 semantics):
+  * reference collector/tx_processor.go:201-416 semantics):
   *
-  *   sources → union stream → 30-min TTL dedup → F2 validation split →
-  *   hourly-bucketed file sink + trash side-output + per-minute metrics
+  *   sources → union stream → 30-min TTL dedup → F2 validation →
+  *   one micro-batch writer: hourly-bucketed tx CSVs + trash CSVs
+  *   (+ per-minute metrics, [[sourceMetrics]])
+  *
+  * One streaming query, one checkpoint, one dedup state: each envelope is
+  * decoded, deduped and validated once and both outputs come from that
+  * one pass (SURVEY F2, "one pass, two outputs"); [[runWith]] states the
+  * per-batch publish contract that replaces the file sinks' logs.
   *
   * Event time = receive time stamped at the adapter (processing ≈ event
   * time). Contract matches the reference: at-least-once ingest, real dedup
@@ -299,9 +306,8 @@ object Collect {
         col("n_all"), col("n_unique_approx"))
 
   /** Full wiring: valid txs → hourly-bucketed CSVs (S15 layout), trash →
-    * its own bucketed dir. Returns the queries so callers control
-    * lifecycle. Checkpointing per sink — exactly-once file output on top of
-    * the at-least-once contract. */
+    * its own dir, from one streaming query (see [[runWith]]). Returns the
+    * query so callers control its lifecycle. */
   def run(spark: SparkSession, inDir: String, outDir: String,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): Seq[StreamingQuery] =
     runWith(feed(spark, inDir), outDir, trigger)
@@ -321,55 +327,127 @@ object Collect {
     m
   }
 
-  /** The collector pipeline over any stream in the feed row shape —
-    * the source adapters above all normalize to it. With `observeSources`
-    * set, the plans carry observe() nodes feeding the reference's
-    * tx_received counters (see [[CollectorMetrics]]): `received` is
-    * counted pre-dedup on the tx query's plan only (the trash query
-    * re-derives from the raw stream so nothing double-counts), `first`
-    * on the post-dedup valid branch, `trash` on the reject branch.
-    * `dedupWith` selects the suppression operator: the built-in
-    * [[dedup]] (arrival-order keep) by default, or [[dedupStateful]]
-    * when the deterministic earliest-timestamp keep must match the batch
-    * merge's A1 rule — the day-chain composition (DayChainSpec) runs the
-    * stateful path so collector output merged downstream is row-identical
-    * to merging the raw day directly. */
+  /** The collector pipeline over any stream in the feed row shape — the
+    * source adapters above all normalize to it — as ONE streaming query
+    * with one checkpoint at `$outDir/_chk/collector`, writing both sinks
+    * from each micro-batch like the reference's single processing path
+    * (collector/tx_processor.go:201-416): every envelope is read, decoded,
+    * deduped and validated once, and one dedup state holds the TTL map.
+    * The returned Seq holds that one query.
+    *
+    * Each batch is persisted, its `reason IS NULL` rows go to
+    * `transactions/date=…/hour=…/` and the rest to `trash/`, and the
+    * persist is released (see [[writeBatch]] for the publish contract).
+    * The persist also makes the plan's `observe()` accumulators run once
+    * per batch although the batch feeds two writes.
+    *
+    * With `observeSources` set, the plan carries the observations feeding
+    * the reference's tx_received counters (see [[CollectorMetrics]]):
+    * `received` pre-dedup, `first` and `trash` on the validated stream,
+    * split by `reason`. `dedupWith` selects the suppression operator: the
+    * built-in [[dedup]] (arrival-order keep) by default, or
+    * [[dedupStateful]] when the deterministic earliest-timestamp keep must
+    * match the batch merge's A1 rule — the day-chain composition
+    * (DayChainSpec) runs the stateful path so collector output merged
+    * downstream is row-identical to merging the raw day directly.
+    *
+    * An output dir that still holds the former per-sink checkpoints
+    * (`_chk/transactions`, `_chk/trash`) and no `_chk/collector` is
+    * refused: a fresh checkpoint would restart the feed at offset 0 and
+    * re-emit everything already written there. */
   def runWith(stream: DataFrame, outDir: String,
       trigger: Trigger, observeSources: Option[Seq[String]] = None,
-      dedupWith: DataFrame => DataFrame = dedup): Seq[StreamingQuery] = {
-    def obs(df: DataFrame, stage: String): DataFrame =
-      observeSources.map(CollectorMetrics.observed(df, stage, _)).getOrElse(df)
+      dedupWith: DataFrame => DataFrame = dedup): Seq[StreamingQuery] =
+    Seq(startCollector(stream, outDir, trigger, observeSources, dedupWith, _ => ()))
 
-    val validated = validate(dedupWith(obs(stream, "received")))
-    // independent plan for the trash query: no received-observation node,
-    // so the shared prefix runs twice but is only ever counted once
-    val validatedTrash =
-      if (observeSources.isDefined) validate(dedupWith(stream)) else validated
+  /** [[runWith]]'s query; `beforeTrashPublish` runs between the two
+    * publishes of each batch, where a test injects a crash. */
+  private[graft] def startCollector(stream: DataFrame, outDir: String,
+      trigger: Trigger, observeSources: Option[Seq[String]],
+      dedupWith: DataFrame => DataFrame,
+      beforeTrashPublish: Long => Unit): StreamingQuery = {
+    val fs = new Path(outDir).getFileSystem(stream.sparkSession.sparkContext.hadoopConfiguration)
+    val chk = new Path(outDir, "_chk")
+    val old = Seq("transactions", "trash").map(new Path(chk, _)).filter(fs.exists)
+    if (old.nonEmpty && !fs.exists(new Path(chk, "collector")))
+      throw new IllegalStateException(
+        s"$outDir holds per-sink collector checkpoints (${old.mkString(", ")}) and no " +
+          s"${new Path(chk, "collector")}: a new checkpoint would re-read the feed from " +
+          "offset 0 and re-emit its rows; use a fresh output dir")
 
-    val txQuery = obs(validated.filter(col("reason").isNull), "first")
-      .select(col("timestamp_ms"), col("hash"), col("raw_tx_hex"),
-        col("source"), col("ts"))
-      .withColumn("date", date_format(col("ts"), "yyyy-MM-dd"))
-      .withColumn("hour", date_format(col("ts"), "HH"))
-      .drop("ts")
+    def obs(df: DataFrame, stage: String, where: Column): DataFrame =
+      observeSources.fold(df)(CollectorMetrics.observed(df, stage, _, where))
+    val validated = validate(dedupWith(obs(stream, "received", lit(true))))
+    obs(obs(validated, "first", col("reason").isNull), "trash", col("reason").isNotNull)
       .writeStream
-      .format("csv")
-      .option("path", s"$outDir/transactions")
-      .option("checkpointLocation", s"$outDir/_chk/transactions")
-      .partitionBy("date", "hour")
+      .foreachBatch(writeBatch(outDir, beforeTrashPublish) _)
+      .option("checkpointLocation", new Path(chk, "collector").toString)
       .trigger(trigger)
       .start()
+  }
 
-    val trashQuery = obs(validatedTrash.filter(col("reason").isNotNull), "trash")
-      .select(col("timestamp_ms"), col("hash"), col("source"),
-        col("reason"), lit("").as("notes"))
-      .writeStream
-      .format("csv")
-      .option("path", s"$outDir/trash")
-      .option("checkpointLocation", s"$outDir/_chk/trash")
-      .trigger(trigger)
-      .start()
+  /** One validated micro-batch → both sinks, exactly once per batch id.
+    * Without a file sink's `_spark_metadata` log, a replayed batch must
+    * replace its own files, never add to them:
+    *
+    *  1. both outputs are written under `$outDir/_staging/<id>/` with
+    *     `mode("overwrite")` (Spark readers skip `_`-prefixed names, and a
+    *     replay overwrites a half-written stage);
+    *  2. for each directory the staged batch writes, the final directory's
+    *     `batch-<id>-*` files are deleted and the staged files moved in as
+    *     `batch-<id>-<file>` — transactions first, then trash;
+    *  3. the staging dir is deleted, and the query commits the batch.
+    *
+    * What is left: between a crash inside step 2 and the replay of that
+    * batch, a reader can see a half-published batch (some of its hour
+    * dirs, or its transactions without its trash). The replay republishes
+    * the whole batch in place. Readers that glob the hour dirs never
+    * consulted a file sink's log, so for them this is strictly stronger
+    * than per-sink file sinks, which left an uncommitted batch's files in
+    * place beside the replay's. */
+  private def writeBatch(outDir: String, beforeTrashPublish: Long => Unit)(
+      batch: DataFrame, id: Long): Unit = {
+    val staged = new Path(outDir, s"_staging/$id")
+    batch.persist()
+    try {
+      batch.filter(col("reason").isNull)
+        .select(col("timestamp_ms"), col("hash"), col("raw_tx_hex"), col("source"),
+          date_format(col("ts"), "yyyy-MM-dd").as("date"),
+          date_format(col("ts"), "HH").as("hour"))
+        .write.mode("overwrite").partitionBy("date", "hour")
+        .csv(new Path(staged, "transactions").toString)
+      batch.filter(col("reason").isNotNull)
+        .select(col("timestamp_ms"), col("hash"), col("source"),
+          col("reason"), lit("").as("notes"))
+        .write.mode("overwrite")
+        .csv(new Path(staged, "trash").toString)
+    } finally batch.unpersist()
+    val fs = staged.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+    publish(fs, new Path(staged, "transactions"), new Path(outDir, "transactions"), id)
+    beforeTrashPublish(id)
+    publish(fs, new Path(staged, "trash"), new Path(outDir, "trash"), id)
+    fs.delete(staged, true)
+  }
 
-    Seq(txQuery, trashQuery)
+  /** Moves the data files under `from` to the same relative dirs under
+    * `to` as `batch-<id>-<name>`, first deleting that batch's earlier
+    * files in each dir it writes. Lists only the dirs the batch writes,
+    * never the whole output tree. */
+  private def publish(fs: FileSystem, from: Path, to: Path, id: Long): Unit = {
+    val prefix = s"batch-$id-"
+    val (dirs, files) = fs.listStatus(from)
+      .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+      .partition(_.isDirectory)
+    if (files.nonEmpty) {
+      fs.mkdirs(to)
+      fs.listStatus(to, (p: Path) => p.getName.startsWith(prefix))
+        .foreach(s => fs.delete(s.getPath, false))
+      files.foreach { f =>
+        val dest = new Path(to, prefix + f.getPath.getName)
+        if (!fs.rename(f.getPath, dest))
+          throw new java.io.IOException(s"cannot move ${f.getPath} to $dest")
+      }
+    }
+    dirs.foreach(d => publish(fs, d.getPath, new Path(to, d.getPath.getName), id))
   }
 }

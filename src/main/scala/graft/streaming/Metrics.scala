@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import scala.jdk.CollectionConverters._
@@ -57,15 +57,18 @@ object CollectorMetrics {
     "graft_first" -> TxReceivedFirst, // tx_processor.go:291
     "graft_trash" -> TxReceivedTrash) // tx_processor.go:251,271
 
-  /** Attach a metrics observation to a stage: one exact count plus a
-    * count per configured source tag (the collector's source set is its
-    * configured connections, so it is known per run) and an `other`
-    * catch-all. Pure plan decoration — the stream is returned unchanged. */
-  def observed(df: DataFrame, stage: String, sources: Seq[String]): DataFrame = {
+  /** Attach a metrics observation to a stage: one exact count of the rows
+    * matching `where` plus a count per configured source tag (the
+    * collector's source set is its configured connections, so it is known
+    * per run) and an `other` catch-all. Pure plan decoration — the stream
+    * is returned unchanged, so stages that split one stream (`first`,
+    * `trash`) stack on it with complementary predicates. */
+  def observed(df: DataFrame, stage: String, sources: Seq[String],
+      where: Column): DataFrame = {
     val aggs =
-      (count(lit(1)).as("total") +:
-        sources.map(s => count_if(col("source") === s).as(s))) :+
-        count_if(!col("source").isin(sources: _*)).as("other")
+      (count_if(where).as("total") +:
+        sources.map(s => count_if(where && col("source") === s).as(s))) :+
+        count_if(where && !col("source").isin(sources: _*)).as("other")
     df.observe(s"graft_$stage", aggs.head, aggs.tail: _*)
   }
 }

@@ -187,8 +187,8 @@ class CollectStreamSpec extends AnyFunSuite {
 
   test("collector restarts from checkpoint: no loss, no duplicate output") {
     // the ops property the checkpoint exists for: stop mid-ingest, add
-    // data, restart the same sink+checkpoint — the file sink's commit log
-    // must dedup replayed batches and pick up the new ones exactly once
+    // data, restart on the same checkpoint — committed batches must not
+    // be re-emitted and the new ones must land exactly once
     val in = Files.createTempDirectory("graft-feed-rs").toString
     val out = Files.createTempDirectory("graft-collect-rs").toString
     def rows(lo: Int, hi: Int): String =
@@ -219,6 +219,57 @@ class CollectStreamSpec extends AnyFunSuite {
     assert(got.toSet == expected, "restart lost rows")
     assert(got.length == got.distinct.length,
       "restart re-emitted rows already committed before the stop")
+  }
+
+  test("collector crash between the two publishes: the replay republishes the batch once") {
+    import graft.streaming.Collect.{dedupStateful, feed, startCollector}
+    val in = Files.createTempDirectory("graft-feed-crash").toString
+    writeFeed(in, 120)
+    def drain(out: String, fault: Long => Unit): Unit = {
+      val q = startCollector(feed(spark, in), out, Trigger.AvailableNow(), None,
+        dedupStateful, fault)
+      try q.awaitTermination() finally q.stop()
+    }
+    def rows(out: String): (Seq[String], Seq[String]) = (
+      spark.read.csv(s"$out/transactions").collect().map(_.toString).sorted.toSeq,
+      spark.read.csv(s"$out/trash").collect().map(_.toString).sorted.toSeq)
+    /** Published data files per (dir, batch id). */
+    def filesByBatch(out: String): Map[(String, String), Int] = {
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get(out)
+      Files.walk(root).iterator().asScala.toSeq
+        .filter(p => Files.isRegularFile(p) && p.getFileName.toString.startsWith("batch-"))
+        .map(p => (root.relativize(p.getParent).toString,
+          p.getFileName.toString.split('-')(1)))
+        .filter(_._1.split('/').head != "_chk")
+        .groupBy(identity).map { case (k, v) => k -> v.size }
+    }
+
+    val ref = Files.createTempDirectory("graft-collect-ref").toString
+    drain(ref, _ => ())
+    val out = Files.createTempDirectory("graft-collect-crash").toString
+    intercept[Exception](drain(out, _ => throw new IllegalStateException("injected crash")))
+    // half-published: batch 0's transactions are out, its trash is not
+    assert(filesByBatch(out).keySet.map(_._1).forall(_.startsWith("transactions/")))
+    assert(filesByBatch(out).nonEmpty)
+    drain(out, _ => ())
+
+    val (refTx, refTrash) = rows(ref)
+    assert(refTx.nonEmpty && refTrash.nonEmpty)
+    assert(rows(out) == ((refTx, refTrash)))
+    assert(filesByBatch(out) == filesByBatch(ref))
+    assert(!new java.io.File(s"$out/_staging/0").exists())
+  }
+
+  test("collector refuses an output dir that holds per-sink checkpoints") {
+    val in = Files.createTempDirectory("graft-feed-old").toString
+    writeFeed(in, 10)
+    val out = Files.createTempDirectory("graft-collect-old").toString
+    Files.createDirectories(java.nio.file.Paths.get(s"$out/_chk/trash"))
+    val e = intercept[IllegalStateException](
+      Collect.run(spark, in, out, Trigger.AvailableNow()))
+    assert(e.getMessage.contains("_chk/collector"))
+    assert(spark.streams.active.isEmpty)
   }
 
   test("connection manager reassembles a line split across read-timeout ticks") {
@@ -784,16 +835,22 @@ class CollectStreamSpec extends AnyFunSuite {
 
   // a geth/alchemy-style tx OBJECT envelope rebuilt from the fixture's
   // own decoded fields (S6 path)
-  private def rpcMsg(raw: String): String = {
+  private def rpcMsg(raw: String): String = rpcJson(raw).replace("\"", "\\\"")
+
+  /** The tx-object envelope JSON of `raw`, with `patch` replacing the
+    * named string fields. */
+  private def rpcJson(raw: String, patch: (String, String)*): String = {
     val bytes = graft.functions.EthTx.unhex(raw.stripPrefix("0x"))
     val l = graft.functions.Rlp.decode(bytes.drop(1))
       .asInstanceOf[graft.functions.Rlp.Lst].items
     def hx(i: Int) = "0x" + graft.functions.Rlp.toBigInt(l(i)).toString(16)
     def hb(i: Int) = "0x" + graft.functions.Rlp.toBytes(l(i)).map("%02x".format(_)).mkString
-    (s"""{"params":{"result":{"type":"0x2","chainId":"${hx(0)}","nonce":"${hx(1)}",""" +
-      s""""maxPriorityFeePerGas":"${hx(2)}","maxFeePerGas":"${hx(3)}","gas":"${hx(4)}",""" +
-      s""""to":"${hb(5)}","value":"${hx(6)}","input":"${hb(7)}","accessList":[],""" +
-      s""""yParity":"${hx(9)}","r":"${hx(10)}","s":"${hx(11)}"}}}""").replace("\"", "\\\"")
+    val fields = Seq("type" -> "0x2", "chainId" -> hx(0), "nonce" -> hx(1),
+      "maxPriorityFeePerGas" -> hx(2), "maxFeePerGas" -> hx(3), "gas" -> hx(4),
+      "to" -> hb(5), "value" -> hx(6), "input" -> hb(7),
+      "yParity" -> hx(9), "r" -> hx(10), "s" -> hx(11)) ++ patch
+    val body = fields.toMap.map { case (k, v) => s""""$k":"$v"""" }.mkString(",")
+    s"""{"params":{"result":{$body,"accessList":[]}}}"""
   }
 
   /** The fixture txs wrapped in each source's WS envelope, plus the
@@ -838,13 +895,18 @@ class CollectStreamSpec extends AnyFunSuite {
       ("0xzz" + fixture.drop(4)) -> false, fixture.dropRight(2) -> false,
       hexOf(Rlp.encode(Rlp.Bytes(legacy))) -> false, // double-wrapped legacy
       highS -> true, unrecoverable -> true,
+      ("0x+2" + fixture.drop(4)) -> false, // a sign is not a hex digit
       // the reference's legacy-RLP-wrapped typed tx (rlp_test.go case 2)
       ("0xb87802f875018201088459682f00850a3cc5ac918252089404be5b8576fc23164b9ee69577fe7857dd6be1988802c346682d9a485880c080a08679e43c770c07395663fbb7fa0d2a8ca9b9535e598c25b9794c50e664c5098ca0366a741acdb68a37df66547001cf31e0c630477f78482d3b7a5778f30c6fbfe1") -> false)
     Seq(
       EdgeEnvelope(90, "bloxroute", null, None),
       EdgeEnvelope(91, "local", null, None),
       EdgeEnvelope(92, "eden", """{"params":{"result":{}}}""", None),
-      EdgeEnvelope(93, "bloxroute", """{"params":{}}""", None)) ++
+      EdgeEnvelope(93, "bloxroute", """{"params":{}}""", None),
+      // strict hex on the tx-object path: an odd-length byte string and a
+      // signed quantity are rejected, not read as "" and 0xff
+      EdgeEnvelope(94, "local", rpcJson(fixture, "input" -> "0xf"), None),
+      EdgeEnvelope(95, "local", rpcJson(fixture, "value" -> "0x-1"), None)) ++
     hexCases.zipWithIndex.map { case ((payload, sigError), k) =>
       val (source, field) = if (k % 2 == 0) ("bloxroute", "rawTx") else ("eden", "rlp")
       EdgeEnvelope(100L + k, source, s"""{"params":{"result":{"$field":"$payload"}}}""",
@@ -927,8 +989,9 @@ class CollectStreamSpec extends AnyFunSuite {
     projected.collect()
     assert(Kernels(projected.queryExecution.executedPlan) == Map("parse" -> 1))
 
-    // the collector's queries as the benchmark wires them; without
-    // no-data batches the last execution is the batch that read the feed
+    // the collector as the benchmark wires it: one query, so one of each
+    // kernel in the whole collector; without no-data batches the last
+    // execution is the batch that read the feed
     val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
     val prev = spark.conf.getOption(noData)
     val queries = try {
@@ -938,13 +1001,12 @@ class CollectStreamSpec extends AnyFunSuite {
         Collect.dedupStateful)
     } finally prev.fold(spark.conf.unset(noData))(spark.conf.set(noData, _))
     try {
+      assert(queries.size == 1 && spark.streams.active.toSeq.map(_.id) == queries.map(_.id))
       queries.foreach(_.processAllAvailable())
-      queries.foreach { q =>
-        val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
-          .lastExecution.executedPlan
-        assert(Kernels(plan) == Map("hash" -> 1, "parse" -> 1, "from_json" -> 1, "rebuild" -> 1),
-          s"\n$plan")
-      }
+      val plan = queries.head.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan
+      assert(Kernels(plan) == Map("hash" -> 1, "parse" -> 1, "from_json" -> 1, "rebuild" -> 1),
+        s"\n$plan")
     } finally queries.foreach(_.stop())
   }
 

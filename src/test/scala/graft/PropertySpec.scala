@@ -135,6 +135,52 @@ class PropertySpec extends AnyFunSuite {
     bad.foreach(b => intercept[Exception](Rlp.decode(b)))
   }
 
+  test("strict hex: parseHex, parse_raw_tx and raw_tx_hash agree on any string; a kept row is its input") {
+    import graft.functions.ParseTx
+    import org.apache.spark.sql.functions.col
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val fixture = Gen.chooseNum(0L, 5000L).map(TxFixtures.rawTxHex)
+    // chars that a lenient hex reader (Integer.parseInt, BigInt) accepts
+    // or that look like digits, none of them in [0-9a-fA-F]
+    val junk = Gen.oneOf('+', '-', ' ', 'g', 'x', 'Z', '_', '\u0663', '\uff10')
+    val genStr: Gen[String] = Gen.frequency(
+      3 -> fixture,
+      2 -> fixture.map("0x" + _.drop(2).toUpperCase),
+      1 -> fixture.map(_.drop(2)),
+      3 -> (for { h <- fixture; i <- Gen.chooseNum(2, h.length - 1); c <- junk }
+        yield h.updated(i, c)),
+      2 -> (for { h <- fixture; i <- Gen.chooseNum(2, h.length); c <- junk }
+        yield h.patch(i, c.toString, 0)),
+      2 -> (for { h <- fixture; n <- Gen.chooseNum(0, h.length - 1) } yield h.take(n)),
+      1 -> fixture.map("0x+2" + _.drop(4)),
+      1 -> Arbitrary.arbString.arbitrary,
+      1 -> Gen.alphaNumStr.map("0x" + _),
+      1 -> Gen.const(null: String))
+    val xs = samples(genStr, 400)
+    // through the codegen kernels: over a local relation the optimizer
+    // would fold the projection into interpreted evaluation instead
+    val dir = java.nio.file.Files.createTempDirectory("graft-hex-prop").resolve("s").toString
+    xs.toDF("s").write.parquet(dir)
+    val got = spark.read.parquet(dir).select(col("s"),
+      ParseTx.parse_raw_tx(col("s")).isNull, ParseTx.raw_tx_hash(col("s"))).collect()
+    assert(got.length == xs.length)
+    val isHex = (c: Char) => Character.digit(c, 16) >= 0 && c < 128
+    got.foreach { r =>
+      val in = r.getString(0)
+      val parsed = ParseTx.parseHex(in)
+      assert(r.getBoolean(1) == parsed.isEmpty, String.valueOf(in))
+      assert(Option(r.getString(2)) == parsed.map(_.hash), String.valueOf(in))
+      parsed.foreach { p =>
+        val digits = in.stripPrefix("0x")
+        assert(digits.length % 2 == 0 && digits.forall(isHex), in)
+        assert(Keccak256.hex(p.rawTx) == digits.toLowerCase, in)
+      }
+    }
+    val kept = got.count(!_.getBoolean(1))
+    assert(kept > 50 && kept < 300, s"$kept of ${got.length} kept")
+  }
+
   test("water-fill quotas: invariants hold for 200 random count/budget sets") {
     import graft.queries.TextOps.waterFillQuotas
     val genCase: Gen[(Map[String, Long], Long)] = for {
