@@ -1,7 +1,7 @@
 package graft
 
-/** Settled shuffle-write accounting for campaign harnesses (r19 for the
-  * text daily loop, r20 shared with SemIndexJob — VERDICT r19 item 5):
+/** Settled shuffle-write accounting for [[jobs.SemIndexJob]]'s verbs
+  * (VERDICT r19 item 5):
   * the scratch/exchange claims of the incremental loops are about
   * EXCHANGED BYTES, and wall seconds conflate them with box state — a
   * listener summing completed stages' shuffle writes makes each tick's
@@ -18,8 +18,8 @@ package graft
   *
   * ATTRIBUTION CAVEAT (ADVICE r19): the counter is context-global — a
   * window between two [[settled]] calls bills any UNRELATED concurrent
-  * job's shuffle writes to itself. The campaign harnesses run their
-  * stages serially on a dedicated session, so the skew is zero there;
+  * job's shuffle writes to itself. The job runs its stages serially on
+  * a dedicated session, so the skew is zero there;
   * don't lift this into a harness that interleaves jobs.
   *
   * Callers MUST [[remove]] in a finally: a listener leaked onto the

@@ -23,7 +23,7 @@ object CorpusBuild {
 
   /** Optional SemDeDup stage: embeddings keyed by vec_id = doc_id plus a
     * named operating point ([[graft.queries.SimilarityOps.SemPreset]] —
-    * the measured CorpusScaleBench points, VERDICT r13 item 4). */
+    * the measured recall/cost points, VERDICT r13 item 4). */
   final case class SemDedup(embeddings: DataFrame,
       preset: graft.queries.SimilarityOps.SemPreset, tau: Double = 0.9)
 

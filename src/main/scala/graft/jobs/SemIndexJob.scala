@@ -4,9 +4,8 @@ import graft.queries.SimilarityOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The standing semantic index as a runnable job surface — the CLI twin
-  * of the `CorpusScaleBench --semantic --daily` maintenance loop, so the
-  * incremental SemDeDup path is operable outside the bench (the same
+/** The standing semantic index as a runnable job surface — the daily
+  * maintenance loop of the incremental SemDeDup path (the same
   * pattern as [[MergeJob]] / CorpusBuildJob: library core in
   * `graft.queries`, thin deterministic CLI here).
   *
@@ -58,7 +57,7 @@ import org.apache.spark.sql.functions._
   *     ratio creeps ≥ pct% above it, the job retrains + refreezes the
   *     index on the full standing corpus (today's batch included) and
   *     reassigns everything into one piece — the rewrite doubles as
-  *     compaction, exactly the bench's `--retrain-every` procedure.
+  *     compaction, exactly the `retrain` verb.
   *     The ratio creeps under BOTH drift (batches concentrate into
   *     stale cells) and plain corpus growth (clusters fatten past the
   *     k the bootstrap sized) — both are reasons to refresh a frozen
@@ -66,7 +65,7 @@ import org.apache.spark.sql.functions._
   *     above the per-tick growth rate (batch/standing) if only drift
   *     should fire it. Day pairs found under superseded indexes make
   *     the single-frozen-index full-batch equality inapplicable after
-  *     the first retrain (the bench's documented sym_diff = −1 regime)
+  *     the first retrain (`check` refuses such a chain, below)
   *     — run WITHOUT --auto-retrain when a `check` audit of the loop is
   *     the goal; the claim under retrain is the recall curve, which
   *     retraining is what restores. With `--retrain-defer` (VERDICT r17
@@ -91,7 +90,7 @@ import org.apache.spark.sql.functions._
   *     full-batch pipeline over <allEmbeddings> (same flags as the loop)
   *     and compare against the union of the loop's pair outputs
   *     (bootstrap pairsOut + every day's pairsOut). Prints sym_diff —
-  *     0 is the CorpusScaleBench invariant, valid only while the index
+  *     0 is the loop's invariant, valid only while the index
   *     was never retrained mid-loop; pair dirs carry the emitting
   *     index's epoch and `check` REFUSES a mixed-epoch or superseded
   *     chain instead of printing a sym_diff whose premise is violated
@@ -112,9 +111,9 @@ import org.apache.spark.sql.functions._
   *
   * Every command is deterministic given its inputs: the frozen index
   * assigns per-vector, so day-by-day ingestion reproduces the full-batch
-  * pair set over the same index exactly (the CorpusScaleBench
-  * `sym_diff 0` invariant; SemIndexJobSpec re-proves it through THIS
-  * CLI surface at spec scale, `check` re-proves it at any scale). */
+  * pair set over the same index exactly (the `sym_diff 0` invariant;
+  * SemIndexJobSpec proves it through THIS CLI surface at spec scale,
+  * `check` re-proves it at any scale). */
 object SemIndexJob {
 
   /** One day tick's outcome (the JSON line prints the same fields).
@@ -620,9 +619,8 @@ object SemIndexJob {
       Seq("cluster"), "left_semi")
     // pairs between two standing members were already emitted by an
     // earlier tick (or the bootstrap) — keep only pairs touching the
-    // fresh batch, exactly the CorpusScaleBench daily emission. Unlike
-    // the bench (contiguous id ranges), the CLI can't assume fresh ids
-    // form a range, so the either-endpoint test is two broadcast left
+    // fresh batch. Fresh ids need not form a contiguous range, so the
+    // either-endpoint test is two broadcast left
     // joins + an OR filter over ONE pair pass. multiAssigned must honor
     // the flags the STANDING pieces were written with, not just this
     // invocation's (ADVICE r15) — the persisted marker carries that bit.
@@ -739,7 +737,7 @@ object SemIndexJob {
 
   /** Retrain + refreeze on the full standing corpus and reassign every
     * standing vector through the new index into ONE piece — the rewrite
-    * doubles as compaction (the bench's `--retrain-every` procedure).
+    * doubles as compaction (a fixed retrain schedule's step).
     * Resets the probe baseline (the next day tick re-establishes it) and
     * the membership marker (every piece is now written under the current
     * flags).
@@ -972,10 +970,9 @@ object SemIndexJob {
     val t0 = System.nanoTime()
     def wall = (System.nanoTime() - t0) / 1e9
     // settled shuffle-write accounting on every verb's JSON line
-    // (VERDICT r19 item 5): the daily_scale loop got per-stage shuffle
-    // GB in r19; the sem-index tick JSON carried only pairs/rows/
-    // seconds, so the 772 s-vs-33–49 s inline-retrain trade and the
-    // tick costs weren't re-checkable from artifacts alone. Same
+    // (VERDICT r19 item 5): the sem-index tick JSON carried only
+    // pairs/rows/seconds, so the 772 s-vs-33–49 s inline-retrain trade
+    // and the tick costs weren't re-checkable from artifacts alone. Same
     // counter, removed in the finally (ADVICE r19's leak class).
     val shuffleCounter = new graft.ShuffleWriteCounter(spark.sparkContext)
     def shuffleGb: String =
@@ -1023,8 +1020,7 @@ object SemIndexJob {
         println(f"""{"metric":"sem_index_compact","wall_sec":$wall%.1f,""" +
           f""""shuffle_write_gb":$shuffleGb}""")
       case Seq("retrain", indexDir, standingDir) =>
-        // the fixed-schedule posture (README's --retrain-every bench arm)
-        // as an operable verb: --auto-retrain EXECUTES the creep rule,
+        // the fixed-schedule posture as an operable verb: --auto-retrain EXECUTES the creep rule,
         // but an orchestrator running a scheduled refresh needs the
         // retrain itself (which doubles as compaction) without a day tick
         retrain(spark, indexDir, standingDir, probes, margin, subMargin)

@@ -110,10 +110,10 @@ object DedupOps {
     (System.identityHashCode(s), s"${analyzed.semanticHash()}_$planMd5")
   }
 
-  /** MinHash+LSH near-dup pairs over any (doc_id, text) frame — shared by
-    * q_dedup_minhash (over the planted corpus) and CorpusScaleBench
-    * (over million-doc synthetic corpora); candidates banded and
-    * exact-verified. */
+  /** The memoized, DISK_ONLY-persisted (doc_id, sh[, extra…]) shingle
+    * table the MinHash builders band and verify — shared by
+    * q_dedup_minhash, q_dedup_incremental and the index twin in one
+    * session. */
   private[graft] def minhashBase(s: SparkSession, docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val key = minhashBaseKey(s, docs)
@@ -127,7 +127,7 @@ object DedupOps {
       // probes), and in-heap caching made them COMPETE with the band
       // join's execution memory — at 1 M docs the deserialized cache
       // drove 30 % task GC and OOM'd the 8 g heap outright on the warm
-      // re-probe (r12, CorpusScaleBench --stages); DISK_ONLY reads come
+      // re-probe (r12, 1 M-doc stage attribution); DISK_ONLY reads come
       // back through the OS page cache at near-memory speed without
       // squeezing the unified pool.
       docs.select(col("doc_id") +: shingles(col("text")).as("sh") +: extra.toSeq: _*)
@@ -151,16 +151,6 @@ object DedupOps {
     val extra = docs.columns.filter(c => c != "doc_id" && c != "text").map(col)
     docs.select(col("doc_id") +: shingles(col("text")).as("sh") +: extra.toSeq: _*)
   }
-
-  /** Release the cached shingle base for `docs` (idempotent). Scale
-    * benches call this once the near-dup chain is done: several GB of
-    * cached shingle arrays otherwise pin the storage pool — and the
-    * heap's old generation — through the unrelated stages that follow
-    * (measured r12: the 1 M-doc winnow pass ran 1.8× its linear cost
-    * with the stale cache resident). */
-  private[graft] def releaseMinhashBase(s: SparkSession, docs: DataFrame): Unit =
-    SessionCaches.release(s,
-      s"dedup.minhash.base:${minhashBaseKey(s, docs)._2}")
 
   /** Release EVERY memoized shingle base for `s` — for callers that
     * create bases on frames they never see (minhashPairsAgainstIndex
@@ -456,18 +446,11 @@ object DedupOps {
       .distinct()
   }
 
-  /** Banded candidate id pairs (pre-verify) — the CorpusScaleBench
-    * sub-stage probe. */
-  private[graft] def minhashCandidatesFromDocs(
-      s: SparkSession, docs: DataFrame): DataFrame = {
-    val banded = minhashBanded(minhashBase(s, docs))
-    bandedCandidates(banded, banded, fullSelfJoin = true)
-  }
-
-  /** MinHash+LSH near-dup pairs over any (doc_id, text) frame — shared by
-    * q_dedup_minhash (over the planted corpus) and CorpusScaleBench
-    * (over million-doc synthetic corpora). Returns (doc_a, doc_b,
-    * jaccard_r ≥ 0.6), candidates banded and exact-verified.
+  /** MinHash+LSH near-dup pairs over any (doc_id, text) frame — used by
+    * q_dedup_minhash (over the planted corpus) and measured on
+    * million-doc synthetic corpora ([[graft.gen.docText]]). Returns
+    * (doc_a, doc_b, jaccard_r ≥ 0.6), candidates banded and
+    * exact-verified.
     *
     * `pruneVerify` is the big-corpus regime, result-identical either
     * way (pruning only drops base rows the inner verify join ignores;

@@ -77,10 +77,10 @@ object SimilarityOps {
   val VerifyExactGate = 512L
 
   /** Named SemDeDup operating points (VERDICT r13 item 4): the
-    * [[semClustersFromEmb]] knob triples measured by CorpusScaleBench's
-    * `--semantic` sweeps, reachable by NAME from CorpusBuild's CLI and
-    * from `--runs=` so the README frontier row is user-runnable without
-    * code edits. */
+    * [[semClustersFromEmb]] knob triples measured by the 1 M–10 M
+    * synthetic-embedding recall sweeps ([[graft.gen.synVecGeo]]),
+    * reachable by NAME from CorpusBuild's CLI so the frontier point is
+    * user-runnable without code edits. */
   final case class SemPreset(probes: Int, probeMargin: Double,
       subProbeMargin: Double)
 
@@ -220,9 +220,10 @@ object SimilarityOps {
       }
     // checkpoint the pair set BEFORE the CC loop (review r17): the loop
     // joins `edges` once per round, and an uncached lineage would re-run
-    // the whole blocking + in-cluster cosine pipeline each time — every
-    // other CC caller (ClusterProbe, ccLabels, the scale bench) pins its
-    // edges first. multiAssigned tracks the blocking actually used
+    // the whole blocking + in-cluster cosine pipeline each time — the
+    // other CC caller, ccLabels, pins its edges first (stage timings come
+    // from the benchmark's traced run, dumpsterbench/README.md).
+    // multiAssigned tracks the blocking actually used
     // (review r19): only the hierarchical branch with probing knobs can
     // co-locate a pair twice — the flat fallback and single-probe
     // presets are provably single-membership, so their pair-dedup
@@ -531,7 +532,7 @@ object SimilarityOps {
 
   /** [[assignVec]] keeping the `probes` NEAREST centroids per vector
     * (multiprobe): the blocking-recall knob for the hierarchical
-    * SemDeDup path — CorpusScaleBench measured 80 % of its missed
+    * SemDeDup path — the 1 M-embedding recall sweep measured 80 % of its missed
     * planted pairs split across COARSE cells, so probing the 2 nearest
     * cells recovers most of them for ~2× level-2 work. The window rank
     * compiles to a map-side WindowGroupLimit over the broadcast-scored
@@ -943,8 +944,9 @@ object SimilarityOps {
 
   /** The production SemDeDup blocking over ANY (vec_id, embedding) frame
     * — the dir-independent core of [[semClusters]], exposed so
-    * CorpusScaleBench can wall-measure the hierarchical path at
-    * 1 M+ synthetic embeddings (VERDICT r11 item 5). Requires
+    * callers can block any embedding frame (the hierarchical path was
+    * wall-measured this way at 1 M+ synthetic embeddings, VERDICT r11
+    * item 5). Requires
     * semK(n) > 8 (the ≤ 8 regime is the dir-bound exact oracle twin).
     *
     * `probes` > 1 assigns each vector to its `probes` nearest coarse
@@ -1146,7 +1148,7 @@ object SimilarityOps {
     * level-2 sub-centroid table (cell, sub, m) — k ≈ N/64 rows × 512 B,
     * broadcast while it fits (size-gated) and a cell-co-partitioned join
     * past that. Production persists both as parquet between daily runs
-    * (CorpusScaleBench's --semantic --daily does exactly that), so the
+    * ([[graft.jobs.SemIndexJob]] does exactly that), so the
     * blocking geometry is frozen: every vector — bootstrap or any later
     * batch — resolves to the same cluster id through the same argmin,
     * which is what makes incremental pair discovery equal the full-batch
@@ -1959,9 +1961,8 @@ object SimilarityOps {
     //    sf0.1 (different blocking k and float arithmetic — the
     //    q_dedup_semantic convention); its correctness is carried by
     //    SemIndexSpec (batch-vs-whole assignment equality,
-    //    WindowGroupLimit plan pin, compacted daily-loop end-state
-    //    require) and the measured CorpusScaleBench --semantic --daily
-    //    sym_diff-0 runs.
+    //    WindowGroupLimit plan pin) and SemIndexJobSpec (the compacted
+    //    daily loop's sym_diff-0 end state through the job).
     "q_dedup_incremental_sem" -> QueryDef.sql(
       "incremental semantic dedup: fresh batch through a frozen bootstrap-trained quantizer",
       """WITH nn AS (SELECT COUNT(*) // 4 AS k FROM embeddings),

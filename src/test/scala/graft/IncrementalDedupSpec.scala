@@ -1,23 +1,27 @@
 package graft
 
 import graft.queries.DedupOps
+import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Engine-level equivalence of the incremental pairing path (r8): banding
   * a fresh batch against the standing corpus must find exactly the
   * fresh-touching subset of the full batch pairing — same pairs, same
   * exact-verified Jaccard values — for any split of the corpus.
   */
-class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IncrementalDedupSpec extends AnyFunSuite with SessionLeakCheck {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
   // the pruned verify and the index probe pin internal frames in the
   // shared session's CacheManager; sweep them (and the memoized shingle
   // bases) so later suites start from an unpinned session
-  override def afterAll(): Unit = DedupOps.releaseAllMinhashBases(spark)
+  override def afterAll(): Unit =
+    try DedupOps.releaseAllMinhashBases(spark) finally super.afterAll()
 
   // planted corpus: every doc has a guaranteed near-copy at +1,000,000
   private def docs = DedupOps.withPlanted(spark, dir)
@@ -55,14 +59,56 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("daily loop with compact-every-K matches the full-batch pipeline") {
-    // the --compact-every path (VERDICT r13 item 3) at spec scale:
-    // 4 days of 5 % batches over 20 k synthetic docs, compacting whenever
-    // more than 2 pieces accumulate. dailyRun itself REQUIREs sym_diff==0
-    // against the full-batch pipeline, so reaching the end IS the assert;
-    // this pins the compaction rewrite into the CI suite rather than only
-    // the measured bench runs.
-    CorpusScaleBench.dailyRun(spark, 20000L, days = 4, batchPct = 5,
-      compactEvery = 2)
+    // the standing band index maintained over K days: bootstrap the last
+    // 80 % of 20 k synthetic docs, then 4 days of 5 % batches, each probed
+    // against the pieces so far and then appended as a new piece; more
+    // than 2 pieces are rewritten into one parquet piece. Bootstrap pairs
+    // ∪ daily pairs must equal the full-batch pipeline's pair set,
+    // value-exact on (doc_a, doc_b, jaccard_r).
+    import spark.implicits._
+    val (n, days, batch, compactEvery) = (20000L, 4, 1000L, 2)
+    def docsRange(lo: Long, hi: Long) =
+      spark.range(lo, hi).map(i => (i, gen.docText(i))).toDF("doc_id", "text")
+    def pairSet(pairs: DataFrame) =
+      pairs.select("doc_a", "doc_b", "jaccard_r").as[(Long, Long, Double)]
+        .collect().toSet
+    val init = docsRange(days * batch, n)
+    val compactDir = Files.createTempDirectory("graft-daily-compact")
+    var pieces = List.empty[DataFrame]
+    def appendPiece(docs: DataFrame): Unit = {
+      val piece = DedupOps.minhashIndex(spark, docs).persist(StorageLevel.DISK_ONLY)
+      piece.count()
+      pieces :+= piece
+    }
+    try {
+      appendPiece(init)
+      var chained = pairSet(DedupOps.minhashPairsFromDocs(spark, init))
+      for (d <- 0 until days) {
+        val fresh = docsRange(d * batch, (d + 1) * batch)
+        val existing = init.union(docsRange(0L, d * batch))
+        chained ++= pairSet(DedupOps.minhashPairsAgainstIndex(spark,
+          pieces.reduce(_ union _), existing, fresh))
+        appendPiece(fresh)
+        if (pieces.length > compactEvery) {
+          val compacted = compactDir.resolve(s"piece_d$d").toString
+          pieces.reduce(_ unionByName _).write.parquet(compacted)
+          pieces.foreach(_.unpersist())
+          pieces = List(spark.read.parquet(compacted))
+        }
+        // the probe shingles frames this loop never names; sweep their
+        // bases and pins each day, as a long-running loop must
+        DedupOps.releaseAllMinhashBases(spark)
+      }
+      val full = pairSet(DedupOps.minhashPairsFromDocs(spark, docsRange(0L, n)))
+      assert(full.nonEmpty, "the corpus planted no pairs — the check is vacuous")
+      assert((full -- chained).isEmpty && (chained -- full).isEmpty,
+        s"daily-chained pairs diverged: ${(full -- chained).size} missing, " +
+          s"${(chained -- full).size} extra")
+    } finally {
+      pieces.foreach(_.unpersist())
+      DedupOps.releaseAllMinhashBases(spark)
+      Files.walk(compactDir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    }
   }
 
   test("pruned verify is result-identical to the unpruned path") {
@@ -88,114 +134,6 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy("doc_a", "doc_b").collect().toSeq
     assert(incPruned == incUnpruned)
     assert(incPruned.nonEmpty)
-  }
-
-  test("prune-verify auto-selects above the measured single-disk cutover") {
-    // VERDICT r17 item 2 + r18 item 4: with neither flag and NO scratch
-    // estimate, the daily loop prunes strictly above the 3 M fallback
-    // (the last scale the unpruned bootstrap completed on this box's
-    // disk — 5 M ENOSPC'd); with a MEASURED capacity the choice derives
-    // from estimated-unpruned-scratch vs free/2 instead of the box
-    // constant. Explicit flags win both ways at any scale in both
-    // regimes.
-    import CorpusScaleBench.{pruneVerifyChoice, PruneVerifyAutoDocs,
-      UnprunedVerifyScratchBytesPerDoc}
-    // fallback regime (no estimate)
-    assert(PruneVerifyAutoDocs == 3000000L)
-    assert(!pruneVerifyChoice(PruneVerifyAutoDocs, explicitOn = false,
-      explicitOff = false))
-    assert(pruneVerifyChoice(PruneVerifyAutoDocs + 1, explicitOn = false,
-      explicitOff = false))
-    assert(pruneVerifyChoice(1000L, explicitOn = true, explicitOff = false))
-    assert(!pruneVerifyChoice(10000000L, explicitOn = false,
-      explicitOff = true))
-    // capacity regime: the 5 M / 80 GB ENOSPC anchor must select prune…
-    val free80g = Some(80L << 30)
-    assert(pruneVerifyChoice(5000000L, explicitOn = false,
-      explicitOff = false, free80g))
-    // …while a cluster-sized scratch (10 TB) keeps the shared shingle
-    // cache at the same 5 M — pruning there trades CPU for nothing
-    assert(!pruneVerifyChoice(5000000L, explicitOn = false,
-      explicitOff = false, Some(10L << 40)))
-    // a SMALLER volume prunes well below the 3 M box constant (the
-    // "too late" direction the constant couldn't express): 1 M docs on
-    // 20 GB free estimates past free/2
-    assert(pruneVerifyChoice(1000000L, explicitOn = false,
-      explicitOff = false, Some(20L << 30)))
-    // the gate boundary is exactly estimate > free/2
-    val nAtHalf = (40L << 30) / UnprunedVerifyScratchBytesPerDoc
-    assert(!pruneVerifyChoice(nAtHalf, explicitOn = false,
-      explicitOff = false, free80g))
-    assert(pruneVerifyChoice(nAtHalf + 1, explicitOn = false,
-      explicitOff = false, free80g))
-    // explicit flags still win in the capacity regime
-    assert(pruneVerifyChoice(1000L, explicitOn = true, explicitOff = false,
-      Some(10L << 40)))
-    assert(!pruneVerifyChoice(10000000L, explicitOn = false,
-      explicitOff = true, Some(1L << 30)))
-    // a degenerate (non-positive) estimate falls back to the constant
-    assert(!pruneVerifyChoice(PruneVerifyAutoDocs, explicitOn = false,
-      explicitOff = false, Some(0L)))
-
-    // VERDICT r19 item 1: the per-doc estimate scales from MEASURED text
-    // bytes with the 16 KB floor retained — a fat-document corpus flips
-    // the choice where the corpus-blind constant would not.
-    import CorpusScaleBench.{perDocScratchEstimate,
-      UnprunedVerifyScratchBytesPerTextByte}
-    // thin/synthetic docs sit AT the floor (the calibration corpus:
-    // ~1.2 KB text × 14 ≈ 16.8 KB, floor 16.4 KB — same regime)
-    assert(perDocScratchEstimate(None) == UnprunedVerifyScratchBytesPerDoc)
-    assert(perDocScratchEstimate(Some(500L)) == UnprunedVerifyScratchBytesPerDoc)
-    // fat docs scale linearly: 12 KB text → 168 KB/doc scratch
-    assert(perDocScratchEstimate(Some(12000L)) ==
-      12000L * UnprunedVerifyScratchBytesPerTextByte)
-    // degenerate average falls back to the floor
-    assert(perDocScratchEstimate(Some(0L)) == UnprunedVerifyScratchBytesPerDoc)
-    // the FLIP: 1 M docs on 40 GB free — the constant estimates 16.4 GB
-    // ≤ 20 GB (unpruned, which on a real 12 KB-doc corpus is the ENOSPC
-    // direction), the measured-bytes estimate 168 GB > 20 GB (prune)
-    val free40g = Some(40L << 30)
-    assert(!pruneVerifyChoice(1000000L, explicitOn = false,
-      explicitOff = false, free40g))
-    assert(pruneVerifyChoice(1000000L, explicitOn = false,
-      explicitOff = false, free40g, avgDocTextBytes = Some(12000L)))
-    // a measured THIN average does not loosen the floor-derived gate
-    assert(pruneVerifyChoice(5000000L, explicitOn = false,
-      explicitOff = false, Some(80L << 30), avgDocTextBytes = Some(400L)))
-  }
-
-  test("sampledAvgDocBytes measures a deterministic text-bytes average") {
-    import spark.implicits._
-    // 1-in-4 pmod slice of 100 docs: sampled ids 0,4,…,96 — text length
-    // = 100 + id, so the expected average is 100 + 48 = 148
-    val docs = spark.range(100).map(i => (i, "x" * (100 + i.toInt)))
-      .toDF("doc_id", "text")
-    assert(CorpusScaleBench.sampledAvgDocBytes(docs, oneIn = 4L)
-      .contains(148L))
-    // an empty frame yields None (the no-estimate fallback), not a crash
-    assert(CorpusScaleBench.sampledAvgDocBytes(docs.limit(0)).isEmpty)
-  }
-
-  test("scratch capacity dedupes dirs by backing volume") {
-    // review r19: spark.local.dir=/d1,/d2 on ONE volume is the standard
-    // shuffle-parallelism config — summing per-dir usable space would
-    // double-count the volume and overstate capacity, the fail-DEADLY
-    // direction (the gate would pick the unpruned verify past real
-    // capacity, recreating the 5 M ENOSPC).
-    import CorpusScaleBench.dedupedUsableBytes
-    val one = dedupedUsableBytes("/tmp")
-    assert(one.exists(_ > 0L))
-    // the same volume listed twice (and with a redundant spelling) must
-    // not double; usable space moves between calls, so compare within
-    // a generous band rather than exactly
-    val twice = dedupedUsableBytes("/tmp,/tmp,/tmp/.")
-    assert(twice.isDefined)
-    assert(twice.get < one.get * 3 / 2,
-      s"same-volume dirs double-counted: $twice vs $one")
-    // unreadable entries are skipped, not fatal; all-unreadable is None
-    assert(dedupedUsableBytes("/does/not/exist,/tmp").isDefined)
-    assert(dedupedUsableBytes("/does/not/exist").isEmpty)
-    assert(dedupedUsableBytes("").isEmpty)
   }
 
   test("touched-broadcast ceiling derives from spark.driver.maxResultSize") {

@@ -5,9 +5,18 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Behavior checks for the training-data-pipeline operators. */
-class LlmOpsSpec extends AnyFunSuite {
+class LlmOpsSpec extends AnyFunSuite with SessionLeakCheck {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
+
+  // the tests cache their query results, and the queries memoize shared
+  // artifacts (pair sets, trained indexes) for the session; drop both so
+  // later suites start from an unpinned session
+  override def afterAll(): Unit =
+    try {
+      queries.SessionCaches.releaseAll(spark)
+      spark.catalog.clearCache()
+    } finally super.afterAll()
 
   test("minhash LSH recalls every planted near-dup pair") {
     val pairs = SparkEntry.queries("q_dedup_minhash")(spark, sf).cache()
@@ -420,7 +429,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // a synthetic corpus in the hierarchical regime, with the level-2
     // knob off so only the rule's own memberships are counted.
     val n = 1100L
-    val emb = spark.range(n).map(i => (i, CorpusScaleBench.synVec(i)))
+    val emb = spark.range(n).map(i => (i, gen.synVec(i)))
       .toDF("vec_id", "embedding")
     val f = 0.2
     val p = queries.SimilarityOps.calibratedPreset(spark, emb, n, f)
@@ -446,8 +455,8 @@ class LlmOpsSpec extends AnyFunSuite {
     // Every ratio must now be finite, non-null and ≥ 1.
     val n = 1100L
     val emb = spark.range(n).map(i =>
-        (i, if (i >= 770) CorpusScaleBench.synVec(7L)
-            else CorpusScaleBench.synVec(i)))
+        (i, if (i >= 770) gen.synVec(7L)
+            else gen.synVec(i)))
       .toDF("vec_id", "embedding")
     val ratios = queries.SimilarityOps.coarseMarginRatios(spark, emb, n)
     val bad = ratios.filter(col("ratio").isNull || isnan(col("ratio")) ||
@@ -463,8 +472,8 @@ class LlmOpsSpec extends AnyFunSuite {
     // range-strided seeds land mostly outside the duplicate block, the
     // preset calibrates, and the quantizer keeps >1 live centroid.
     val lowDup = spark.range(n).map(i =>
-        (i, if (i < 330) CorpusScaleBench.synVec(7L)
-            else CorpusScaleBench.synVec(i)))
+        (i, if (i < 330) gen.synVec(7L)
+            else gen.synVec(i)))
       .toDF("vec_id", "embedding")
     val pLow = queries.SimilarityOps.calibratedPreset(spark, lowDup, n, 0.2)
     assert(pLow.probeMargin >= 1.0 && !pLow.probeMargin.isNaN,
@@ -473,7 +482,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // single live centroid: no vector has a runner-up cell, and
     // calibratedPreset must fail LOUD and diagnostic (naming the way
     // out), not with a bare NoSuchElementException off an empty quantile
-    val same = spark.range(n).map(i => (i, CorpusScaleBench.synVec(3L)))
+    val same = spark.range(n).map(i => (i, gen.synVec(3L)))
       .toDF("vec_id", "embedding")
     val ex = intercept[IllegalArgumentException] {
       queries.SimilarityOps.calibratedPreset(spark, same, n, 0.2)

@@ -344,7 +344,7 @@ class ScalePlanSpec extends AnyFunSuite {
     // n must push semK past FlatKCap so the hierarchical branch (the only
     // regime with a level-1 probe step) runs: semK(1100)=18 > 16
     val n = 1100L
-    val emb = spark.range(n).map(i => (i, CorpusScaleBench.synVec(i)))
+    val emb = spark.range(n).map(i => (i, gen.synVec(i)))
       .toDF("vec_id", "embedding")
     def run(probes: Int): (Map[Long, Long], Long) = {
       val clusters = queries.SimilarityOps.semClustersFromEmb(spark, emb, n, probes)
@@ -375,7 +375,7 @@ class ScalePlanSpec extends AnyFunSuite {
     // all k1 centroid scores. Pin that plan shape (VERDICT r12 item 2),
     // same treatment the corpus-build dedup got.
     val n = 1100L // semK(1100)=18 > FlatKCap → hierarchical (probed) regime
-    val emb = spark.range(n).map(i => (i, CorpusScaleBench.synVec(i)))
+    val emb = spark.range(n).map(i => (i, gen.synVec(i)))
       .toDF("vec_id", "embedding")
     val clusters = queries.SimilarityOps.semClustersFromEmb(spark, emb, n, 2)
     val plan = finalPlan(clusters)
@@ -405,7 +405,7 @@ class ScalePlanSpec extends AnyFunSuite {
     // vec_id clustering — i.e. the Partial/Final limit and shuffle shape
     // are untouched and NO second vec_id exchange appears (ADVICE r13).
     val n = 1100L
-    val emb = spark.range(n).map(i => (i, CorpusScaleBench.synVec(i)))
+    val emb = spark.range(n).map(i => (i, gen.synVec(i)))
       .toDF("vec_id", "embedding")
     val clusters = queries.SimilarityOps.semClustersFromEmb(spark, emb, n, 2, 1.4)
     val plan = finalPlan(clusters)

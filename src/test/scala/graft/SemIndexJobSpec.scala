@@ -1,20 +1,19 @@
 package graft
 
 import graft.jobs.SemIndexJob
-import graft.queries.SimilarityOps
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The SemIndexJob CLI surface re-proves the bench loop's invariant
+/** The SemIndexJob CLI surface proves the maintenance loop's invariant
   * through the on-disk layout a production operator would actually run:
   * train → bootstrap → day ticks (with a mid-loop compact) must emit, in
   * union, exactly the pair set of the frozen full-batch pipeline. */
-class SemIndexJobSpec extends AnyFunSuite {
+class SemIndexJobSpec extends AnyFunSuite with SessionLeakCheck {
   private lazy val spark = SparkTestSession.spark
 
   private def emb(lo: Long, hi: Long) = {
     import spark.implicits._
-    spark.range(lo, hi).map(i => (i, CorpusScaleBench.synVec(i)))
+    spark.range(lo, hi).map(i => (i, gen.synVec(i)))
       .toDF("vec_id", "embedding")
   }
 

@@ -6,14 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The standing semantic index (r14): frozen two-level quantizer +
   * appended assignment pieces — the SemDeDup twin of the minhash band
-  * index. CI-scale proofs of the properties the measured
-  * `CorpusScaleBench --semantic --daily` loop leans on. */
-class SemIndexSpec extends AnyFunSuite {
+  * index. CI-scale proofs of the properties the daily maintenance loop
+  * leans on; the loop's end-state equality itself runs through the job
+  * in SemIndexJobSpec. */
+class SemIndexSpec extends AnyFunSuite with SessionLeakCheck {
   private lazy val spark = SparkTestSession.spark
 
   private def emb(lo: Long, hi: Long) = {
     import spark.implicits._
-    spark.range(lo, hi).map(i => (i, CorpusScaleBench.synVec(i)))
+    spark.range(lo, hi).map(i => (i, gen.synVec(i)))
       .toDF("vec_id", "embedding")
   }
 
@@ -153,7 +154,7 @@ class SemIndexSpec extends AnyFunSuite {
     // never saw (a different geometry) must still all land somewhere
     import spark.implicits._
     val shifted = spark.range(5000, 5000 + 600)
-      .map(i => (i, CorpusScaleBench.synVecGeo(i, "mog")))
+      .map(i => (i, gen.synVecGeo(i, "mog")))
       .toDF("vec_id", "embedding")
     assert(SimilarityOps.semIndexAssign(spark, shifted, index).count() == 600,
       "a cross-distribution batch vector was dropped by the sub join")
@@ -223,20 +224,12 @@ class SemIndexSpec extends AnyFunSuite {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-semgap").toString
     spark.range(0, 1000)
-      .map(i => (i, CorpusScaleBench.synVec(i), 0))
+      .map(i => (i, gen.synVec(i), 0))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val out = SparkEntry.queries("q_dedup_incremental_sem")(spark, dir)
     assert(out.count() > 0,
       "gap-regime corpus produced no pairs — exact-chain fallback broken")
     assert(out.columns.toSeq == Seq("vec_a", "vec_b", "cos"))
-  }
-
-  test("incremental semantic daily loop (with compaction) equals the frozen full-batch run") {
-    // semanticDailyRun REQUIREs sym_diff == 0 between bootstrap ∪ daily
-    // pair sets and the full-batch pipeline over the same frozen index —
-    // reaching the end IS the assert (the CI twin of the measured run)
-    CorpusScaleBench.semanticDailyRun(spark, 2000L, days = 3,
-      batchPct = 10, compactEvery = 2, geometry = "iso")
   }
 }

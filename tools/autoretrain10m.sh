@@ -25,10 +25,10 @@ j() {
 }
 
 mkdir -p "$ROOT"
-j gen-boot graft.VectorGen 2500000 10000000 mog "$ROOT/boot" --window=0
+j gen-boot graft.gen.VectorGen 2500000 10000000 mog "$ROOT/boot" --window=0
 for d in 1 2 3 4 5; do
   lo=$(( (d-1) * 500000 )); hi=$(( d * 500000 ))
-  j gen-day$d graft.VectorGen $lo $hi mog "$ROOT/day$d" --window=$d
+  j gen-day$d graft.gen.VectorGen $lo $hi mog "$ROOT/day$d" --window=$d
 done
 
 j train graft.jobs.SemIndexJob train "$ROOT/boot" "$ROOT/index"

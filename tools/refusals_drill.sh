@@ -53,9 +53,9 @@ refuse() {  # a command that must FAIL LOUD with the expected message
 }
 
 rm -rf "$ROOT"; mkdir -p "$ROOT"
-ok gen-boot   graft.VectorGen 25000 100000 mog "$ROOT/boot" --window=0
-ok gen-day1   graft.VectorGen 0 12500 mog "$ROOT/day1" --window=1
-ok gen-day2   graft.VectorGen 12500 25000 mog "$ROOT/day2" --window=2
+ok gen-boot   graft.gen.VectorGen 25000 100000 mog "$ROOT/boot" --window=0
+ok gen-day1   graft.gen.VectorGen 0 12500 mog "$ROOT/day1" --window=1
+ok gen-day2   graft.gen.VectorGen 12500 25000 mog "$ROOT/day2" --window=2
 ok train      graft.jobs.SemIndexJob train "$ROOT/boot" "$ROOT/index"
 ok bootstrap  graft.jobs.SemIndexJob bootstrap "$ROOT/boot" "$ROOT/index" \
   "$ROOT/standing" "$ROOT/pairs_boot" $FLAGS
@@ -126,8 +126,8 @@ ok check-post graft.jobs.SemIndexJob check "$ROOT/boot" "$ROOT/index" \
 # R8: --retrain-defer through the CLI. pct=-100 fires the creep rule on
 # any tick that has a baseline (threshold = base × 0); the first armed
 # tick establishes the baseline, the second fires and must DEFER.
-ok gen-day3   graft.VectorGen 100000 112500 mog "$ROOT/day3" --window=3
-ok gen-day4   graft.VectorGen 112500 125000 mog "$ROOT/day4" --window=4
+ok gen-day3   graft.gen.VectorGen 100000 112500 mog "$ROOT/day3" --window=3
+ok gen-day4   graft.gen.VectorGen 112500 125000 mog "$ROOT/day4" --window=4
 ok day3-arm   graft.jobs.SemIndexJob day "$ROOT/day3" "$ROOT/index" \
   "$ROOT/standing" "$ROOT/pairs_day3" $FLAGS --auto-retrain=-100 \
   --retrain-defer --batch-id=d3
@@ -157,9 +157,9 @@ fi
 # fresh batch id — the refusal must come from the deferral bound, not
 # the landed-batch ledger.
 DFLAGS="$FLAGS --auto-retrain=-100 --retrain-defer --defer-limit=1 --defer-refuse"
-ok gen-f1     graft.VectorGen 125000 137500 mog "$ROOT/f1" --window=5
-ok gen-f2     graft.VectorGen 137500 150000 mog "$ROOT/f2" --window=6
-ok gen-f3     graft.VectorGen 150000 162500 mog "$ROOT/f3" --window=7
+ok gen-f1     graft.gen.VectorGen 125000 137500 mog "$ROOT/f1" --window=5
+ok gen-f2     graft.gen.VectorGen 137500 150000 mog "$ROOT/f2" --window=6
+ok gen-f3     graft.gen.VectorGen 150000 162500 mog "$ROOT/f3" --window=7
 ok day-f1-arm graft.jobs.SemIndexJob day "$ROOT/f1" "$ROOT/index" \
   "$ROOT/standing" "$ROOT/pairs_f1" $DFLAGS --batch-id=f1
 echo "=== day-f2-fire (expect retrain_due:true, retrain_overdue:false) ==="
