@@ -17,11 +17,7 @@ object Sinks {
     * tags). Readers get them back as epoch-ms longs via
     * [[graft.ops.Sources.readArchive]]. */
   def writeParquetArchive(txs: DataFrame, path: String): Unit = {
-    val spark = txs.sparkSession
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "TIMESTAMP_MILLIS")
-    try {
+    SessionConf.withConf(txs.sparkSession, OutputTimestampMillis) {
       val annotated = Seq("timestamp", "includedBlockTimestamp")
         .foldLeft(txs) { (df, c) =>
           if (df.columns.contains(c))
@@ -34,13 +30,11 @@ object Sinks {
         .option("parquet.page.size", (1024 * 1024).toString)
         .mode("overwrite")
         .parquet(path)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
+
+  /** The archive writers' epoch-ms columns as INT64 TIMESTAMP_MILLIS. */
+  private val OutputTimestampMillis = "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MILLIS"
 
   /** S11 extension: the reference's PER-DAY archive layout (README.md:82
     * — data uploads one UTC day at a time; scripts/upload.sh:50-66 runs
@@ -55,11 +49,7 @@ object Sinks {
     * row's receive timestamp. */
   def writeDailyArchive(rows: DataFrame, path: String,
       dayOf: org.apache.spark.sql.Column): Unit = {
-    val spark = rows.sparkSession
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "TIMESTAMP_MILLIS")
-    try {
+    SessionConf.withConf(rows.sparkSession, OutputTimestampMillis) {
       val annotated = Seq("timestamp", "includedBlockTimestamp")
         .foldLeft(rows.withColumn("day", dayOf)) { (df, c) =>
           if (df.columns.contains(c))
@@ -77,11 +67,6 @@ object Sinks {
         .partitionBy("day")
         .mode("overwrite")
         .parquet(path)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -116,20 +101,15 @@ object Sinks {
     val hconf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(hconf)
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "TIMESTAMP_MILLIS")
     // pin the scan split size to the compaction target (ADVICE r21): the
     // coalesce below merges SCAN SPLITS, so the output file size tracks
     // targetBytes only when splits are cut at targetBytes — at the session
     // default (128 MB) a non-default target (e.g. 8 MB) packed ~16 target
     // units into each split and coalesce emitted files many times the
     // target. Restored after the pass like the timestamp type.
-    val splitKey = "spark.sql.files.maxPartitionBytes"
-    val prevSplit = spark.conf.getOption(splitKey)
-    spark.conf.set(splitKey, targetBytes.toString)
-    recoverArchiveStaging(spark, path)
-    try {
+    SessionConf.withConf(spark, OutputTimestampMillis,
+        "spark.sql.files.maxPartitionBytes" -> targetBytes.toString) {
+      recoverArchiveStaging(spark, path)
       // walk to LEAF partition dirs (k=v segments holding parquet files
       // directly) at ANY nesting depth, so the same pass serves the
       // day=… archive and the hourly date=…/hour=… streaming layout
@@ -242,15 +222,6 @@ object Sinks {
               "compact: worker pool did not quiesce within 10 minutes")
             out
         }
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      prevSplit match {
-        case Some(v) => spark.conf.set(splitKey, v)
-        case None => spark.conf.unset(splitKey)
       }
     }
   }

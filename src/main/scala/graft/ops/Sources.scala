@@ -74,9 +74,11 @@ object Sources {
 
   /** J2 input: hashes from previous-day metadata CSVs (column 1;
     * common/txsfile.go:212-239). Headers are skipped by the hash-validity
-    * filter itself — positional, schema-free, like the reference. */
+    * filter itself — positional, like the reference. The fixed two-column
+    * schema reads any column count, and spares the job a schema-less read
+    * runs to count the first line's columns. */
   def readMetadataHashes(spark: SparkSession, paths: String*): DataFrame =
-    spark.read.csv(paths: _*)
+    spark.read.schema("_c0 STRING, _c1 STRING").csv(paths: _*)
       .select(lower(col("_c1")).as("hash"))
       .filter(validHash(col("hash")))
       .distinct()

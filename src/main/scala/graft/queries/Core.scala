@@ -176,9 +176,6 @@ object Core {
       // just by CollectStreamSpec's provider-parity test; the provider is
       // captured per query at start, and the session conf is restored so
       // the other streaming oracles keep exercising the default store.
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prevProvider = s.conf.getOption(key)
-      graft.streaming.Collect.useRocksDbState(s)
       // Fixture state LAYOUT, not an engine config (OPTIMIZATION_r22.md §5:
       // a one-shot 32-state-partition run pays ~6 s of per-instance store
       // setup/commit that 4 partitions do not — 8.0 -> 1.9 s warm minima;
@@ -188,23 +185,16 @@ object Core {
       // partitions still exercise the engine's PARTITIONED state path
       // (shuffle, per-partition RocksDB instances, watermark merge). A
       // deployment sizes state partitions to its corpus via the session
-      // conf, which is restored below.
-      val pKey = "spark.sql.shuffle.partitions"
-      val prevParts = s.conf.get(pKey)
-      s.conf.set(pKey, "4")
-      val q =
-        try graft.streaming.Collect.dedupStateful(
+      // conf, which is restored once the query has started.
+      import graft.streaming.Collect.{RocksDbProvider, StateStoreProvider}
+      val q = graft.ops.SessionConf.withConf(s, StateStoreProvider -> RocksDbProvider,
+          "spark.sql.shuffle.partitions" -> "4") {
+        graft.streaming.Collect.dedupStateful(
           graft.streaming.Collect.feed(s, s"$p/in"))
           .writeStream.format("memory").queryName(qn).outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        finally {
-          prevProvider match {
-            case Some(v) => s.conf.set(key, v)
-            case None => s.conf.unset(key)
-          }
-          s.conf.set(pKey, prevParts)
-        }
+      }
       try q.processAllAvailable() finally q.stop()
       s.table(qn).select("timestamp_ms", "hash", "raw_tx_hex", "source")
         .write.mode("overwrite").parquet(s"$p/out")
@@ -233,16 +223,13 @@ object Core {
       val qn = "stream_window_" + math.abs(p.hashCode).toString
       // same fixture state-layout choice as streamDedupResult (one-shot
       // throwaway-checkpoint run; exact counts are partition-independent)
-      val pKey = "spark.sql.shuffle.partitions"
-      val prevParts = s.conf.get(pKey)
-      s.conf.set(pKey, "4")
-      val q =
-        try graft.streaming.Collect.sourceMetrics(
+      val q = graft.ops.SessionConf.withConf(s, "spark.sql.shuffle.partitions" -> "4") {
+        graft.streaming.Collect.sourceMetrics(
           graft.streaming.Collect.feed(s, s"$p/in"))
           .writeStream.format("memory").queryName(qn).outputMode("complete")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        finally s.conf.set(pKey, prevParts)
+      }
       try q.processAllAvailable() finally q.stop()
       s.table(qn).select("minute", "source", "n_all")
         .write.mode("overwrite").parquet(s"$p/out")

@@ -107,15 +107,9 @@ object MempoolParse {
     * merge DAG's materializing actions only. AQE reads the conf at
     * EXECUTION time, which is why the wrapper surrounds the action, not
     * the plan construction. */
-  private def withMergeAqeFloor[A](s: SparkSession)(f: => A): A = {
-    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "64k")
-    try f finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  private def withMergeAqeFloor[A](s: SparkSession)(f: => A): A =
+    graft.ops.SessionConf.withConf(s,
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k")(f)
 
   def mergeOutput(s: SparkSession, dir: String): Merge.Output =
     SessionCaches.memoize(memo, (System.identityHashCode(s), dir), {

@@ -94,12 +94,10 @@ object SinkOracles {
       // hashpartitioning(hash, 4) — 4 partitions is the fixture's fixed
       // I/O shape (a ~14k-row sample into one embedded Derby endpoint;
       // the endpoint, not the cluster, is the bottleneck at any SF).
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val prevAqe = s.conf.get(aqeKey)
-      s.conf.set(aqeKey, "false")
       val (pinned, release) =
-        try DedupOps.checkpointReleasable(sample.repartition(4, col("hash")))
-        finally s.conf.set(aqeKey, prevAqe)
+        graft.ops.SessionConf.withConf(s, "spark.sql.adaptive.enabled" -> "false") {
+          DedupOps.checkpointReleasable(sample.repartition(4, col("hash")))
+        }
       // plan evidence hook (plans/r22): SPARK_GRAFT_DUMP_JDBC_PLAN=1
       // prints the exact frame each sink call dedups — after the pin it
       // must plan NO Exchange (the LogicalRDD carries hashpartitioning) —

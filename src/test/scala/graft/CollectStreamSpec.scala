@@ -1,15 +1,18 @@
 package graft
 
 import graft.functions.TxFixtures
+import graft.ops.SessionConf
 import graft.streaming.{Collect, FeedConnector, WsFraming}
 import java.nio.file.Files
+import org.apache.spark.JobCounter
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming collector semantics, driven synchronously: fixture CSV files
   * play the role of WS feed batches (spark_guide.md memory-sink pattern). */
-class CollectStreamSpec extends AnyFunSuite {
+class CollectStreamSpec extends AnyFunSuite with SessionLeakCheck {
   import CollectStreamSpec._
   private lazy val spark = SparkTestSession.spark
 
@@ -64,17 +67,14 @@ class CollectStreamSpec extends AnyFunSuite {
   }
 
   test("TTL dedup state is provider-agnostic: RocksDB emits the identical set") {
-    // The 100 TB state path: Collect.useRocksDbState switches the session
-    // to the disk-backed RocksDB provider (state bounded by disk, not
-    // executor heap). Both custom flatMapGroupsWithState state and the
+    // The 100 TB state path: the provider Collect.useRocksDbState sets
+    // switches the session to the disk-backed RocksDB store (state bounded
+    // by disk, not executor heap), here only for this test's queries. Both custom flatMapGroupsWithState state and the
     // built-in dropDuplicatesWithinWatermark must emit exactly the rows
     // the default HDFS-backed provider does.
     val in = Files.createTempDirectory("graft-feed-rdb").toString
     writeFeed(in, 200)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    Collect.useRocksDbState(spark)
-    try {
+    SessionConf.withConf(spark, Collect.StateStoreProvider -> Collect.RocksDbProvider) {
       val qs = Seq(
         Collect.dedupStateful(Collect.feed(spark, in))
           .writeStream.format("memory").queryName("dedup_rdb_state")
@@ -101,9 +101,6 @@ class CollectStreamSpec extends AnyFunSuite {
         assert(a.toSet == b.toSet && a.length == 180,
           s"RocksDB emission diverged: state=${a.length} builtin=${b.length}")
       } finally qs.foreach(_.stop())
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -259,6 +256,132 @@ class CollectStreamSpec extends AnyFunSuite {
     assert(rows(out) == ((refTx, refTrash)))
     assert(filesByBatch(out) == filesByBatch(ref))
     assert(!new java.io.File(s"$out/_staging/0").exists())
+  }
+
+  test("a replayed batch replaces its own files by name and leaves other batches' files") {
+    import graft.streaming.Collect.{dedupStateful, feed, startCollector}
+    import scala.jdk.CollectionConverters._
+    val in = Files.createTempDirectory("graft-feed-replay").toString
+    writeFeed(in, 120)
+    def drain(out: String, fault: Long => Unit): Unit = {
+      val q = startCollector(feed(spark, in), out, Trigger.AvailableNow(), None,
+        dedupStateful, fault)
+      try q.awaitTermination() finally q.stop()
+    }
+    /** Published data files under `dir` (relative path → text). */
+    def tree(dir: String): Map[String, String] = {
+      val root = java.nio.file.Paths.get(dir)
+      Files.walk(root).iterator().asScala.toSeq
+        .map(root.relativize)
+        .filter(p => Files.isRegularFile(root.resolve(p)) &&
+          !p.iterator().asScala.exists(s => s.toString.startsWith("_") || s.toString.startsWith(".")))
+        .map(p => p.toString -> Files.readString(root.resolve(p))).toMap
+    }
+
+    val ref = Files.createTempDirectory("graft-collect-replay-ref").toString
+    drain(ref, _ => ())
+    val out = Files.createTempDirectory("graft-collect-replay").toString
+    val trash = java.nio.file.Paths.get(out, "trash")
+    Files.createDirectories(trash)
+    // other batches' files, and a stale file for every task number batch 0
+    // can write (the session runs 4 shuffle partitions)
+    val others = Map("batch-1000-part-00000.csv" -> "1,0xother,src0,r,\n",
+      "batch-10-part-00002.csv" -> "2,0xother,src1,r,\n")
+    val old = java.nio.file.attribute.FileTime.fromMillis(1000000000000L)
+    others.foreach { case (name, body) =>
+      Files.setLastModifiedTime(Files.writeString(trash.resolve(name), body), old)
+    }
+    (0 until 4).foreach(k => Files.writeString(trash.resolve(f"batch-0-part-$k%05d.csv"), "stale\n"))
+    intercept[Exception](drain(out, _ => throw new IllegalStateException("injected crash")))
+    drain(out, _ => ())
+
+    val (got, want) = (tree(out), tree(ref))
+    assert(want.keySet.exists(_.startsWith("trash/batch-0-")))
+    assert(got == want ++ others.map { case (n, b) => s"trash/$n" -> b })
+    others.keys.foreach(n => assert(Files.getLastModifiedTime(trash.resolve(n)) == old))
+  }
+
+  test("a collector drain runs one Spark job per micro-batch and persists nothing") {
+    val in = Files.createTempDirectory("graft-feed-jobs").toString
+    val out = Files.createTempDirectory("graft-collect-jobs").toString
+    // 20 files of 10 rows: two data batches at 16 files a trigger
+    (0 until 20).foreach { f =>
+      Files.writeString(java.nio.file.Paths.get(f"$in/feed-$f%02d.csv"),
+        (f * 10 until f * 10 + 10).map { i =>
+          val (ts, hash, raw) = TxFixtures.rawRow(i.toLong)
+          s"$ts,$hash,$raw,src${i % 3}"
+        }.mkString("\n"))
+    }
+    val sc = spark.sparkContext
+    val pinnedBefore = sc.getPersistentRDDs.keySet.toSet
+    // (job group, batch id, RDDs persisted since the drain began) per job
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Set[Int])]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add((
+        e.properties.getProperty("spark.jobGroup.id"),
+        e.properties.getProperty("streaming.sql.batchId"),
+        sc.getPersistentRDDs.keySet.toSet -- pinnedBefore))
+    }
+    sc.addSparkListener(listener)
+    val q = try {
+      val q = Collect.runWith(Collect.feed(spark, in), out, Trigger.AvailableNow(),
+        Some(Seq("src0", "src1", "src2"))).head
+      try q.awaitTermination() finally q.stop()
+      JobCounter.settle(sc)
+      q
+    } finally sc.removeSparkListener(listener)
+
+    import scala.jdk.CollectionConverters._
+    val progress = q.recentProgress.toSeq
+    assert(progress.count(_.numInputRows > 0) == 2)
+    val mine = jobs.asScala.toSeq.filter(_._1 == q.runId.toString)
+    assert(mine.groupBy(_._2).map { case (b, js) => b -> js.size } ==
+      progress.map(_.batchId.toString -> 1).toMap)
+    assert(mine.forall(_._3.isEmpty))
+    assert((sc.getPersistentRDDs.keySet.toSet -- pinnedBefore).isEmpty)
+    // the plan's observations count each row once: 200 received, and the
+    // 180 unique hashes split into the two sinks' rows
+    def observed(stage: String) = progress.flatMap(p =>
+      Option(p.observedMetrics.get(s"graft_$stage"))).map(_.getAs[Long]("total")).sum
+    val txs = spark.read.csv(s"$out/transactions").count()
+    val trashRows = spark.read.csv(s"$out/trash").count()
+    assert(observed("received") == 200)
+    assert(observed("first") == txs && observed("trash") == trashRows && txs + trashRows == 180)
+  }
+
+  test("collector sink lines equal DataFrame.write.csv output of the same rows") {
+    import spark.implicits._
+    val ts = Some(java.sql.Timestamp.from(java.time.Instant.parse("2023-09-04T07:15:00Z")))
+    val rows = Seq[(Option[Long], Option[String], Option[String], Option[String],
+        Option[java.sql.Timestamp], Option[String])](
+      (Some(1L), Some("0xaa"), Some("0x01"), Some("a,b \"c\"\nd"), ts, None),
+      (Some(2L), None, Some("0x02"), None, ts, None),
+      (Some(3L), Some("0xcc"), Some("0x03"), Some(""), None, None),
+      (None, Some("0xbb"), Some("0x04"), Some("x,\"y\"\n"), ts, Some("decode-error")),
+      (Some(5L), None, None, None, ts, Some("signature-error")))
+      .toDF("timestamp_ms", "hash", "raw_tx_hex", "source", "ts", "reason")
+      .withColumn("id", monotonically_increasing_id())
+    val dir = Files.createTempDirectory("graft-sink-lines")
+    rows.select("id").as[Long].collect().foreach { id =>
+      val one = rows.filter(col("id") === id)
+      val base = dir.resolve(id.toString)
+      // the per-sink writes the collector ran before it wrote both in one pass
+      one.filter(col("reason").isNull)
+        .select(col("timestamp_ms"), col("hash"), col("raw_tx_hex"), col("source"),
+          date_format(col("ts"), "yyyy-MM-dd").as("date"),
+          date_format(col("ts"), "HH").as("hour"))
+        .write.partitionBy("date", "hour").csv(base.resolve("transactions").toString)
+      one.filter(col("reason").isNotNull)
+        .select(col("timestamp_ms"), col("hash"), col("source"),
+          col("reason"), lit("").as("notes"))
+        .write.csv(base.resolve("trash").toString)
+      import scala.jdk.CollectionConverters._
+      val Seq(file) = Files.walk(base).iterator().asScala.toSeq.filter(p =>
+        Files.isRegularFile(p) && p.getFileName.toString.startsWith("part-") && Files.size(p) > 0)
+      val Array(line) = Collect.sinkLines(one).collect()
+      assert(line.getString(0) == base.relativize(file.getParent).toString)
+      assert(line.getString(1) + "\n" == Files.readString(file))
+    }
   }
 
   test("collector refuses an output dir that holds per-sink checkpoints") {
@@ -992,14 +1115,12 @@ class CollectStreamSpec extends AnyFunSuite {
     // the collector as the benchmark wires it: one query, so one of each
     // kernel in the whole collector; without no-data batches the last
     // execution is the batch that read the feed
-    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.getOption(noData)
-    val queries = try {
-      spark.conf.set(noData, "false")
-      Collect.runWith(Collect.decodeEnvelopes(Collect.envelopeFeed(spark, in)),
-        out, Trigger.AvailableNow(), Some(Seq("bloxroute", "eden", "local")),
-        Collect.dedupStateful)
-    } finally prev.fold(spark.conf.unset(noData))(spark.conf.set(noData, _))
+    val queries =
+      SessionConf.withConf(spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+        Collect.runWith(Collect.decodeEnvelopes(Collect.envelopeFeed(spark, in)),
+          out, Trigger.AvailableNow(), Some(Seq("bloxroute", "eden", "local")),
+          Collect.dedupStateful)
+      }
     try {
       assert(queries.size == 1 && spark.streams.active.toSeq.map(_.id) == queries.map(_.id))
       queries.foreach(_.processAllAvailable())

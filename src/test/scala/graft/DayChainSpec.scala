@@ -25,7 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * output resolves same-hash re-sends exactly like the batch merge's A1
   * rule — the property that makes collect→merge commute with merge-alone.
   */
-class DayChainSpec extends AnyFunSuite {
+class DayChainSpec extends AnyFunSuite with SessionLeakCheck {
   private lazy val spark = SparkTestSession.spark
 
   test("collect → merge → analyze → website: chained day equals the direct merge") {

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan shape assertions — the properties that make the engine
@@ -10,9 +11,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * files read, dimension joins broadcast, and bucketed tables join
   * without a shuffle.
   */
-class ScalePlanSpec extends AnyFunSuite {
+class ScalePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
+
+  override def afterAll(): Unit =
+    try {
+      queries.SessionCaches.releaseAll(spark)
+      spark.catalog.clearCache()
+    } finally super.afterAll()
 
   /** Final (post-AQE) physical plan as text. */
   private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {

@@ -60,6 +60,40 @@ class SourcesSpec extends AnyFunSuite {
     assert(slBack.count() > 0)
   }
 
+  test("readMetadataHashes: column-1 hashes of metadata, two-column, one-column and junk files") {
+    val dir = Files.createTempDirectory("graft-meta-hashes").toString
+    val h = (0 until 8).map(i => TxFixtures.rawRow(i.toLong)._2)
+    def write(name: String, lines: Seq[String]): String = {
+      Files.writeString(Paths.get(s"$dir/$name"), lines.mkString("\n") + "\n")
+      s"$dir/$name"
+    }
+    def meta(i: Int): String = (Seq("1693785600000", h(i)) ++
+      Seq.fill(Sinks.MetadataCsvColumns.size - 2)("x")).mkString(",")
+    val inputs = Seq(
+      // the merge job's own metadata CSV: header, 18 columns, hash at column 1
+      write("meta.csv", Sinks.MetadataCsvColumns.mkString(",") +: Seq(meta(0), meta(1), meta(2))) ->
+        Set(h(0), h(1), h(2)),
+      // two columns, one hash in upper case
+      write("two.csv", Seq(s"1,${h(3)}", s"2,0x${h(4).drop(2).toUpperCase}")) -> Set(h(3), h(4)),
+      // the first line sets the column count; later lines have one column
+      write("one.csv", Seq(s"1,${h(5)}", h(6), "7")) -> Set(h(5)),
+      // blank and junk lines around one valid row
+      write("junk.csv", Seq("a,b,c", "", "x", ",,", "  ", s"9,${h(7)},z", "0xzz,not-a-hash", "\"")) ->
+        Set(h(7)))
+    inputs.foreach { case (path, want) =>
+      // the fixed schema spares the job that counts the first line's columns
+      val (df, jobs) = JobCounter(spark.sparkContext)(Sources.readMetadataHashes(spark, path))
+      assert(jobs == 0, path)
+      val got = df.collect().map(_.getString(0)).toSet
+      assert(got == want, path)
+    }
+    // a file with no column 1 at all has no hashes
+    assert(Sources.readMetadataHashes(spark, write("only.csv", Seq(h(6), "7"))).isEmpty)
+    val all = Sources.readMetadataHashes(spark, inputs.map(_._1): _*)
+      .collect().map(_.getString(0)).toSeq
+    assert(all.sorted == inputs.flatMap(_._2).distinct.sorted)
+  }
+
   test("S2: csv-in-zip archives read identically to plain csv") {
     val dir = Files.createTempDirectory("graft-zip").toString
     val lines = (0 until 80).map { i =>

@@ -13,4 +13,7 @@ object JobCounter {
     sc.listenerBus.waitUntilEmpty()
     (out, sc.statusTracker.getJobIdsForGroup(group).length)
   }
+
+  /** Returns once every event posted so far has reached the listeners. */
+  def settle(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
