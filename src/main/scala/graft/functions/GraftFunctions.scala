@@ -50,10 +50,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
       (exprs: Seq[Expression]) => VecDot(exprs.head, exprs(1))))
     e.injectFunction((
-      new FunctionIdentifier("vec_d2_dec"),
-      new ExpressionInfo(classOf[VecD2Dec].getName, "vec_d2_dec"),
-      (exprs: Seq[Expression]) => VecD2Dec(exprs.head, exprs(1))))
-    e.injectFunction((
       new FunctionIdentifier("vec_nearest"),
       new ExpressionInfo(classOf[VecNearest].getName, "vec_nearest"),
       (exprs: Seq[Expression]) => VecNearest(exprs.head, exprs(1))))
@@ -128,8 +124,6 @@ object GraftFunctions {
       "keccak256", exprs => Keccak256Expr(exprs.head), "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "vec_dot", exprs => VecDot(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_d2_dec", exprs => VecD2Dec(exprs.head, exprs(1)), "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "vec_nearest", exprs => VecNearest(exprs.head, exprs(1)), "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

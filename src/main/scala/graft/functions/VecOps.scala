@@ -74,91 +74,6 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
     copy(left = newLeft, right = newRight)
 }
 
-/** Exact-decimal squared euclidean distance between two vectors in one
-  * codegen pass: `vec_d2_dec(a, b)` → DECIMAL(38,12). Each per-dim term
-  * is computed EXACTLY as the per-dim-exploded oracle-twin chains did —
-  * `CAST((v − cv) * (v − cv) AS DECIMAL(28,12))`: double arithmetic,
-  * then the non-ansi HALF_UP decimal cast (NaN/∞/overflow → null, which
-  * SUM skipped) — and the terms are folded with exact java BigDecimal
-  * addition. Decimal addition is exact at a fixed scale, so any fold
-  * order reproduces `SUM(CAST(... AS DECIMAL(28,12)))` bit-for-bit,
-  * including its DECIMAL(38,12) result type and its all-null → NULL
-  * degenerate. The payoff: the d² table is computed on one row per
-  * (vector, centroid) instead of one per (vector, centroid, dim) — the
-  * n·dims·k explode through a decimal HashAggregate was the largest
-  * intermediate of every exact-twin training chain. The degenerate-term
-  * branches implement the NON-ANSI cast (null-skip, never throw)
-  * regardless of session ANSI mode — the twin fixture data never
-  * produces such a term (the driver's hash gate proves it), and
-  * VecD2DecSpec pins the fold against the non-ansi exploded sum. */
-case class VecD2Dec(left: Expression, right: Expression) extends BinaryExpression {
-
-  private def elemOk(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (elemOk(left.dataType) && elemOk(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"vec_d2_dec requires array<float|double> inputs, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-
-  override def dataType: DataType = DecimalType(38, 12)
-  override def nullable: Boolean = true
-  override def prettyName: String = "vec_d2_dec"
-
-  private def isFloat(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    VecD2DecOps.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData],
-      isFloat(left), isFloat(right))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |${ev.value} = graft.functions.VecD2DecOps.compute(
-         |  $a, $b, ${isFloat(left)}, ${isFloat(right)});
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin)
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): VecD2Dec =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Term cast + exact fold for [[VecD2Dec]] (static so generated code can
-  * call straight in). Mirrors Spark's non-ansi double→decimal Cast for
-  * each term, then exact BigDecimal addition and the SUM result check. */
-object VecD2DecOps {
-  def compute(a: ArrayData, b: ArrayData,
-      lf: Boolean, rf: Boolean): org.apache.spark.sql.types.Decimal = {
-    val n = math.min(a.numElements(), b.numElements())
-    var sum: java.math.BigDecimal = null
-    var i = 0
-    while (i < n) {
-      val x = if (lf) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (rf) b.getFloat(i).toDouble else b.getDouble(i)
-      val d = x - y
-      val t = d * d
-      // non-ansi CAST(double AS DECIMAL(28,12)): NaN/∞ → null,
-      // HALF_UP round to scale 12, overflow → null; SUM skips nulls
-      if (!java.lang.Double.isNaN(t) && !java.lang.Double.isInfinite(t)) {
-        val dec = org.apache.spark.sql.types.Decimal(t)
-        if (dec.changePrecision(28, 12))
-          sum = if (sum == null) dec.toJavaBigDecimal else sum.add(dec.toJavaBigDecimal)
-      }
-      i += 1
-    }
-    if (sum == null) null // every term null → SUM's NULL
-    else {
-      val out = org.apache.spark.sql.types.Decimal(sum)
-      if (out.changePrecision(38, 12)) out else null // SUM's overflow NULL
-    }
-  }
-}
-
 /** Nearest-centroid argmin in one codegen pass: `vec_nearest(e, cm)` with
   * cm an array<struct<c: long, m: array<float|double>>> returns the c
   * minimizing (d², c) lexicographically, where d² is evaluated with the
@@ -539,10 +454,6 @@ object VecOps {
     * [[GraftFunctions.register]] (or the GraftExtensions session
     * extension) on the session, which is idempotent. */
   def vec_dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
-
-  /** Column API: exact-decimal squared distance (the oracle-twin SUM of
-    * per-dim DECIMAL(28,12) terms, folded array-native). */
-  def vec_d2_dec(a: Column, b: Column): Column = call_function("vec_d2_dec", a, b)
 
   /** Column API: argmin-(d², c) over an array<struct<c, m>> centroid set
     * — the min(struct(d2, c)) assignment without the n·k expansion. */

@@ -135,23 +135,6 @@ object DedupOps {
     })
   }
 
-  /** The same (doc_id, sh[, extra…]) table, NOT persisted and NOT
-    * memoized — the disk-bound-regime twin of [[minhashBase]], used by
-    * the pruned pair builders: in the regime pruneVerify exists for,
-    * the O(corpus) DISK_ONLY shingle cache is itself a leading scratch
-    * consumer (~25–30 GB at 10 M docs) that coexists on one local disk
-    * with the verify exchanges it feeds, and the base has exactly three
-    * bounded consumers there (the spine banding, the hot-bucket
-    * banding, the pruned verify) — re-running the scan-local shingle
-    * pass three times is minutes of CPU; spilling the cache is the
-    * ENOSPC. Below that regime the cached base stays the right trade
-    * (the r12 measurements on [[minhashBase]]). */
-  private def minhashBaseUncached(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val extra = docs.columns.filter(c => c != "doc_id" && c != "text").map(col)
-    docs.select(col("doc_id") +: shingles(col("text")).as("sh") +: extra.toSeq: _*)
-  }
-
   /** Release EVERY memoized shingle base for `s` — for callers that
     * create bases on frames they never see (minhashPairsAgainstIndex
     * shingles an internal `touchedExisting` semi-join; a K-day ingest
@@ -165,7 +148,7 @@ object DedupOps {
     // the internal frames persistTracked pins ride the same sweep
     // (ADVICE r18): the CALLER never sees them to release them.
     pinnedMemo.keys.filter(_._1 == sid)
-      .foreach(k => SessionCaches.release(s, s"dedup.touched:${k._2}"))
+      .foreach(k => SessionCaches.release(s, s"dedup.pinned:${k._2}"))
   }
 
   private val pinnedMemo =
@@ -173,23 +156,29 @@ object DedupOps {
   private val pinnedSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Eager `persist(MEMORY_AND_DISK)` + count of an internal frame —
-    * [[verifyPruned]]'s touched ids and [[minhashPairsAgainstIndex]]'s
-    * candidate pairs — tracked so the [[releaseAllMinhashBases]] sweep
-    * (or session end) unpersists it; a K-day loop otherwise retained K
-    * pins for the session's lifetime. Keyed by a per-call sequence, not
-    * a plan hash. Returns the frame, its row count and an idempotent
-    * early-release thunk. A cache, not a localCheckpoint: the plan keeps
-    * its lineage, so a release before a consumer's action costs that
-    * action a recompute, never a "Checkpoint block not found". */
-  private def persistTracked(df: DataFrame): (DataFrame, Long, () => Unit) = {
+    * [[minhashPairsAgainstIndex]]'s candidate pairs — tracked so the
+    * [[releaseAllMinhashBases]] sweep (or session end) unpersists it; a
+    * K-day loop otherwise retained K pins for the session's lifetime.
+    * Keyed by a per-call sequence, not a plan hash. Returns the frame and
+    * an idempotent early-release thunk. A cache, not a localCheckpoint:
+    * the plan keeps its lineage, so a release before a consumer's action
+    * costs that action a recompute, never a "Checkpoint block not
+    * found". Calls on semantically equal plans share ONE CacheManager
+    * entry, so it is unpersisted only with the last of their pins. */
+  private def persistTracked(df: DataFrame): (DataFrame, () => Unit) = {
     val s = df.sparkSession
     val t = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = t.count()
+    t.count()
     val key = (System.identityHashCode(s), pinnedSeq.incrementAndGet())
     pinnedMemo.put(key, t)
-    SessionCaches.onRelease(s, s"dedup.touched:${key._2}")(() =>
-      pinnedMemo.remove(key).foreach(_.unpersist(false)))
-    (t, n, () => SessionCaches.release(s, s"dedup.touched:${key._2}"))
+    SessionCaches.onRelease(s, s"dedup.pinned:${key._2}")(() =>
+      pinnedMemo.remove(key).foreach { mine =>
+        val plan = mine.queryExecution.analyzed
+        if (!pinnedMemo.exists { case (k, other) =>
+            k._1 == key._1 && other.queryExecution.analyzed.sameResult(plan) })
+          mine.unpersist(false)
+      })
+    (t, () => SessionCaches.release(s, s"dedup.pinned:${key._2}"))
   }
 
   /** LSH banding rows (doc_id, band, bucket[, extra…]) via the scan-local
@@ -232,131 +221,8 @@ object DedupOps {
       .filter(col("jaccard") >= 0.6)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard_r"))
 
-  /** Verify-side pruning for the full-batch and inline-incremental pair
-    * builders: exact verification only ever reads shingle rows for docs
-    * that appear in a candidate, so the corpus-sized base is semi-joined
-    * to the candidate-touched id set before [[minhashVerify]]'s
-    * sort-merge — the two verify-side exchanges then carry only touched
-    * docs' shingle arrays instead of the whole corpus's. This aggregate
-    * shuffle volume is what ENOSPC'd the 5 M-doc daily-loop bootstrap on
-    * one local disk (README "Measured scale"); on a cluster it is the
-    * dominant verify cost at any size. The touched set is bare doc_ids
-    * (tens of MB at near-dup rates even at 10 M docs), statically
-    * broadcast — see the comment on the join below for why the adaptive
-    * shapes don't work here. Inner-join semantics make this a pure
-    * pruning: base rows without a candidate partner contribute nothing
-    * to the verify output.
-    *
-    * The touched set comes from [[hotBucketMembers]], NOT from the
-    * candidate pairs' endpoints: a `cand`-derived id set re-evaluates
-    * the bucket self-join inside both verify branches — measured 2.5×
-    * the WHOLE pipeline's wall at 1 M docs (boot 48.5 → 123.7 s, full
-    * re-pair 59.6 → 154.0 s) before this was caught. */
-  /** Ceiling on the broadcast-able touched-id set (ADVICE r17): the
-    * "tens of MB" bound on `touched` holds at the near-dup rates of
-    * every measured corpus, but it is a RATE assumption, not a law — a
-    * pathological corpus where most docs collide pushes the touched set
-    * toward corpus size, and an unbounded `broadcast()` there dies as a
-    * driver/executor OOM or the 8 GiB broadcast hard limit instead of a
-    * clean decision. 64 M bare long ids ≈ 0.5 GiB raw, ~1–2 GiB as a
-    * built broadcast relation — comfortably inside the limit and a
-    * typical driver heap, and far above any measured touched set
-    * (10 M docs: ~1.9 M ids). Past it [[verifyPruned]] falls back to
-    * the unpruned sort-merge verify (result-identical; the pruning is
-    * pointless anyway once most of the base is touched). */
-  private[graft] val TouchedBroadcastMaxIds = 64000000L
-
-  /** Driver-collect budget per broadcast id (ADVICE r18): building the
-    * static broadcast COLLECTS the id rows to the driver, and that
-    * collect is gated by `spark.driver.maxResultSize` (1g default) —
-    * none of the launchers raise it, so a set well under the 64 M
-    * static ceiling could still abort there, making the planned
-    * fallback unreachable before the failure it exists to prevent.
-    * [[touchedBroadcastCeiling]] therefore derives the effective
-    * ceiling from the session's OWN maxResultSize at 24 bytes/id — a
-    * deliberate over-estimate of the serialized single-long UnsafeRow
-    * (16 B data + block bookkeeping, pre-compression), so the guard
-    * fires strictly BEFORE the collect can die (1g default → ~44.7 M
-    * ids, under the static ceiling). */
-  private[graft] val TouchedBroadcastBytesPerId = 24L
-
-  /** Effective broadcast ceiling: the static [[TouchedBroadcastMaxIds]]
-    * bound (heap/8 GiB-limit driven) capped by what the session's
-    * `spark.driver.maxResultSize` can actually collect. `maxResultSize
-    * <= 0` means unlimited (Spark's own convention) — only the static
-    * ceiling applies. Spec-pinned (IncrementalDedupSpec). */
-  private[graft] def touchedBroadcastCeiling(maxResultSizeBytes: Long,
-      staticCeiling: Long = TouchedBroadcastMaxIds): Long =
-    if (maxResultSizeBytes <= 0) staticCeiling
-    else math.min(staticCeiling,
-      maxResultSizeBytes / TouchedBroadcastBytesPerId)
-
-  private[graft] def verifyPruned(cand: DataFrame, base: DataFrame,
-      touched: DataFrame,
-      maxBroadcastIds: Long = TouchedBroadcastMaxIds): DataFrame = {
-    // STATIC broadcast of the id set, not a shuffled semi: past the
-    // auto-broadcast threshold (~10 MB of ids, reached between 3 M and
-    // 5 M docs) the planner's sort-merge semi SORTS the full
-    // array-carrying base, and even a shuffle_hash hint still lands the
-    // base's full map-side shuffle on disk before AQE can act — the 5 M
-    // oracle stage ENOSPC'd on each in turn with the pruning otherwise
-    // in place. Broadcasting touched is the only shape where the
-    // corpus-sized base never exchanges for the semi at all. The
-    // broadcast is bare doc_ids of candidate-touched docs — bounded by
-    // the near-dup candidate rate, tens of MB at 5 M docs.
-    //
-    // The id set is pinned BEFORE the size gate counts it, so the
-    // count and the broadcast read the same materialization (one
-    // banding-aggregate evaluation either way, no second corpus pass)
-    // and a beyond-ceiling set is detected before any broadcast build
-    // starts (ADVICE r17 — the guard turns a mid-broadcast OOM into a
-    // planned fallback). The eager pin is also why plan CONSTRUCTION
-    // through this path runs Spark jobs (a banding pass) — inherent to
-    // deciding broadcast-vs-fallback before the plan is returned;
-    // plan-shape-only callers eat that cost once.
-    //
-    // The pin outlives this call (the returned plan broadcasts it); the
-    // releaseAllMinhashBases sweep or session end drops it.
-    val (t, nTouched, releaseEarly) = persistTracked(touched)
-    // cap by what the driver can actually collect (ADVICE r18)
-    val ceiling = touchedBroadcastCeiling(
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        touched.sparkSession.sparkContext.getConf
-          .get("spark.driver.maxResultSize", "1g")),
-      maxBroadcastIds)
-    if (nTouched > ceiling) {
-      println(s"[dedup] touched id set ($nTouched ids) exceeds the " +
-        s"broadcast ceiling ($ceiling) — falling back to the " +
-        "unpruned sort-merge verify (result-identical)")
-      releaseEarly() // the fallback has no consumer for the id set
-      minhashVerify(cand, base)
-    } else
-      minhashVerify(cand, base.join(broadcast(t), Seq("doc_id"), "left_semi"))
-  }
-
-  /** Doc ids that appear in at least one banded candidate pair, derived
-    * from the banding rows ALONE (one aggregate — no bucket self-join):
-    * ids are unique within a (band, bucket) group (a doc contributes one
-    * bucket per band), so a doc is a candidate endpoint iff some bucket
-    * of its has ≥ 2 members — and, when candidates are restricted to
-    * fresh-touching pairs (`needFresh`), iff that bucket also holds ≥ 1
-    * fresh doc (an existing member then pairs with the fresh one; a
-    * fresh member pairs with any other). Exactly the candidate-endpoint
-    * set in both regimes, not an over-approximation. */
-  private def hotBucketMembers(banded: DataFrame,
-      needFresh: Boolean): DataFrame = {
-    val g = banded.groupBy("band", "bucket")
-    val hot = (if (needFresh)
-        g.agg(count(lit(1)).as("c"), max(col("fresh")).as("hf"))
-          .filter(col("c") > 1 && col("hf"))
-      else g.agg(count(lit(1)).as("c")).filter(col("c") > 1))
-      .select("band", "bucket")
-    banded.join(hot, Seq("band", "bucket"), "left_semi")
-      .select("doc_id").distinct()
-  }
-
   /** Verify-side base with each shingle replaced by its 64-bit xxhash
-    * (r18): the pruned regime's remaining scratch hog is the exact-verify
+    * (r18): the index probe's scratch hog is the exact-verify
     * exchanges, which sort/shuffle the TOUCHED docs' full shingle arrays
     * — ~15 KB/doc as strings, and on the planted corpora ~20 % of docs
     * are touched, so at 15 M docs the sort spill alone blew the 80 GB
@@ -373,56 +239,7 @@ object DedupOps {
   private def hashShingles(base: DataFrame): DataFrame =
     base.withColumn("sh", expr("transform(sh, x -> xxhash64(x))"))
 
-  /** The pruned regime re-evaluates the UNCACHED base in three branches
-    * (spine banding, hot-bucket banding, pruned verify) and relies on
-    * `docs` producing identical rows each time — a non-deterministic
-    * input (sample/rand-derived) would hand the candidate endpoints and
-    * the touched set inconsistent corpora and silently drop pairs, a
-    * failure mode the unpruned DISK_ONLY cache structurally prevented
-    * (ADVICE r17). Fail LOUD at plan-build time instead: callers
-    * localCheckpoint such frames first (the checkpoint pins the rows
-    * and its LogicalRDD plan passes this check). */
-  private def requireDeterministicForPruning(docs: DataFrame): Unit = {
-    import org.apache.spark.sql.catalyst.plans.logical.{
-      GlobalLimit, LocalLimit, Sample}
-    val analyzed = docs.queryExecution.analyzed
-    val ndExpr = analyzed.collect {
-      case p if p.expressions.exists(e => !e.deterministic) => p.nodeName
-    }
-    // plan-LEVEL nondeterminism the expression scan is blind to
-    // (VERDICT r18 item 3): Sample's row membership and an unordered
-    // Limit's row choice are functions of upstream PARTITIONING, not
-    // just of a seed — a shuffle boundary that plans differently
-    // between the three base re-evaluations (AQE coalescing, a changed
-    // parallelism) hands them different row sets with every expression
-    // still "deterministic". Both are rejected; the remedy is the same
-    // localCheckpoint (which pins the rows as a LogicalRDD).
-    //
-    // DELIBERATELY over-rejecting (ADVICE r19): orderBy(...).limit(n)
-    // is also refused even though it LOOKS stable — a sort by a
-    // NON-UNIQUE key still leaves the rows at the cut boundary chosen
-    // by tie-break, which follows partitioning, and key uniqueness
-    // isn't provable from the plan. The error message names the
-    // conservatism and the remedy so a sorted-limit caller isn't left
-    // guessing.
-    val ndNode = analyzed.collect {
-      case _: Sample => "Sample"
-      case _: GlobalLimit => "GlobalLimit"
-      case _: LocalLimit => "LocalLimit"
-    }
-    val nd = (ndExpr ++ ndNode).distinct
-    require(nd.isEmpty,
-      s"pruneVerify re-evaluates its input plan multiple times and " +
-        s"requires a deterministic frame; non-deterministic operator(s) " +
-        s"found: ${nd.mkString(", ")} — localCheckpoint() the input " +
-        "before pruning (or run with pruneVerify = false). Note: " +
-        "Limit is refused even under a Sort — ties at the cut of a " +
-        "non-unique ordering still follow partitioning, and key " +
-        "uniqueness is not provable from the plan; the localCheckpoint " +
-        "remedy covers sorted limits too")
-  }
-
-  /** THE banded candidate construction — one definition for the five
+  /** THE banded candidate construction — one definition for the three
     * builders (review r19: the block was copy-pasted across every
     * builder, so a change to candidate semantics had to land identically
     * in 4–6 places or the spec-pinned builder equalities silently
@@ -450,59 +267,14 @@ object DedupOps {
     * q_dedup_minhash (over the planted corpus) and measured on
     * million-doc synthetic corpora ([[graft.gen.docText]]). Returns
     * (doc_a, doc_b, jaccard_r ≥ 0.6), candidates banded and
-    * exact-verified.
-    *
-    * `pruneVerify` is the big-corpus regime, result-identical either
-    * way (pruning only drops base rows the inner verify join ignores;
-    * IncrementalDedupSpec asserts equality): ON, the verify exchanges
-    * carry only candidate-touched docs' shingle arrays (the id set
-    * statically broadcast, [[hotBucketMembers]]/[[verifyPruned]]) and
-    * the base runs uncached ([[minhashBaseUncached]]) — extra
-    * signature passes bought disk headroom AND wall at every measured
-    * scale (1 M boot 42.8 s vs 48.5 unpruned, within box noise; 5 M
-    * 187.9 s vs ENOSPC; 10 M end-to-end, README "Measured scale").
-    * OFF (default) keeps the MEMOIZED shingle cache, which the
-    * verify-SF query surface shares across q_dedup_minhash /
-    * q_dedup_incremental / the index twin in one session — at those
-    * sizes the cache sharing is worth more than the pruning, and the
-    * default plan stays byte-stable for the oracle suite. */
+    * exact-verified against the MEMOIZED shingle cache, which
+    * q_dedup_minhash / q_dedup_incremental / the index twin share in one
+    * session. */
   private[graft] def minhashPairsFromDocs(
-      s: SparkSession, docs: DataFrame,
-      pruneVerify: Boolean = false): DataFrame = {
-    // pruned regime = disk-bound regime: skip the O(corpus) DISK_ONLY
-    // shingle cache too (see [[minhashBaseUncached]])
-    if (pruneVerify) requireDeterministicForPruning(docs)
-    val base = if (pruneVerify) minhashBaseUncached(s, docs)
-      else minhashBase(s, docs)
+      s: SparkSession, docs: DataFrame): DataFrame = {
+    val base = minhashBase(s, docs)
     val banded = minhashBanded(base)
-    val cand = bandedCandidates(banded, banded, fullSelfJoin = true)
-    if (pruneVerify)
-      verifyPruned(cand, hashShingles(base),
-        hotBucketMembers(banded, needFresh = false))
-    else minhashVerify(cand, base)
-  }
-
-  /** The pruned full-batch pairing fed from an ALREADY-MATERIALIZED band
-    * index instead of re-banding the corpus (r18): the daily loop (and a
-    * production deployment) persists the banding rows as the standing
-    * index anyway, and [[minhashPairsFromDocs]]'s pruned shape was
-    * re-deriving the identical rows from scratch — one full
-    * shingle+sign pass plus the banding exchange, in the regime where
-    * every corpus pass is minutes. Here the candidate self-join and the
-    * touched-id set both read the persisted `banded` rows (doc_id,
-    * band, bucket — bit-identical to [[minhashIndex]] output on `docs`
-    * by construction), and only the exact verify still shingles, off
-    * the uncached base through the broadcast-pruned semi. Pruned
-    * semantics are forced: this entry point exists only for the
-    * disk-bound regime that persists indexes. Result-identical to
-    * [[minhashPairsFromDocs]] (spec-pinned). */
-  private[graft] def minhashPairsFromIndex(
-      s: SparkSession, docs: DataFrame, banded: DataFrame): DataFrame = {
-    requireDeterministicForPruning(docs)
-    // verify-only consumer → hashed shingles (see [[hashShingles]])
-    val base = hashShingles(minhashBaseUncached(s, docs))
-    val cand = bandedCandidates(banded, banded, fullSelfJoin = true)
-    verifyPruned(cand, base, hotBucketMembers(banded, needFresh = false))
+    minhashVerify(bandedCandidates(banded, banded, fullSelfJoin = true), base)
   }
 
   /** Incremental near-dup pairing: every pair TOUCHING a `fresh` doc
@@ -515,40 +287,23 @@ object DedupOps {
     * Same candidate bound per bucket, and the bucket join volume scales
     * with |fresh|, not |existing∪fresh|. */
   private[graft] def minhashPairsIncremental(
-      s: SparkSession, existing: DataFrame, fresh: DataFrame,
-      pruneVerify: Boolean = false): DataFrame = {
+      s: SparkSession, existing: DataFrame, fresh: DataFrame): DataFrame = {
     val all = existing.select(col("doc_id"), col("text"), lit(false).as("fresh"))
       .union(fresh.select(col("doc_id"), col("text"), lit(true).as("fresh")))
-    if (pruneVerify) requireDeterministicForPruning(all)
-    val base = if (pruneVerify) minhashBaseUncached(s, all)
-      else minhashBase(s, all)
+    val base = minhashBase(s, all)
     val banded = minhashBanded(base)
     // probe side: fresh only; build side: everything — a pair of two
     // existing docs can never form
     val cand = bandedCandidates(banded.filter(col("fresh")), banded,
       fullSelfJoin = false)
-    if (pruneVerify)
-      verifyPruned(cand, hashShingles(base).drop("fresh"),
-        hotBucketMembers(banded, needFresh = true))
-    else minhashVerify(cand, base.drop("fresh"))
+    minhashVerify(cand, base.drop("fresh"))
   }
 
   /** The banding rows (doc_id, band, bucket) of a corpus — what a
     * production deployment persists per ingested batch as the standing
-    * LSH index. `uncachedBase` (ADVICE r17): in the pruned/disk-bound
-    * regime the caller is about to persist the INDEX itself, the base
-    * has exactly this one consumer, and routing it through the memoized
-    * [[minhashBase]] would transiently materialize the O(corpus)
-    * DISK_ONLY shingle cache the pruned builders were redesigned to
-    * avoid (~25–30 GB at 10 M docs, coexisting with the checkpointed
-    * bootstrap pairs at peak) — same rationale as
-    * [[minhashBaseUncached]]. Leave it false where the session shares
-    * the cache across consumers (the verify-SF query surface, the
-    * daily append whose batch base is reused by the probe). */
-  private[graft] def minhashIndex(s: SparkSession, docs: DataFrame,
-      uncachedBase: Boolean = false): DataFrame =
-    minhashBanded(if (uncachedBase) minhashBaseUncached(s, docs)
-      else minhashBase(s, docs)).select("doc_id", "band", "bucket")
+    * LSH index. */
+  private[graft] def minhashIndex(s: SparkSession, docs: DataFrame): DataFrame =
+    minhashBanded(minhashBase(s, docs)).select("doc_id", "band", "bucket")
 
   /** The production incremental shape: a fresh batch against a PERSISTED
     * band index — nothing about the standing corpus is recomputed except
@@ -575,21 +330,21 @@ object DedupOps {
     // pinned (review r19): cand feeds the final verify join AND —
     // via `touched` below — the semi that selects which existing docs
     // get shingled, so left lazy the freshBanded×index probe join
-    // re-evaluates in every consumer (the cand-derived re-evaluation
-    // trap [[verifyPruned]]'s scaladoc documents, measured 2.5× there).
-    // Registry-tracked like the touched sets: the daily loop's per-tick
+    // re-evaluates in every consumer (a cand-derived id set measured
+    // 2.5× the whole pipeline's wall at 1 M docs).
+    // Registry-tracked: the daily loop's per-tick
     // releaseAllMinhashBases sweep frees it after the tick's pairs are
     // materialized; the release thunk is ALSO surfaced to the caller
     // (VERDICT r19 item 4) for sweep-less library sessions.
-    val (cand, _, releaseCand) = persistTracked(
+    val (cand, releaseCand) = persistTracked(
       bandedCandidates(freshBanded, allBanded, fullSelfJoin = false))
     // verify reads shingles for fresh docs from the batch and, for the
     // existing side, ONLY for docs that actually appear in a candidate.
     // Hashed to 64-bit (VERDICT r18 item 2): at a 15 M-doc standing
     // corpus this daily tick's touched-existing exchange was the last
-    // verify path still moving ~15 KB/doc STRING shingle arrays — the
-    // same ~3.5× exchange cut the three batch builders took in r18,
-    // same collision class (~4e-14/pair, see [[hashShingles]]). Applied
+    // verify path still moving ~15 KB/doc STRING shingle arrays — a
+    // ~3.5× exchange cut at a ~4e-14/pair collision rate (see
+    // [[hashShingles]]). Applied
     // AFTER the memoized bases so the banding above and the probe's
     // reuse of freshBase keep consuming strings — signatures, buckets
     // and the candidate set stay bit-identical; IncrementalDedupSpec
@@ -611,58 +366,31 @@ object DedupOps {
 
   /** Blocked embedding-cosine near-dup pairs (vec_a < vec_b, cos ≥ 0.25)
     * — shared by the pair query and the connected-components clustering.
-    * Twin-gated like q_embed_rp (VERDICT r7 item 2):
-    *  - verify SF (N ≤ VerifyExactGate): 64-way exploded exact-decimal
-    *    dots — bitwise DuckDB parity, the oracle twin;
-    *  - production: ONE self-join of the packed (vec_id, block, label,
-    *    embedding, nrm) rows on the (label, block) blocking key, scored
-    *    array-native by the codegen'd vec_dot — no dim explode, no
-    *    64× row amplification, no separate norm join (the norm rides the
-    *    row from the scan). At 100 TB the only shuffle is the packed
-    *    vectors once per side on the blocking key; per-block populations
-    *    are bounded by the blocking scheme, so the in-block pair loop is
-    *    O(block²) with block ≤ 100, never all-pairs. */
+    * One plan at every N: ONE self-join of the packed (vec_id, block,
+    * label, embedding, nrm) rows on the (label, block) blocking key,
+    * scored array-native by the codegen'd vec_dot — no dim explode, no
+    * 64× row amplification, no separate norm join (the norm rides the
+    * row from the scan). At 100 TB the only shuffle is the packed vectors
+    * once per side on the blocking key; per-block populations are
+    * bounded by the blocking scheme, so the in-block pair loop is
+    * O(block²) with block ≤ 100, never all-pairs. The exact-decimal
+    * DuckDB oracles of the [[pairsCache]] consumers hash it. */
   private[graft] def embeddingCosPairs(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    if (emb.count() <= SimilarityOps.VerifyExactGate) {
-      val flat = emb
-        .select(col("vec_id"), col("label"), (col("vec_id") / 100).cast("long").as("block"),
-          posexplode(col("embedding")))
-        .select(col("vec_id"), col("label"), col("block"),
-          (col("pos") + 1).as("i"), col("col").cast("double").as("v"))
-      val nrm = flat.groupBy("vec_id")
-        .agg(sum((col("v") * col("v")).cast(DecimalType(28, 12))).as("n2"))
-      val a = flat.select(col("label"), col("block"), col("i"),
-        col("vec_id").as("vec_a"), col("v").as("va"))
-      val b = flat.select(col("label"), col("block"), col("i"),
-        col("vec_id").as("vec_b"), col("v").as("vb"))
-      val dots = a.join(b, Seq("label", "block", "i"))
-        .filter(col("vec_a") < col("vec_b"))
-        .groupBy("vec_a", "vec_b")
-        .agg(sum((col("va") * col("vb")).cast(DecimalType(28, 12))).as("dot"))
-      dots
-        .join(nrm.select(col("vec_id").as("vec_a"), col("n2").as("na")), Seq("vec_a"))
-        .join(nrm.select(col("vec_id").as("vec_b"), col("n2").as("nb")), Seq("vec_b"))
-        .withColumn("cos", col("dot").cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-        .filter(col("cos") >= 0.25)
-    } else {
-      graft.functions.GraftFunctions.register(s)
-      import graft.functions.VecOps.vec_dot
-      val packed = emb
-        .select(col("vec_id"), col("label"),
-          (col("vec_id") / 100).cast("long").as("block"), col("embedding"))
-        .withColumn("nrm", sqrt(vec_dot(col("embedding"), col("embedding"))))
-      val a = packed.select(col("label"), col("block"), col("vec_id").as("vec_a"),
-        col("embedding").as("ea"), col("nrm").as("na"))
-      val b = packed.select(col("label"), col("block"), col("vec_id").as("vec_b"),
-        col("embedding").as("eb"), col("nrm").as("nb"))
-      a.join(b, Seq("label", "block"))
-        .filter(col("vec_a") < col("vec_b"))
-        .withColumn("cos", vec_dot(col("ea"), col("eb")) / (col("na") * col("nb")))
-        .filter(col("cos") >= 0.25)
-        .select(col("vec_a"), col("vec_b"), col("cos"))
-    }
+    graft.functions.GraftFunctions.register(s)
+    import graft.functions.VecOps.vec_dot
+    val packed = Tables.embeddings(s, dir)
+      .select(col("vec_id"), col("label"),
+        (col("vec_id") / 100).cast("long").as("block"), col("embedding"))
+      .withColumn("nrm", sqrt(vec_dot(col("embedding"), col("embedding"))))
+    val a = packed.select(col("label"), col("block"), col("vec_id").as("vec_a"),
+      col("embedding").as("ea"), col("nrm").as("na"))
+    val b = packed.select(col("label"), col("block"), col("vec_id").as("vec_b"),
+      col("embedding").as("eb"), col("nrm").as("nb"))
+    a.join(b, Seq("label", "block"))
+      .filter(col("vec_a") < col("vec_b"))
+      .withColumn("cos", vec_dot(col("ea"), col("eb")) / (col("na") * col("nb")))
+      .filter(col("cos") >= 0.25)
+      .select(col("vec_a"), col("vec_b"), col("cos"))
   }
 
   /** Connected-components result: (vec_id, cluster_id) labels plus the

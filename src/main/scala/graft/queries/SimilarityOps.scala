@@ -43,8 +43,8 @@ object SimilarityOps {
     * cosine stays ≈ SemTargetCluster² comparisons per cluster AT ANY N —
     * k = ⌈N / 64⌉ grows linearly with the corpus, so total pairwise work
     * is k · 64² = O(N), not (N/k)² · k = O(N²/k) with a fixed k. The
-    * max(8, ·) floor makes the derived k coincide with the exact-decimal
-    * 8-seed oracle chain at verify SF (N = 500 → k = 8), which is what
+    * max(8, ·) floor makes the derived k coincide with the 8-seed
+    * oracle chain at verify SF (N = 500 → k = 8), which is what
     * keeps q_dedup_semantic hash-checkable against DuckDB. */
   val SemTargetCluster = 64.0
 
@@ -68,13 +68,6 @@ object SimilarityOps {
         "stops here; shard the corpus across indexes")
     math.max(8, k.toInt)
   }
-
-  /** Twin-gate threshold shared by q_embed_rp and q_sim_ann_ivf: at
-    * N ≤ this, the exact-decimal oracle-twin chain runs (the verify SFs
-    * hold 500 vectors); above it, the production vec_dot plan. Chosen so
-    * semK(N) ≤ 8 inside the gate — the same boundary SemDeDup derives
-    * from its cluster-size floor. */
-  val VerifyExactGate = 512L
 
   /** Named SemDeDup operating points (VERDICT r13 item 4): the
     * [[semClustersFromEmb]] knob triples measured by the 1 M–10 M
@@ -271,26 +264,16 @@ object SimilarityOps {
     def trained(s: SparkSession, dir: String): (DataFrame, DataFrame) =
       SessionCaches.memoize(memo, (System.identityHashCode(s), dir), {
         SessionCaches.onRelease(s, s"sim.pq:$dir")(() => release(s, dir))
-        if (Tables.embeddings(s, dir).count() <= VerifyExactGate) {
-          // verify SFs: the exact-decimal twin the q_embed_pq /
-          // q_sim_ann_pq oracles hash against
-          val f = flat(s, dir)
-          val c1 = codebook(f).cache()
-          val codes = assign(f, c1).cache()
-          (c1, codes)
-        } else {
-          // production: the SAME algorithm (strided-16 seeds, one Lloyd
-          // round over the 25% sample, per-subspace argmin) scored
-          // array-native on 8-dim slices by the codegen vec_dot — 8×
-          // fewer join rows than the per-dim exploded chain and no
-          // decimal arithmetic. The codebook keeps the per-dim (c, i,
-          // cv) shape the ADC LUT joins consume.
-          graft.functions.GraftFunctions.register(s)
-          val sl = slices(s, dir)
-          val c1 = codebookF(sl).cache()
-          val codes = assignF(sl, cents8(c1)).cache()
-          (c1, codes)
-        }
+        // the oracle's algorithm (strided-16 seeds, one Lloyd round over
+        // the 25% sample, per-subspace argmin) scored array-native on
+        // 8-dim slices by the codegen vec_nearest — no per-dim explode of
+        // the corpus and no decimal arithmetic. The codebook keeps the
+        // per-dim (c, i, cv) shape the ADC LUT joins consume.
+        graft.functions.GraftFunctions.register(s)
+        val sl = slices(s, dir)
+        val c1 = codebookF(sl).cache()
+        val codes = assignF(sl, cents8(c1)).cache()
+        (c1, codes)
       })
 
     /** (vec_id, sub, e8): the 8 contiguous 8-dim slices of each vector —
@@ -309,10 +292,10 @@ object SimilarityOps {
         .agg(array_sort(collect_list(struct(col("i"), col("cv")))).as("im"))
         .select(col("c"), col("sub"), transform(col("im"), _.getField("cv")).as("m8"))
 
-    /** vec_nearest argmin per (vector, subspace) — same (d2, c) ordering
-      * and float ops as [[assign]]'s min(struct) shape, but per-row (no
-      * n·k expansion, no SortAggregate, no exchange — the same rewrite as
-      * [[SimilarityOps.assignVec]], pinned by VecNearestSpec). */
+    /** vec_nearest argmin per (vector, subspace) with the oracle's (d2, c)
+      * ordering, per row (no n·k expansion, no SortAggregate, no exchange
+      * — the same rewrite as [[SimilarityOps.assignVec]], pinned by
+      * VecNearestSpec). */
     private def assignF(rows: DataFrame, cents: DataFrame): DataFrame = {
       graft.functions.GraftFunctions.register(rows.sparkSession)
       val bySub = cents.groupBy("sub")
@@ -323,9 +306,10 @@ object SimilarityOps {
         .filter(col("c").isNotNull)
     }
 
-    /** Float twin of [[codebook]]: strided-16 seeds, one Lloyd round over
-      * the 25% sample, means emitted straight in the per-dim (c, i, cv)
-      * consumer shape. */
+    /** Trained codebook: strided-16 seeds ([[stridedSeedIds]], mirrored
+      * in [[OracleCtes]]' pqsid CTE), one Lloyd round over the
+      * deterministic 25% sample, means emitted straight in the per-dim
+      * (c, i, cv) consumer shape. */
     private def codebookF(sl: DataFrame): DataFrame = {
       val samp = sl.filter(col("vec_id") % 4 === 0)
       val c0 = restrictToStridedSeeds(sl, 16)(sl)
@@ -348,35 +332,6 @@ object SimilarityOps {
         .select(col("vec_id"), posexplode(col("embedding")))
         .select(col("vec_id"), (col("pos") + 1).as("i"),
           floor(col("pos") / 8).as("sub"), col("col").cast("double").as("v"))
-
-    /** Nearest-codebook-entry per (vector, subspace): broadcast codebook
-      * join, map-side partial d² aggregate, then a single min(struct)
-      * argmin — same (d2, c) ordering as the oracle's ROW_NUMBER window
-      * (decimal compare, tie on c) without the per-(vec, sub) sort pass. */
-    def assign(rows: DataFrame, cents: DataFrame): DataFrame =
-      rows.join(broadcast(cents), Seq("i"))
-        .groupBy("vec_id", "sub", "c")
-        .agg(sum(((col("v") - col("cv")) * (col("v") - col("cv")))
-          .cast(DecimalType(28, 12))).as("d2"))
-        .groupBy("vec_id", "sub")
-        .agg(min(struct(col("d2"), col("c"))).as("best"))
-        .select(col("vec_id"), col("sub"), col("best.c").as("c"))
-
-    /** Trained codebook (c, i, cv): seeds = the strided id-range rule at
-      * k = 16 ([[stridedSeedIds]], r20 — the first-16 filter collapsed
-      * on low-id-duplicate corpora; mirrored in [[OracleCtes]]' pqsid
-      * CTE), one exact-decimal Lloyd round over the deterministic 25 %
-      * sample. */
-    def codebook(flatDf: DataFrame): DataFrame = {
-      val samp = flatDf.filter(col("vec_id") % 4 === 0)
-      val c0 = restrictToStridedSeeds(flatDf, 16)(flatDf)
-        .select(col("vec_id").as("c"), col("i"), col("v").as("cv"))
-      val a1 = assign(samp, c0)
-      samp.join(a1, Seq("vec_id", "sub"))
-        .groupBy("c", "i")
-        .agg((sum(col("v").cast(DecimalType(28, 12))).cast("double") /
-          count(lit(1))).as("cv"))
-    }
 
     /** The shared SQL chain: flat → sample-trained codebook c1 → codes. */
     val OracleCtes: String =
@@ -414,13 +369,12 @@ object SimilarityOps {
         |    FROM d2t) WHERE rk = 1)""".stripMargin
   }
 
-  /** Coarse k-means distance table (vec_id, c, d²) after one exact-decimal
-    * Lloyd round from the strided-8 seeds — the exact chain
-    * q_embed_kmeans hashes against DuckDB, reused verbatim as the IVF-PQ
-    * coarse quantizer. Trained once per (session, dataset) and cached,
-    * like [[Pq.trained]]; Bench pins the build cost to q_embed_kmeans. */
+  /** Coarse k-means distance table (vec_id, c, d²) after one Lloyd round
+    * from the strided-8 seeds — the chain q_embed_kmeans hashes against
+    * DuckDB ([[KmeansOracleCtes]]), reused verbatim as the IVF-PQ coarse
+    * quantizer. Trained once per (session, dataset) and cached, like
+    * [[Pq.trained]]; Bench pins the build cost to q_embed_kmeans. */
   private object Coarse {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.DataFrame
 
     private val memo =
@@ -429,47 +383,15 @@ object SimilarityOps {
     def d2(s: SparkSession, dir: String): DataFrame =
       SessionCaches.memoize(memo, (System.identityHashCode(s), dir), {
         SessionCaches.onRelease(s, s"sim.coarse:$dir")(() => release(s, dir))
-        val chain =
-          if (Tables.embeddings(s, dir).count() <= VerifyExactGate) exact(s, dir)
-          else prod(s, dir)
-        chain.cache()
+        train(s, dir).cache()
       })
 
-    /** Exact-decimal twin (verify SFs ≤ [[VerifyExactGate]]): the chain
-      * the q_embed_kmeans oracle hashes — 64× exploded dims, decimal
-      * distance sums. */
-    private def exact(s: SparkSession, dir: String): DataFrame = {
-      val flat = Pq.flat(s, dir)
-      def dists(cents: DataFrame) =
-        flat.join(broadcast(cents), Seq("i"))
-          .groupBy("vec_id", "c")
-          .agg(sum(((col("v") - col("cv")) * (col("v") - col("cv")))
-            .cast(DecimalType(28, 12))).as("d2"))
-      // seeds: the shared strided rule ([[stridedSeedIds]], r20 — the
-      // first-8 filter collapsed on low-id-duplicate corpora); mirrored
-      // in KmeansOracleCtes' ksid CTE
-      val c0 = restrictToStridedSeeds(Tables.embeddings(s, dir), 8)(flat)
-        .select(col("vec_id").as("c"), col("i"), col("v").as("cv"))
-      val a1 = dists(c0)
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("d2"), col("c"))))
-        .filter(col("rk") === 1).select("vec_id", "c")
-      val c1 = flat.join(a1, Seq("vec_id"))
-        .groupBy("c", "i")
-        .agg((sum(col("v").cast(DecimalType(28, 12))).cast("double") /
-          count(lit(1))).as("cv"))
-      dists(c1)
-    }
-
-    /** Production path (above the gate): the SAME algorithm — strided-8
-      * seeds, one full-set Lloyd round, all-centroid distance table —
-      * scored array-native by the codegen vec_dot with float sums. No
-      * 64× dim explode, no decimal arithmetic, no per-(vec, centroid)
-      * join rows beyond the k-way broadcast cross. The driver's hash
-      * gate runs at verify SFs where [[exact]] is the plan, so the twin
-      * stays differential-tested (the q_embed_rp / exact-cosine
-      * pattern). */
-    private def prod(s: SparkSession, dir: String): DataFrame = {
+    /** The oracle's algorithm — strided-8 seeds, one full-set Lloyd
+      * round, all-centroid distance table — scored array-native by the
+      * codegen vec_dot with float sums: no 64× dim explode, no decimal
+      * arithmetic, no per-(vec, centroid) join rows beyond the k-way
+      * broadcast cross. */
+    private def train(s: SparkSession, dir: String): DataFrame = {
       graft.functions.GraftFunctions.register(s)
       import graft.functions.VecOps.vec_dot
       val emb = Tables.embeddings(s, dir)
@@ -479,8 +401,8 @@ object SimilarityOps {
           .select(col("vec_id"), col("c"),
             (vec_dot(col("e"), col("e")) - lit(2.0) * vec_dot(col("e"), col("m"))
               + vec_dot(col("m"), col("m"))).as("d2"))
-      // same strided seeds as [[exact]] — the float twin must seed
-      // identically or the two regimes train different quantizers
+      // the strided seed rule ([[stridedSeedIds]]), mirrored in
+      // KmeansOracleCtes' ksid CTE
       val c0 = restrictToStridedSeeds(emb, 8)(emb)
         .select(col("vec_id").as("c"), col("e").as("m"))
       // argmin via the per-row codegen vec_nearest (identical float ops
@@ -488,7 +410,6 @@ object SimilarityOps {
       // replaces — no k-way expansion or SortAggregate for the
       // assignment; the FULL distance table below stays as is, it IS the
       // chain's output)
-      graft.functions.GraftFunctions.register(s)
       val c0Arr = c0.agg(collect_list(struct(col("c"), col("m"))).as("cm"))
       val a1 = emb.crossJoin(broadcast(c0Arr))
         .select(col("vec_id"),
@@ -677,21 +598,11 @@ object SimilarityOps {
   private def localizeCentroids(
       cents: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.types._
-    localizeSmall(cents.select(col("c").cast("long").as("c"), col("m")),
+    val rows = cents.select(col("c").cast("long").as("c"), col("m")).collect()
+    cents.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
       StructType(Seq(
         StructField("c", LongType, nullable = false),
         StructField("m", ArrayType(DoubleType, containsNull = true)))))
-  }
-
-  /** One bounded driver collect → LocalRelation, schema preserved (or
-    * overridden). Quantizer-sized frames only — see [[localizeCentroids]]
-    * for the rationale and the deliberate non-use of .cache(). */
-  private def localizeSmall(df: org.apache.spark.sql.DataFrame,
-      schema: org.apache.spark.sql.types.StructType = null)
-      : org.apache.spark.sql.DataFrame = {
-    val rows = df.collect()
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      if (schema == null) df.schema else schema)
   }
 
   private def trainVecCentroids(emb: org.apache.spark.sql.DataFrame,
@@ -911,8 +822,8 @@ object SimilarityOps {
     * derived from N via [[semK]] so per-cluster population — and the
     * in-cluster pairwise cosine that follows — stays ≈ constant as the
     * corpus grows. Three regimes:
-    *  - k ≤ 8 (verify SF): the exact-decimal 8-seed chain DuckDB hashes —
-    *    the oracle twin;
+    *  - k ≤ 8 (verify SF): q_embed_kmeans's strided 8-seed table
+    *    ([[Coarse]]), the blocking the DuckDB oracle replays;
     *  - 8 < k ≤ [[FlatKCap]]: one flat sample-trained vec_dot quantizer
     *    (the IVF recipe);
     *  - k > [[FlatKCap]]: hierarchical — broadcastable coarse cells, then
@@ -947,7 +858,7 @@ object SimilarityOps {
     * callers can block any embedding frame (the hierarchical path was
     * wall-measured this way at 1 M+ synthetic embeddings, VERDICT r11
     * item 5). Requires
-    * semK(n) > 8 (the ≤ 8 regime is the dir-bound exact oracle twin).
+    * semK(n) > 8 (the ≤ 8 regime is the dir-bound [[Coarse]] table).
     *
     * `probes` > 1 assigns each vector to its `probes` nearest coarse
     * cells (hierarchical regime only) — the output then carries up to
@@ -1617,88 +1528,9 @@ object SimilarityOps {
        |LIMIT 10""".stripMargin
   }
 
-  /** Exact-decimal twin of the IVF search chain for verify SFs: the SAME
-    * algorithm as the vec_dot path (k = ⌈√N⌉ first-k seeds, 25 % sample,
-    * 2 Lloyd rounds, nprobe = ⌈√k⌉ lists, in-list cosine top-10) with
-    * every distance an exact decimal sum, so assignments — and therefore
-    * the whole chain — are order-independent and hash-match DuckDB. */
-  private def ivfExact(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.DataFrame
-    val flat = Pq.flat(s, dir).select("vec_id", "i", "v")
-    // array form of the same vectors (one row per vector, dims in
-    // i-order): the d² fold below consumes these, so the 64× per-dim
-    // explode never meets the k-way centroid cross (guide §2.3 — decide
-    // with the fewest rows that carry the decision)
-    val emb = Tables.embeddings(s, dir)
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
-    val n = Tables.embeddings(s, dir).count()
-    val k = ivfK(n)
-    val np = ivfNprobe(k)
-    // (c, i, cv) centroid rows regrouped to (c, m) arrays, dims ascending
-    def centArrays(cents: DataFrame) =
-      cents.groupBy("c")
-        .agg(array_sort(collect_list(struct(col("i"), col("cv")))).as("im"))
-        .select(col("c"), transform(col("im"), _.getField("cv")).as("m"))
-    // d²(vec, c) from the IDENTICAL per-dim decimal terms the exploded
-    // chain summed — ((v − cv)·(v − cv)) cast to DECIMAL(28,12) — folded
-    // with exact decimal addition by the codegen vec_d2_dec expression
-    // (order-independent, so the fold equals the oracle's SUM
-    // bit-for-bit, VecD2DecSpec pins it), but computed on one row per
-    // (vec, c) instead of one per (vec, c, dim): 64× fewer join rows and
-    // no aggregation exchange at all (the old shape was the single
-    // largest intermediate of this chain: n·64·k rows through a decimal
-    // HashAggregate).
-    graft.functions.GraftFunctions.register(s)
-    def dists(rows: DataFrame, cents: DataFrame) =
-      rows.crossJoin(broadcast(centArrays(cents)))
-        .select(col("vec_id"), col("c"),
-          graft.functions.VecOps.vec_d2_dec(col("e"), col("m")).as("d2"))
-    def argmin(d: DataFrame) =
-      d.withColumn("rk", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("d2"), col("c"))))
-        .filter(col("rk") === 1).select("vec_id", "c")
-    def means(rows: DataFrame, asg: DataFrame) =
-      rows.join(asg, Seq("vec_id"))
-        .groupBy("c", "i")
-        .agg((sum(col("v").cast(DecimalType(28, 12))).cast("double") /
-          count(lit(1))).as("cv"))
-    // seeds: the shared strided id-range rule ([[stridedSeedIds]]) — the
-    // exact-decimal twin must run the identical algorithm or the
-    // differential-twin property is vacuous. Mirrored in IvfOracleSql's
-    // sid CTE.
-    val c0 = restrictToStridedSeeds(Tables.embeddings(s, dir), k)(flat)
-      .select(col("vec_id").as("c"), col("i"), col("v").as("cv"))
-    val samp = flat.filter(col("vec_id") % 4 === 0)
-    val sampA = emb.filter(col("vec_id") % 4 === 0)
-    // each Lloyd round's means land in a LocalRelation (k·64 rows, one
-    // bounded collect) so the lists AND probes branches below — and the
-    // later round — consume the trained table instead of replaying the
-    // whole preceding train per action ([[localizeCentroids]] rationale)
-    val c1 = localizeSmall(means(samp, argmin(dists(sampA, c0))))
-    val c2 = localizeSmall(means(samp, argmin(dists(sampA, c1))))
-    val dfull = dists(emb, c2)
-    val lists = argmin(dfull)
-    val probes = dfull.filter(col("vec_id") === 0)
-      .orderBy(col("d2"), col("c")).limit(np).select("c")
-    val cand = lists.join(broadcast(probes), Seq("c"))
-      .filter(col("vec_id") =!= 0).select("vec_id")
-    val q = flat.filter(col("vec_id") === 0).select(col("i"), col("v").as("qv"))
-    val nrm = flat.groupBy("vec_id")
-      .agg(sum((col("v") * col("v")).cast(DecimalType(28, 12))).as("n2"))
-    flat.join(cand, Seq("vec_id"))
-      .join(broadcast(q), Seq("i"))
-      .groupBy("vec_id")
-      .agg(sum((col("v") * col("qv")).cast(DecimalType(28, 12))).as("dot"))
-      .join(nrm, Seq("vec_id"))
-      .withColumn("cos", col("dot").cast("double") / sqrt(col("n2").cast("double")))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .select(col("vec_id"), round(col("cos"), 6).as("score"))
-      .limit(10)
-  }
-
-  /** The DuckDB twin of [[ivfExact]] — k and nprobe derived from N inside
-    * the SQL with the engine's formulas, the 2 Lloyd rounds unrolled. */
+  /** The DuckDB twin of q_sim_ann_ivf — k and nprobe derived from N
+    * inside the SQL with the engine's formulas, the 2 Lloyd rounds
+    * unrolled. */
   private val IvfOracleSql: String = {
     def distsSql(name: String, rows: String, cents: String) =
       s"""$name AS (
@@ -1759,17 +1591,14 @@ object SimilarityOps {
 
   val defs: Map[String, QueryDef] = Map(
 
-    // Brute-force cosine top-k of a fixed query vector (vec_id=0). Two
-    // regimes, the q_embed_rp twin pattern (VERDICT r7 item 2):
-    //  - verify SF (N ≤ VerifyExactGate): the 64-way exploded
-    //    exact-decimal chain DuckDB hashes — the oracle twin;
-    //  - above: the PRODUCTION plan — the query vector is collected once
-    //    (64 floats) and baked into the plan as a literal array; every
-    //    corpus row is scored by the codegen'd vec_dot in ONE narrow map
-    //    (no explode, no join, no aggregation) and the top-k is a
-    //    map-side partial TakeOrderedAndProject, never a full sort. At
-    //    100 TB this is a pure scan: zero shuffle beyond the k-row
-    //    driver-side merge.
+    // Brute-force cosine top-k of a fixed query vector (vec_id=0), one
+    // plan at every N: the query vector is collected once (64 floats)
+    // and baked into the plan as a literal array; every corpus row is
+    // scored by the codegen'd vec_dot in ONE narrow map (no explode, no
+    // join, no aggregation) and the top-k is a map-side partial
+    // TakeOrderedAndProject, never a full sort. At 100 TB this is a pure
+    // scan: zero shuffle beyond the k-row driver-side merge. The SQL
+    // below is the exact-decimal DuckDB reference it is hashed against.
     "q_sim_topk" -> QueryDef.sql(
       "brute-force cosine top-k vs query vector (exact baseline)",
       """WITH flat AS (
@@ -1786,56 +1615,31 @@ object SimilarityOps {
         |CROSS JOIN (SELECT n2 FROM nrm WHERE vec_id = 0) qn
         |ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(n.n2 AS DOUBLE)) * sqrt(CAST(qn.n2 AS DOUBLE))) DESC, d.vec_id
         |LIMIT 10""".stripMargin) { (s, dir) =>
+      graft.functions.GraftFunctions.register(s)
+      import graft.functions.VecOps.vec_dot
       val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      if (emb.count() <= VerifyExactGate) {
-        // verify SF: the exploded exact-decimal oracle twin
-        val flat = emb
-          .select(col("vec_id"), posexplode(col("embedding")))
-          .select(col("vec_id"), (col("pos") + 1).as("i"), col("col").cast("double").as("v"))
-        val q = flat.filter(col("vec_id") === 0).select(col("i"), col("v").as("qv"))
-        val nrm = flat.groupBy("vec_id")
-          .agg(sum((col("v") * col("v")).cast(DecimalType(28, 12))).as("n2"))
-        val qn = nrm.filter(col("vec_id") === 0).select(col("n2").as("qn2"))
-        val dots = flat.filter(col("vec_id") =!= 0)
-          .join(broadcast(q), Seq("i"))
-          .groupBy("vec_id")
-          .agg(sum((col("v") * col("qv")).cast(DecimalType(28, 12))).as("dot"))
-        dots.join(nrm, Seq("vec_id")).crossJoin(broadcast(qn))
-          .withColumn("cos", col("dot").cast("double") /
-            (sqrt(col("n2").cast("double")) * sqrt(col("qn2").cast("double"))))
-          .orderBy(col("cos").desc, col("vec_id"))
-          .select(col("vec_id"), round(col("cos"), 6).as("cos_r"))
-          .limit(10)
-      } else {
-        // production: query vector as a plan literal, codegen vec_dot,
-        // map-side partial top-k — one scan, no explode, no join
-        graft.functions.GraftFunctions.register(s)
-        import graft.functions.VecOps.vec_dot
-        val qv = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](1).map(_.toDouble)
-        val qlit = array(qv.map(lit(_)): _*)
-        val qnorm = math.sqrt(qv.map(x => x * x).sum)
-        emb.filter(col("vec_id") =!= 0)
-          .withColumn("cos", vec_dot(col("embedding"), qlit) /
-            (sqrt(vec_dot(col("embedding"), col("embedding"))) * lit(qnorm)))
-          .orderBy(col("cos").desc, col("vec_id"))
-          .select(col("vec_id"), round(col("cos"), 6).as("cos_r"))
-          .limit(10)
-      }
+      val qv = emb.filter(col("vec_id") === 0)
+        .head().getSeq[Float](1).map(_.toDouble)
+      val qlit = array(qv.map(lit(_)): _*)
+      val qnorm = math.sqrt(qv.map(x => x * x).sum)
+      emb.filter(col("vec_id") =!= 0)
+        .withColumn("cos", vec_dot(col("embedding"), qlit) /
+          (sqrt(vec_dot(col("embedding"), col("embedding"))) * lit(qnorm)))
+        .orderBy(col("cos").desc, col("vec_id"))
+        .select(col("vec_id"), round(col("cos"), 6).as("cos_r"))
+        .limit(10)
     },
 
     // Batched exact top-k (differential-tested): MANY query vectors at
     // once — the shape a retrieval/labeling pipeline actually runs, not
-    // one ad-hoc probe. Twin-gated like q_sim_topk:
-    //  - verify SF: exploded exact-decimal chain (the oracle twin);
-    //  - production: the Q query vectors are baked into the plan as
-    //    literal arrays, each corpus row emits Q (qid, cos) structs
-    //    scored by the codegen'd vec_dot — ONE scan, no dim explode, no
-    //    join — and the per-query top-k is a window over (qid). At
-    //    100 TB: the only shuffle is the skinny (qid, vec_id, cos)
-    //    scored rows into the window (Q·N 24-byte rows, 64× less than
-    //    the exploded chain's partial dots), Q bounded by the plan-
-    //    literal budget (a few thousand 64-dim queries ≈ MBs).
+    // one ad-hoc probe. One plan at every N, like q_sim_topk: the Q query
+    // vectors are baked into the plan as literal arrays, each corpus row
+    // emits Q (qid, cos) structs scored by the codegen'd vec_dot — ONE
+    // scan, no dim explode, no join — and the per-query top-k is a window
+    // over (qid). At 100 TB: the only shuffle is the skinny (qid, vec_id,
+    // cos) scored rows into the window (Q·N 24-byte rows, 64× less than
+    // the exploded reference's partial dots), Q bounded by the plan-
+    // literal budget (a few thousand 64-dim queries ≈ MBs).
     "q_sim_batch_topk" -> QueryDef.sql(
       "batched cosine top-k: 5 query vectors, one corpus pass, per-query window",
       """WITH flat AS (
@@ -1857,66 +1661,35 @@ object SimilarityOps {
         |  FROM scored)
         |WHERE rk <= 3""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
+      graft.functions.GraftFunctions.register(s)
+      import graft.functions.VecOps.vec_dot
       val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      if (emb.count() <= VerifyExactGate) {
-        // verify SF: the exploded exact-decimal oracle twin
-        val flat = emb
-          .select(col("vec_id"), posexplode(col("embedding")))
-          .select(col("vec_id"), (col("pos") + 1).as("i"), col("col").cast("double").as("v"))
-        val q = flat.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("qid"), col("i"), col("v").as("qv"))
-        val nrm = flat.groupBy("vec_id")
-          .agg(sum((col("v") * col("v")).cast(DecimalType(28, 12))).as("n2"))
-        val qn = nrm.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("qid"), col("n2").as("qn2"))
-        flat.filter(col("vec_id") >= 5)
-          .join(broadcast(q), Seq("i"))
-          .groupBy("qid", "vec_id")
-          .agg(sum((col("v") * col("qv")).cast(DecimalType(28, 12))).as("dot"))
-          .join(nrm, Seq("vec_id"))
-          .join(broadcast(qn), Seq("qid"))
-          .withColumn("cos", col("dot").cast("double") /
-            (sqrt(col("n2").cast("double")) * sqrt(col("qn2").cast("double"))))
-          .withColumn("rk", org.apache.spark.sql.functions.row_number().over(
-            Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))))
-          .filter(col("rk") <= 3)
-          .select(col("qid"), col("vec_id"), round(col("cos"), 6).as("cos_r"))
-      } else {
-        // production: Q query vectors as plan literals, codegen vec_dot
-        // per struct, one scan — the window sees only skinny scored rows
-        graft.functions.GraftFunctions.register(s)
-        import graft.functions.VecOps.vec_dot
-        val qs = emb.filter(col("vec_id") < 5)
-          .collect().map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble)))
-        val scores = array(qs.toIndexedSeq.map { case (qid, qv) =>
-          val qlit = array(qv.map(lit(_)): _*)
-          val qnorm = math.sqrt(qv.map(x => x * x).sum)
-          struct(lit(qid).as("qid"),
-            (vec_dot(col("embedding"), qlit) / (col("nrm") * lit(qnorm))).as("cos"))
-        }: _*)
-        emb.filter(col("vec_id") >= 5)
-          .withColumn("nrm", sqrt(vec_dot(col("embedding"), col("embedding"))))
-          .select(col("vec_id"), explode(scores).as("s"))
-          .select(col("s.qid").as("qid"), col("vec_id"), col("s.cos").as("cos"))
-          .withColumn("rk", org.apache.spark.sql.functions.row_number().over(
-            Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))))
-          .filter(col("rk") <= 3)
-          .select(col("qid"), col("vec_id"), round(col("cos"), 6).as("cos_r"))
-      }
+      val qs = emb.filter(col("vec_id") < 5)
+        .collect().map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble)))
+      val scores = array(qs.toIndexedSeq.map { case (qid, qv) =>
+        val qlit = array(qv.map(lit(_)): _*)
+        val qnorm = math.sqrt(qv.map(x => x * x).sum)
+        struct(lit(qid).as("qid"),
+          (vec_dot(col("embedding"), qlit) / (col("nrm") * lit(qnorm))).as("cos"))
+      }: _*)
+      emb.filter(col("vec_id") >= 5)
+        .withColumn("nrm", sqrt(vec_dot(col("embedding"), col("embedding"))))
+        .select(col("vec_id"), explode(scores).as("s"))
+        .select(col("s.qid").as("qid"), col("vec_id"), col("s.cos").as("cos"))
+        .withColumn("rk", row_number().over(
+          Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))))
+        .filter(col("rk") <= 3)
+        .select(col("qid"), col("vec_id"), round(col("cos"), 6).as("cos_r"))
     },
 
-    // K-means topic clustering, EXACT and differential-tested: k = 8
-    // deterministic seeds (one per id-range stride, see stridedSeedIds),
-    // one Lloyd update, final
-    // assignment — every distance an exact decimal sum, centroid means
-    // exact-decimal over doubles, ties broken by centroid id, so Spark
-    // and DuckDB agree bitwise. This is the oracle twin of the IVF
-    // quantizer above: same assignment shape (broadcast k×dim centroid
-    // block, map-side partial min), but the exact path the tests can
-    // hash. At 100 TB: swap the explode-join for the codegen vec_dot
-    // scoring and train on a sample exactly as q_sim_ann_ivf does.
+    // K-means topic clustering, differential-tested: k = 8 deterministic
+    // seeds (one per id-range stride, see stridedSeedIds), one Lloyd
+    // update, final assignment, ties broken by centroid id. The plan
+    // scores with the codegen vec_dot over a broadcast k×dim centroid
+    // block ([[Coarse]]); the SQL is the exact-decimal DuckDB reference
+    // it is hashed against.
     "q_embed_kmeans" -> QueryDef.sql(
-      "k-means clustering: 8 fixed seeds, one exact-decimal Lloyd round + assignment",
+      "k-means clustering: 8 fixed seeds, one Lloyd round + assignment",
       s"""WITH $KmeansOracleCtes
          |SELECT vec_id, cluster FROM clus""".stripMargin) { (s, dir) =>
       // final assignment = argmin over the shared cached distance table
@@ -1932,8 +1705,8 @@ object SimilarityOps {
     // ([[semK]]: k = ⌈N/64⌉) so per-cluster population — and therefore
     // per-cluster pairwise work — stays CONSTANT as the corpus grows;
     // total work is k·64² = O(N). At verify SF the derived k hits the
-    // floor of 8 and the blocking is the same trained-once exact-decimal
-    // k-means as q_embed_kmeans / IVF-PQ, so the whole chain — including
+    // floor of 8 and the blocking is the same trained-once k-means table
+    // as q_embed_kmeans / IVF-PQ, so the whole chain — including
     // the exploded exact-decimal in-cluster dots — hash-matches DuckDB.
     // Above the floor, blocking comes from the sample-trained vec_dot
     // quantizer and the in-cluster cosine goes array-native (codegen
@@ -1947,12 +1720,11 @@ object SimilarityOps {
     // every vector assigned through the frozen centroids, in-cluster
     // exact-decimal cosine at τ = 0.25, and the result restricted to
     // pairs TOUCHING the fresh quarter — exactly the per-day emission of
-    // the standing-index maintenance loop. Twin-gated like its six
-    // ANN/kmeans siblings (VERDICT r14 item 1 — the ungated exact chain
-    // was 14 % of the clean suite at only 2,000 vectors, O(n²·d/8) with
-    // k frozen at 8 regardless of n):
-    //  - verify SF (N ≤ VerifyExactGate): the exact-decimal fixed-k=8
-    //    chain below, hash-green vs DuckDB (sf0.01, the driver's gate);
+    // the standing-index maintenance loop. Two plans, split on the
+    // bootstrap's blocking k (the exact chain is O(n²·d/8) with k frozen
+    // at 8 regardless of n — 14 % of the clean suite at 2,000 vectors):
+    //  - semK(N − N/4) ≤ FlatKCap: the exact-decimal fixed-k=8 chain
+    //    below, hash-green vs DuckDB (sf0.01, the driver's gate);
     //  - above: the PRODUCTION path — semIndexTrain on the bootstrap
     //    three-quarters (k = semK(N), hierarchical), semIndexAssign of
     //    the full corpus through the frozen index, in-cluster float
@@ -2019,15 +1791,12 @@ object SimilarityOps {
       val emb = Tables.embeddings(s, dir)
       val n = emb.count()
       val cut = n / 4
-      if (n > VerifyExactGate && semK(n - cut) > FlatKCap) {
+      if (semK(n - cut) > FlatKCap) {
         // production: the frozen standing index itself (float path) —
-        // but ONLY in the hierarchical regime its train require demands
-        // (ADVICE r15: bare n > gate crashed any corpus in
-        // (512, ~1365], where semK(bootstrap) ≤ FlatKCap; such corpora
-        // fall through to the exact chain below, which is also the
-        // oracle — so they stay hash-green). At every driver SF the
-        // production branch runs: the smallest gated SF is sf0.1 with
-        // N = 2000, bootstrap 1500, semK = 24 > FlatKCap.
+        // ONLY in the hierarchical regime its train require demands;
+        // smaller corpora (up to ~1365 vectors) run the exact chain
+        // below, which is also the oracle. sf0.1 is the smallest driver
+        // SF on this branch: N = 2000, bootstrap 1500, semK = 24.
         val boot = emb.select("vec_id", "embedding")
           .filter(col("vec_id") >= cut)
         val index = semIndexTrain(s, boot, n - cut)
@@ -2154,9 +1923,8 @@ object SimilarityOps {
     // Product quantization (differential-tested): the vector-compression
     // path every 100 TB ANN deployment ships — 64 dims cut into 8
     // subspaces of 8, one 16-centroid codebook per subspace (seeds =
-    // 16 id-range-strided vectors' subvectors, one exact-decimal Lloyd
-    // round over
-    // the deterministic 25 % sample), every vector encoded as 8 one-byte
+    // 16 id-range-strided vectors' subvectors, one Lloyd round over the
+    // deterministic 25 % sample), every vector encoded as 8 one-byte
     // codes: 32× smaller than the float vectors, scored at query time
     // via per-subspace lookup tables. Codebooks are k×dim tiny and
     // BROADCAST; assignment is a scan-local argmin + one (vec, sub) keyed
@@ -2223,9 +1991,9 @@ object SimilarityOps {
     // production vector index — a coarse quantizer narrows the search to
     // nprobe inverted lists, and ONLY those lists' members are scored,
     // from their 8-byte PQ codes via the query LUT. The coarse quantizer
-    // here is the exact-decimal k-means (the oracle twin of the
-    // vec_dot-scored q_sim_ann_ivf), so every stage — lists, codes, LUT,
-    // scores, ranking — hash-matches DuckDB. At 100 TB: list id is the
+    // here is q_embed_kmeans's shared table ([[Coarse]]), and every stage
+    // — lists, codes, LUT, scores, ranking — hash-matches DuckDB at the
+    // verify SF. At 100 TB: list id is the
     // partition key, a probe reads nprobe/k of the code table (N·8 bytes
     // total), and the float vectors are touched only at train time.
     "q_sim_ann_ivfpq" -> QueryDef.sql(
@@ -2363,11 +2131,9 @@ object SimilarityOps {
     // (fraction nprobe/k ≈ N^(-1/4) → 0), and training cost is one pass
     // over a fixed corpus fraction.
     //
-    // Differential-tested via the twin pattern (SemDeDup/JL precedent):
-    // at verify SF the SAME algorithm runs with exact-decimal distances
-    // ([[ivfExact]]) so every Lloyd assignment is order-independent and
-    // the chain hash-matches the unrolled DuckDB twin; above the gate the
-    // production vec_dot path runs, recall-spec'd at sf0.1.
+    // Differential-tested: this one plan runs at every N and hash-matches
+    // the unrolled exact-decimal DuckDB twin ([[IvfOracleSql]]) at the
+    // verify SF, and is recall-spec'd at sf0.1.
     "q_sim_ann_ivf" -> QueryDef.sql(
       "ANN: IVF coarse quantizer (k=ceil(sqrt(N)), sample-trained) + nprobe=ceil(sqrt(k)) search",
       IvfOracleSql) { (s, dir) =>
@@ -2375,7 +2141,6 @@ object SimilarityOps {
       import graft.functions.VecOps.vec_dot
       val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
       val n = emb.count() // parquet metadata, not a scan
-      if (n <= VerifyExactGate) ivfExact(s, dir) else {
       val k = ivfK(n)
       val nprobe = ivfNprobe(k)
 
@@ -2414,24 +2179,19 @@ object SimilarityOps {
         .orderBy(col("cos").desc, col("vec_id"))
         .select(col("vec_id"), round(col("cos"), 6).as("score"))
         .limit(10)
-      }
     },
 
     // Random projection (differential-tested): Johnson–Lindenstrauss
     // dimensionality reduction 64 → 16 with a deterministic ±1 sign
     // matrix (sign(j,i) = +1 iff the first md5 nibble of "j_i" is < 8),
     // scaled by 1/√16 — the cheap preprocessing step before LSH/clustering
-    // when the embedding dim is large. Two regimes, the SemDeDup/IVF twin
-    // pattern (VERDICT r6 item 1):
-    //  - verify SF (N ≤ 512): the exploded exact-decimal chain DuckDB
-    //    hashes — 64-way posexplode, broadcast sign join, decimal sums —
-    //    the oracle twin;
-    //  - above: the PRODUCTION plan — the 16 sign rows are baked into the
-    //    plan as ±1 array LITERALS and scored by the codegen'd vec_dot in
-    //    ONE narrow map over the packed embeddings: no explode, no join,
-    //    no aggregation, ZERO shuffle. The only row expansion is the 16
-    //    final (dim, score) structs per vector, emitted post-scoring. At
-    //    100 TB this is a pure scan — output volume is the input's 16/64.
+    // when the embedding dim is large. One plan at every N: the 16 sign
+    // rows are baked into the plan as ±1 array LITERALS and scored by the
+    // codegen'd vec_dot in ONE narrow map over the packed embeddings: no
+    // explode, no join, no aggregation, ZERO shuffle. The only row
+    // expansion is the 16 final (dim, score) structs per vector, emitted
+    // post-scoring. At 100 TB this is a pure scan — output volume is the
+    // input's 16/64. The SQL below is the exact-decimal DuckDB reference.
     "q_embed_rp" -> QueryDef.sql(
       "random projection (JL): 64-dim -> 16-dim via deterministic ±1 signs / sqrt(16)",
       """WITH flat AS (
@@ -2446,42 +2206,23 @@ object SimilarityOps {
         |  round(CAST(SUM(CAST(f.v * s.sg AS DECIMAL(28,12))) AS DOUBLE) / 4, 6) AS r
         |FROM flat f JOIN sgn s ON f.i = s.i
         |GROUP BY 1, 2""".stripMargin) { (s, dir) =>
+      // the sign matrix as plan literals, computed once on the driver
+      // with the same md5 derivation the oracle uses
+      graft.functions.GraftFunctions.register(s)
+      import graft.functions.VecOps.vec_dot
       val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      if (emb.count() <= VerifyExactGate) {
-        // verify SF: the exploded exact-decimal oracle twin
-        val flat = emb
-          .select(col("vec_id"), posexplode(col("embedding")))
-          .select(col("vec_id"), (col("pos") + 1).as("i"), col("col").cast("double").as("v"))
-        val sgn = s.range(1, 65).select(col("id").as("i"))
-          .crossJoin(s.range(1, 17).select(col("id").as("j")))
-          .withColumn("sg", when(
-            substring(md5(concat(col("j").cast("string"), lit("_"),
-              col("i").cast("string")).cast("binary")), 1, 1) <= "7", 1.0)
-            .otherwise(-1.0))
-        flat.join(broadcast(sgn), Seq("i"))
-          .groupBy(col("vec_id"), col("j").as("dim"))
-          .agg(round(sum((col("v") * col("sg")).cast(DecimalType(28, 12)))
-            .cast("double") / 4, 6).as("r"))
-      } else {
-        // production: sign matrix as plan literals, codegen vec_dot, no
-        // shuffle — the recipe the scaladoc promises. The 16×64 signs are
-        // computed once on the driver with the same md5 derivation the
-        // oracle uses, so both regimes project identically.
-        graft.functions.GraftFunctions.register(s)
-        import graft.functions.VecOps.vec_dot
-        def sign(j: Int, i: Int): Double = {
-          val d = java.security.MessageDigest.getInstance("MD5")
-            .digest(s"${j}_$i".getBytes("UTF-8"))
-          if ((d(0) & 0xff) < 0x80) 1.0 else -1.0
-        }
-        val scores = array((1 to 16).map { j =>
-          val sg = array((1 to 64).map(i => lit(sign(j, i))): _*)
-          struct(lit(j.toLong).as("dim"),
-            round(vec_dot(col("embedding"), sg) / 4, 6).as("r"))
-        }: _*)
-        emb.select(col("vec_id"), explode(scores).as("s"))
-          .select(col("vec_id"), col("s.dim").as("dim"), col("s.r").as("r"))
+      def sign(j: Int, i: Int): Double = {
+        val d = java.security.MessageDigest.getInstance("MD5")
+          .digest(s"${j}_$i".getBytes("UTF-8"))
+        if ((d(0) & 0xff) < 0x80) 1.0 else -1.0
       }
+      val scores = array((1 to 16).map { j =>
+        val sg = array((1 to 64).map(i => lit(sign(j, i))): _*)
+        struct(lit(j.toLong).as("dim"),
+          round(vec_dot(col("embedding"), sg) / 4, 6).as("r"))
+      }: _*)
+      emb.select(col("vec_id"), explode(scores).as("s"))
+        .select(col("vec_id"), col("s.dim").as("dim"), col("s.r").as("r"))
     }
   )
 }

@@ -257,8 +257,15 @@ object Collect {
             // restart the TTL, like a re-arrival after the reference's
             // minute sweeper dropped the entry
             val first = rows.minBy(_.timestamp_ms)
-            state.update(first.timestamp_ms)
-            state.setTimeoutTimestamp(first.ts.getTime, "30 minutes")
+            if (first.ts.getTime + TtlMs <= state.getCurrentWatermarkMs()) {
+              // a late first row whose TTL already passed in event time:
+              // emit it and keep no state (a timeout behind the
+              // watermark is refused and would fail the query)
+              state.remove()
+            } else {
+              state.update(first.timestamp_ms)
+              state.setTimeoutTimestamp(first.ts.getTime, "30 minutes")
+            }
             Iterator.single(first)
           }
       }

@@ -157,6 +157,49 @@ class CollectStreamSpec extends AnyFunSuite with SessionLeakCheck {
     }
   }
 
+  test("stateful dedup emits a first row whose TTL already passed in event time") {
+    // The late-row filter compares against the PREVIOUS batch's watermark,
+    // the timeout against the current one. A feed whose event time steps
+    // back 20 minutes per file reaches batch 1 (files 16-31, 16 files a
+    // trigger) with rows more than 30 minutes behind batch 0's max: they
+    // pass the filter, but a timeout at ts + 30 min would sit behind the
+    // watermark, which Spark refuses with an IllegalArgumentException
+    // that kills the query. Such a row is emitted with no state kept;
+    // batch 2's rows are behind batch 1's watermark and dropped as late.
+    import graft.streaming.Collect.{dedupStateful, feed, startCollector}
+    val in = Files.createTempDirectory("graft-feed-late").toString
+    val out = Files.createTempDirectory("graft-collect-late").toString
+    val t0 = 1693785600000L
+    val mtime0 = System.currentTimeMillis() - 3600000L
+    // three distinct txs a file (rawRow repeats every 10th hash: skipped)
+    val ids = (0L until 200L).filter(_ % 10 != 9).grouped(3).take(40).toSeq
+    val hashesByFile = ids.zipWithIndex.map { case (grp, f) =>
+      val ts = t0 - f * 20L * 60000L
+      val lines = grp.map { i =>
+        val (_, hash, raw) = TxFixtures.rawRow(i)
+        (hash, s"$ts,$hash,$raw,src${i % 3}")
+      }
+      val file = Files.writeString(java.nio.file.Paths.get(in, f"feed$f%02d.csv"),
+        lines.map(_._2).mkString("\n"))
+      // the file source takes each trigger's files in mtime order
+      Files.setLastModifiedTime(file,
+        java.nio.file.attribute.FileTime.fromMillis(mtime0 + f * 1000L))
+      lines.map(_._1)
+    }
+    val q = startCollector(feed(spark, in), out, Trigger.AvailableNow(), None,
+      dedupStateful, _ => ())
+    try q.awaitTermination() finally q.stop()
+    assert(q.exception.isEmpty, s"collector failed: ${q.exception}")
+    assert(q.recentProgress.count(_.numInputRows > 0) == 3,
+      "the feed no longer splits into three 16-file batches")
+    val got = spark.read.csv(s"$out/transactions").select("_c1")
+      .union(spark.read.csv(s"$out/trash").select("_c1"))
+      .collect().map(_.getString(0)).toSeq
+    assert(got.length == got.distinct.length, "a hash was emitted twice")
+    assert(got.toSet == hashesByFile.take(32).flatten.toSet,
+      s"expected exactly batches 0-1's rows, got ${got.length}")
+  }
+
   test("validation split + hourly bucketed file sink end-to-end") {
     val in = Files.createTempDirectory("graft-feed2").toString
     val out = Files.createTempDirectory("graft-collect").toString

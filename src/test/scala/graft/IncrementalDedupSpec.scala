@@ -17,9 +17,9 @@ class IncrementalDedupSpec extends AnyFunSuite with SessionLeakCheck {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  // the pruned verify and the index probe pin internal frames in the
-  // shared session's CacheManager; sweep them (and the memoized shingle
-  // bases) so later suites start from an unpinned session
+  // the index probe pins internal frames in the shared session's
+  // CacheManager; sweep them (and the memoized shingle bases) so later
+  // suites start from an unpinned session
   override def afterAll(): Unit =
     try DedupOps.releaseAllMinhashBases(spark) finally super.afterAll()
 
@@ -109,141 +109,6 @@ class IncrementalDedupSpec extends AnyFunSuite with SessionLeakCheck {
       DedupOps.releaseAllMinhashBases(spark)
       Files.walk(compactDir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
     }
-  }
-
-  test("pruned verify is result-identical to the unpruned path") {
-    // --prune-verify (r17): the candidate-touched semi-join drops only
-    // base rows the inner verify join ignores, and hotBucketMembers is
-    // EXACTLY the candidate-endpoint set (ids are unique per band, so a
-    // doc pairs iff some bucket of its has >= 2 members — plus >= 1
-    // fresh member in the incremental regime). Same pairs, same exact
-    // jaccard values, both builders.
-    val pruned = DedupOps.minhashPairsFromDocs(spark, docs,
-        pruneVerify = true)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    val unpruned = DedupOps.minhashPairsFromDocs(spark, docs)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    assert(pruned == unpruned)
-    assert(pruned.nonEmpty)
-    val fresh = docs.filter(col("doc_id") % 5 === 0)
-    val existing = docs.filter(col("doc_id") % 5 =!= 0)
-    val incPruned = DedupOps.minhashPairsIncremental(spark, existing,
-        fresh, pruneVerify = true)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    val incUnpruned = DedupOps.minhashPairsIncremental(spark, existing, fresh)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    assert(incPruned == incUnpruned)
-    assert(incPruned.nonEmpty)
-  }
-
-  test("touched-broadcast ceiling derives from spark.driver.maxResultSize") {
-    // ADVICE r18: the 64 M static ceiling assumed a driver heap that can
-    // COLLECT the set, but the broadcast build's collect is gated by
-    // spark.driver.maxResultSize (1g default, never raised by the
-    // launchers) — the effective ceiling must fire strictly before that
-    // collect can die, at 24 conservative bytes/id.
-    import DedupOps.{touchedBroadcastCeiling, TouchedBroadcastMaxIds,
-      TouchedBroadcastBytesPerId}
-    assert(TouchedBroadcastBytesPerId == 24L)
-    // 1g default → ~44.7 M ids, UNDER the 64 M static ceiling
-    val oneGig = 1L << 30
-    assert(touchedBroadcastCeiling(oneGig) == oneGig / 24)
-    assert(touchedBroadcastCeiling(oneGig) < TouchedBroadcastMaxIds)
-    // a raised maxResultSize (4g) clears the static ceiling — the
-    // heap/broadcast-limit bound takes over
-    assert(touchedBroadcastCeiling(4L << 30) == TouchedBroadcastMaxIds)
-    // 0 = unlimited in Spark's convention: static ceiling only
-    assert(touchedBroadcastCeiling(0L) == TouchedBroadcastMaxIds)
-    // the per-call override (the spec fallback test passes 0) still caps
-    assert(touchedBroadcastCeiling(oneGig, staticCeiling = 0L) == 0L)
-  }
-
-  test("pruned builders refuse a non-deterministic input frame loudly") {
-    // ADVICE r17: the pruned regime evaluates the uncached base in three
-    // branches and silently drops pairs if `docs` re-evaluates
-    // differently; the guard must fire at plan-build time with the
-    // localCheckpoint remedy in the message. A checkpointed frame (the
-    // remedy itself) passes and stays result-identical.
-    val nd = docs.withColumn("salt", rand()).drop("salt")
-    val ex = intercept[IllegalArgumentException] {
-      DedupOps.minhashPairsFromDocs(spark, nd, pruneVerify = true)
-    }
-    assert(ex.getMessage.contains("localCheckpoint"))
-    val ex2 = intercept[IllegalArgumentException] {
-      DedupOps.minhashPairsIncremental(spark,
-        nd.filter(col("doc_id") % 5 =!= 0), nd.filter(col("doc_id") % 5 === 0),
-        pruneVerify = true)
-    }
-    assert(ex2.getMessage.contains("localCheckpoint"))
-    val pinned = nd.localCheckpoint(true)
-    val viaCheckpoint = DedupOps.minhashPairsFromDocs(spark, pinned,
-        pruneVerify = true)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    val unpruned = DedupOps.minhashPairsFromDocs(spark, docs)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    assert(viaCheckpoint == unpruned)
-    // VERDICT r18 item 3: plan-LEVEL nondeterminism must be caught too —
-    // Sample's row membership (and an unordered Limit's row choice) is a
-    // function of upstream partitioning, which can shift between the
-    // three base re-evaluations with every EXPRESSION still
-    // deterministic, so the expression-only scan used to wave it through.
-    val sampled = docs.sample(0.5, seed = 42L)
-    val exS = intercept[IllegalArgumentException] {
-      DedupOps.minhashPairsFromDocs(spark, sampled, pruneVerify = true)
-    }
-    assert(exS.getMessage.contains("Sample") &&
-      exS.getMessage.contains("localCheckpoint"))
-    val limited = docs.limit(100)
-    val exL = intercept[IllegalArgumentException] {
-      DedupOps.minhashPairsFromDocs(spark, limited, pruneVerify = true)
-    }
-    assert(exL.getMessage.contains("Limit") &&
-      exL.getMessage.contains("localCheckpoint"))
-    // the remedy pins the sampled rows and the pruned result matches the
-    // unpruned pipeline over the same checkpointed frame
-    val sampledPinned = sampled.localCheckpoint(true)
-    val prunedSampled = DedupOps.minhashPairsFromDocs(spark, sampledPinned,
-        pruneVerify = true)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    val unprunedSampled = DedupOps.minhashPairsFromDocs(spark, sampledPinned)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    assert(prunedSampled == unprunedSampled)
-  }
-
-  test("touched-id broadcast ceiling falls back to the unpruned verify") {
-    // ADVICE r17: broadcast(touched) is rate-bounded, not law-bounded —
-    // past the ceiling the pruned verify must degrade to the sort-merge
-    // shape (result-identical) instead of dying mid-broadcast. Forced
-    // here with maxBroadcastIds = 0 on hand-built frames.
-    import spark.implicits._
-    val base = Seq(
-      (1L, Seq("a b c", "b c d", "c d e", "d e f")),
-      (2L, Seq("a b c", "b c d", "c d e")),
-      (3L, Seq("p q r", "q r s", "r s t"))).toDF("doc_id", "sh")
-    val cand = Seq((1L, 2L), (1L, 3L)).toDF("doc_a", "doc_b")
-    val touched = Seq(1L, 2L, 3L).toDF("doc_id")
-    val viaBroadcast = DedupOps.verifyPruned(cand, base, touched)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    val viaFallback = DedupOps.verifyPruned(cand, base, touched,
-        maxBroadcastIds = 0L)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    assert(viaBroadcast == viaFallback)
-    // (1,2) survives at jaccard 3/4; (1,3) is verified away at 0
-    assert(viaBroadcast.map(r => (r.getLong(0), r.getLong(1))) == Seq((1L, 2L)))
-  }
-
-  test("index-fed pruned pairing equals the from-docs pipeline") {
-    // r18: the daily loop persists the band index anyway, so the pruned
-    // bootstrap feeds its candidate join and touched set from those
-    // rows instead of re-banding the corpus — must be pair- and
-    // jaccard-exact against the from-scratch builder.
-    val ix = DedupOps.minhashIndex(spark, docs, uncachedBase = true)
-    val viaIndex = DedupOps.minhashPairsFromIndex(spark, docs, ix)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    val fromDocs = DedupOps.minhashPairsFromDocs(spark, docs)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    assert(viaIndex == fromDocs)
-    assert(viaIndex.nonEmpty)
   }
 
   test("empty fresh batch pairs nothing; everything-fresh equals batch") {

@@ -333,16 +333,14 @@ class LlmOpsSpec extends AnyFunSuite with SessionLeakCheck {
   }
 
   test("JL production path (vec_dot sign literals) matches the exact twin") {
-    // sf0.1 (N = 2000 > 512) routes q_embed_rp to the production plan:
-    // sign matrix as array literals scored by codegen vec_dot, zero
-    // shuffle. Its projections must agree with the exploded exact-decimal
-    // oracle twin to the rounding precision (the decimal chain truncates
-    // each term at 12 frac digits, so the two rounded-to-6 values can sit
-    // one ulp-of-round apart at a boundary — hence the 1e-6 tolerance).
+    // q_embed_rp's one plan: sign matrix as array literals scored by
+    // codegen vec_dot, zero shuffle. At sf0.1 its projections must agree
+    // with an in-test exploded exact-decimal reference to the rounding
+    // precision (the decimal chain truncates each term at 12 frac digits,
+    // so the two rounded-to-6 values can sit one ulp-of-round apart at a
+    // boundary — hence the 1e-6 tolerance).
     import org.apache.spark.sql.types.DecimalType
     val sfBig = "/root/testdata/sf0.1"
-    assert(Tables.embeddings(spark, sfBig).count() > queries.SimilarityOps.VerifyExactGate,
-      "sf0.1 no longer exercises the production JL path")
     val fast = SparkEntry.queries("q_embed_rp")(spark, sfBig)
       .select(col("vec_id"), col("dim"), col("r").as("r_fast"))
     val flat = Tables.embeddings(spark, sfBig)

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * each, all held until session end. The fix memoizes on the semantic hash
   * of the input plan — this spec pins that contract.
   */
-class MinhashCacheSpec extends AnyFunSuite {
+class MinhashCacheSpec extends AnyFunSuite with SessionLeakCheck {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -50,6 +50,30 @@ class MinhashCacheSpec extends AnyFunSuite {
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert(during.size - after.size >= 1,
       s"release freed nothing (before=${before.size}, during=${during.size}, after=${after.size})")
+    DedupOps.releaseAllMinhashBases(spark)
+  }
+
+  test("two probes of one batch share one pin until the last release") {
+    // Semantically equal candidate plans share one CacheManager entry;
+    // the first release must not drop the cache the second call reads.
+    import org.apache.spark.sql.functions.col
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    val existing = docs.filter(col("doc_id") % 10 =!= 0)
+    val fresh = docs.filter(col("doc_id") % 10 === 0)
+    val index = DedupOps.minhashIndex(spark, existing).localCheckpoint(true)
+    def ids = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = ids
+    val (_, release1) = DedupOps.minhashPairsAgainstIndexReleasable(
+      spark, index, existing, fresh)
+    val pinned = ids -- before
+    val (_, release2) = DedupOps.minhashPairsAgainstIndexReleasable(
+      spark, index, existing, fresh)
+    assert(pinned.nonEmpty && ids == before ++ pinned,
+      "the second probe did not reuse the first probe's cached candidates")
+    release1()
+    assert(pinned.subsetOf(ids), "the first release dropped the shared pin")
+    release2()
+    assert(!pinned.subsetOf(ids), "the last release freed nothing")
     DedupOps.releaseAllMinhashBases(spark)
   }
 

@@ -487,50 +487,55 @@ class ScalePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("JL production path is one zero-shuffle scan (no exchange, no join)") {
-    // above the verify gate the projection must be a pure narrow map:
-    // sign literals + codegen vec_dot + a 16-struct explode — nothing to
-    // shuffle, nothing to join, at any corpus size
+    // the projection must be a pure narrow map: sign literals + codegen
+    // vec_dot + a 16-struct explode — nothing to shuffle, nothing to
+    // join, at any corpus size
     val plan = finalPlan(SparkEntry.queries("q_embed_rp")(spark, "/root/testdata/sf0.1"))
     assert(!plan.contains("Exchange"), s"JL production plan shuffles:\n$plan")
     assert(!plan.contains("Join"), s"JL production plan joins:\n$plan")
   }
 
-  test("VerifyExactGate sweep: production plans above the gate are vec_dot-native") {
-    // One sweep locking EVERY twin-gated query: above the gate the plan
-    // must not regress to the 64-way exploded exact-decimal oracle chain
-    // — no posexplode of the corpus embeddings, no decimal(28,12)
-    // arithmetic. (Below the gate the driver's DuckDB hash check IS the
-    // guarantee, so only the production side needs a plan lock.)
-    // q_sim_ann_ivf's corpus scoring is vec_dot-native too but its plan
-    // prints the cached k×dim TRAINING relation — sample-bounded and
-    // decimal by design for deterministic Lloyd means — so it is covered
-    // by its recall spec rather than a text match here.
-    val big = "/root/testdata/sf0.1" // 2000 vectors, above the 512 gate
-    def assertNative(name: String, plan: String): Unit = {
-      assert(!plan.contains("posexplode"),
-        s"$name: dim explode in production plan:\n$plan")
-      assert(!plan.contains("decimal(28,12)"),
-        s"$name: exact-decimal twin arithmetic in production plan:\n$plan")
+  test("one-plan sweep: vector queries are vec_dot-native at sf0.01 and sf0.1") {
+    // The correctness gate hashes sf0.01 and the bench times sf0.1, so
+    // both must run the SAME plan: no query may fall back to the 64-way
+    // exploded exact-decimal chain at either scale — no posexplode of
+    // the corpus embeddings, no decimal(28,12) arithmetic, and the
+    // codegen vec_dot scoring present.
+    for (dir <- Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
+      def assertNative(name: String, plan: String): Unit = {
+        assert(!plan.contains("posexplode"),
+          s"$name @ $dir: dim explode in the plan:\n$plan")
+        assert(!plan.contains("decimal(28,12)"),
+          s"$name @ $dir: exact-decimal arithmetic in the plan:\n$plan")
+        assert(plan.contains("vec_dot"), s"$name @ $dir: no vec_dot scoring:\n$plan")
+      }
+      for (name <- Seq("q_embed_rp", "q_sim_topk", "q_sim_batch_topk"))
+        assertNative(name, finalPlan(SparkEntry.queries(name)(spark, dir)))
+      // the shared near-dup pair chain (memo bypassed so the plan is visible)
+      assertNative("embeddingCosPairs",
+        finalPlan(queries.DedupOps.embeddingCosPairs(spark, dir)))
+      // the coarse k-means distance table: the cached relation's stored
+      // plan carries no explode of the scanned embedding column and no
+      // decimal distances (the Lloyd means explode the cast vectors of
+      // the assigned rows once, a training step, not the exact chain)
+      queries.SimilarityOps.releaseCoarseKmeans(spark, dir)
+      val coarsePlan = {
+        queries.SimilarityOps.warmCoarseKmeans(spark, dir)
+        finalPlan(SparkEntry.queries("q_embed_kmeans")(spark, dir))
+      }
+      assert(!coarsePlan.contains("posexplode(embedding"),
+        s"q_embed_kmeans @ $dir: corpus dim explode in the coarse table:\n$coarsePlan")
+      assert(!coarsePlan.contains("decimal(28,12)"),
+        s"q_embed_kmeans @ $dir: exact-decimal distances in the coarse table:\n$coarsePlan")
+      queries.SimilarityOps.releaseCoarseKmeans(spark, dir)
+      // IVF: the training relation keeps decimal Lloyd means by design,
+      // so the lock is on the scoring kernel — the vec_nearest assignment
+      // (the exact twin scored with a decimal distance fold instead)
+      val ivf = finalPlan(SparkEntry.queries("q_sim_ann_ivf")(spark, dir))
+      assert(ivf.contains("vec_nearest"),
+        s"q_sim_ann_ivf @ $dir: not the vec_nearest production plan:\n$ivf")
+      queries.SimilarityOps.releaseIvfCentroids(spark, dir)
     }
-    for (name <- Seq("q_embed_rp", "q_sim_topk", "q_sim_batch_topk"))
-      assertNative(name, finalPlan(SparkEntry.queries(name)(spark, big)))
-    // the shared near-dup pair chain (memo bypassed so the plan is visible)
-    assertNative("embeddingCosPairs",
-      finalPlan(queries.DedupOps.embeddingCosPairs(spark, big)))
-    // the coarse k-means distance table (r8): above the gate the trainer
-    // runs the vec_dot float chain — the cached relation's stored plan
-    // must carry no dim explode of the corpus and no decimal distances.
-    // (posexplode of the 8-row centroid MEANS aggregate is not corpus
-    // work; the assert below is on the full chain, which keeps it out of
-    // the scan side by construction.)
-    queries.SimilarityOps.releaseCoarseKmeans(spark, big)
-    val coarsePlan = {
-      queries.SimilarityOps.warmCoarseKmeans(spark, big)
-      finalPlan(SparkEntry.queries("q_embed_kmeans")(spark, big))
-    }
-    assert(!coarsePlan.contains("decimal(28,12)"),
-      s"q_embed_kmeans: exact-decimal twin arithmetic above the gate:\n$coarsePlan")
-    queries.SimilarityOps.releaseCoarseKmeans(spark, big)
   }
 
   test("exact-cosine production shapes: scan-only top-k, single blocked pair join") {
@@ -590,36 +595,5 @@ class ScalePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       hourly.queryExecution.optimizedPlan)
     assert(reb.head.partitionExpressions.size == 2,
       s"expected rebalance on (date, hour): ${reb.head.partitionExpressions}")
-  }
-
-  test("pruned verify: the touched semi broadcasts, the base never exchanges for it") {
-    // The property whose loss ENOSPC'd the 5 M daily-loop bootstrap
-    // (r17, four measured shapes): the candidate-touched id semi-join
-    // must be a STATIC BroadcastHashJoin — a sort-merge semi SORTS the
-    // full array-carrying shingle base, and a shuffled-hash semi still
-    // lands its map-side shuffle on disk before AQE can act. Locked as
-    // a plan shape, not just a scaladoc claim: any planner/hint
-    // regression that reintroduces an exchange under the semi fails
-    // here, at spec scale, instead of at 5 M docs on a full disk.
-    val docs = queries.DedupOps.withPlanted(spark, sf)
-    val pruned = queries.DedupOps.minhashPairsFromDocs(spark, docs,
-      pruneVerify = true)
-    val plan = pruned.queryExecution.sparkPlan.toString
-    val lines = plan.linesIterator.toSeq
-    assert(lines.exists(l => l.contains("BroadcastHashJoin")
-        && l.contains("LeftSemi")),
-      s"touched-id pruning is not a broadcast semi:\n$plan")
-    assert(!lines.exists(l => l.contains("LeftSemi")
-        && (l.contains("SortMergeJoin") || l.contains("ShuffledHashJoin"))),
-      s"the pruned semi exchanges the shingle base — the 5 M ENOSPC " +
-        s"shape is back:\n$plan")
-    // the exact-verify joins themselves stay sort-merge (the merge
-    // hints: broadcasting pairs-with-shingle-arrays collects >1 GiB to
-    // the driver at 300 k docs)
-    assert(lines.exists(l => l.contains("SortMergeJoin")
-        && l.contains("Inner")),
-      s"exact-verify joins lost their sort-merge pin:\n$plan")
-    // building the plan pinned the touched-id set; free it for later suites
-    queries.DedupOps.releaseAllMinhashBases(spark)
   }
 }

@@ -215,11 +215,11 @@ class SemIndexSpec extends AnyFunSuite with SessionLeakCheck {
       driverMaxBytes = 8L << 30) == (8L << 30))
   }
 
-  test("q_dedup_incremental_sem survives the (VerifyExactGate, hierarchical-require] gap") {
-    // ADVICE r15: with the bare n > 512 branch, any corpus in
-    // (512, ~1365] crashed on semIndexTrain's hierarchical-regime
-    // require (semK(bootstrap) ≤ FlatKCap there). Such corpora must fall
-    // through to the exact chain instead. n = 1000: semK(750) = 12 ≤ 16.
+  test("q_dedup_incremental_sem runs the exact chain at semK(bootstrap) <= FlatKCap") {
+    // ADVICE r15: a bare n > 512 branch crashed any corpus in
+    // (512, ~1365] on semIndexTrain's hierarchical-regime require
+    // (semK(bootstrap) ≤ FlatKCap there). Such corpora must run the
+    // exact chain instead. n = 1000: semK(750) = 12 ≤ 16.
     import spark.implicits._
     val dir = java.nio.file.Files
       .createTempDirectory("graft-semgap").toString
