@@ -57,6 +57,7 @@ object Merge {
     graft.ops.Hints.broadcastIfSmall(df)
 
   def run(spark: SparkSession, in: Inputs): Output = {
+    graft.ops.LocalFs.install(spark)
     // ── validate + dedup raw rows (F3, A1) ────────────────────────────
     val raw = in.rawTxs
       .withColumn("hash", lower(col("hash")))
@@ -68,9 +69,11 @@ object Merge {
         col("f.raw_tx_hex").as("raw_tx_hex"))
 
     // ── blacklist anti-join before the parse (J2) ─────────────────────
+    // no distinct on the blacklist: an anti-join only tests existence, and
+    // a distinct there costs a shuffle of its own
     val fresh = in.blacklist match {
       case Some(bl) =>
-        val blNorm = bl.select(lower(col("hash")).as("hash")).distinct()
+        val blNorm = bl.select(lower(col("hash")).as("hash"))
         deduped.join(broadcastIfSmall(blNorm), Seq("hash"), "left_anti")
       case None => deduped
     }
@@ -93,9 +96,12 @@ object Merge {
         lit("merge").as("source"), col("reason"), lit("").as("notes"))
 
     // ── sources attach (A2 dedup → J1 join, O3 order) ─────────────────
+    // one exchange on `hash` serves both aggregates: hashpartitioning(hash)
+    // satisfies the (hash, source) grouping as well as the hash one
     val sourcesByHash = in.sourcelog
       .withColumn("hash", lower(col("hash")))
       .filter(validHash(col("hash")))
+      .repartition(col("hash"))
       .groupBy("hash", "source").agg(min("timestamp_ms").as("first_ts")) // A2
       .groupBy("hash")
       .agg(transform(

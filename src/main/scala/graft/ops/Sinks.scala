@@ -17,6 +17,7 @@ object Sinks {
     * tags). Readers get them back as epoch-ms longs via
     * [[graft.ops.Sources.readArchive]]. */
   def writeParquetArchive(txs: DataFrame, path: String): Unit = {
+    LocalFs.install(txs.sparkSession)
     SessionConf.withConf(txs.sparkSession, OutputTimestampMillis) {
       val annotated = Seq("timestamp", "includedBlockTimestamp")
         .foldLeft(txs) { (df, c) =>
@@ -49,6 +50,7 @@ object Sinks {
     * row's receive timestamp. */
   def writeDailyArchive(rows: DataFrame, path: String,
       dayOf: org.apache.spark.sql.Column): Unit = {
+    LocalFs.install(rows.sparkSession)
     SessionConf.withConf(rows.sparkSession, OutputTimestampMillis) {
       val annotated = Seq("timestamp", "includedBlockTimestamp")
         .foldLeft(rows.withColumn("day", dayOf)) { (df, c) =>
@@ -98,6 +100,7 @@ object Sinks {
     * finishes the job idempotently. */
   def compactDailyArchive(spark: org.apache.spark.sql.SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024): Map[String, (Int, Int)] = {
+    LocalFs.install(spark)
     val hconf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(hconf)
@@ -296,7 +299,8 @@ object Sinks {
 
   /** S12: metadata CSV — no rawTx, epoch-ms timestamps, space-joined
     * sources (common/txsummary.go:89-110). */
-  def writeMetadataCsv(txs: DataFrame, path: String): Unit =
+  def writeMetadataCsv(txs: DataFrame, path: String): Unit = {
+    LocalFs.install(txs.sparkSession)
     txs.select(
       col("timestamp").cast("long").as("timestamp_ms"),
       col("hash"),
@@ -313,29 +317,36 @@ object Sinks {
       col("inclusionDelayMs").as("inclusion_delay_ms"),
       col("txType").as("tx_type"))
       .write.option("header", "true").mode("overwrite").csv(path)
+  }
 
   /** S12: raw-transactions CSV — timestamp_ms,hash,raw_tx with 0x-prefixed
     * lowercase hex payload, ts-sorted (cmd/merge/transactions.go:208,253-263;
     * the optional --write-tx-csv output alongside the metadata CSV). */
-  def writeRawTxCsv(txs: DataFrame, path: String): Unit =
+  def writeRawTxCsv(txs: DataFrame, path: String): Unit = {
+    LocalFs.install(txs.sparkSession)
     txs.select(
       col("timestamp").cast("long").as("timestamp_ms"),
       col("hash"),
       concat(lit("0x"), lower(hex(col("rawTx")))).as("raw_tx"))
       .orderBy("timestamp_ms")
       .write.option("header", "true").mode("overwrite").csv(path)
+  }
 
   /** S12: sourcelog CSV, ts-sorted (cmd/merge/sourcelog.go:64-108). */
-  def writeSourcelogCsv(sourcelog: DataFrame, path: String): Unit =
+  def writeSourcelogCsv(sourcelog: DataFrame, path: String): Unit = {
+    LocalFs.install(sourcelog.sparkSession)
     sourcelog.select("timestamp_ms", "hash", "source")
       .orderBy("timestamp_ms")
       .write.option("header", "true").mode("overwrite").csv(path)
+  }
 
   /** S12: trash CSV (cmd/merge/trash.go:64-108). */
-  def writeTrashCsv(trash: DataFrame, path: String): Unit =
+  def writeTrashCsv(trash: DataFrame, path: String): Unit = {
+    LocalFs.install(trash.sparkSession)
     trash.select("timestamp_ms", "hash", "source", "reason", "notes")
       .orderBy("timestamp_ms")
       .write.option("header", "true").mode("overwrite").csv(path)
+  }
 
   /** S14: batched-JDBC streaming sink contract (collector/clickhouse.go:
     * 92-242): a foreachBatch function with dedup-before-insert, bounded
@@ -455,10 +466,12 @@ object Sinks {
     * small-files explosion at any scale — while a plain repartition on
     * the keys would put each bucket in exactly ONE task and serialize hot
     * hours; rebalance splits oversized buckets across tasks instead. */
-  def writeHourlyBucketed(df: DataFrame, tsCol: String, path: String): Unit =
+  def writeHourlyBucketed(df: DataFrame, tsCol: String, path: String): Unit = {
+    LocalFs.install(df.sparkSession)
     hourlyBucketedRows(df, tsCol)
       .write.partitionBy("date", "hour")
       .option("header", "true").mode("overwrite").csv(path)
+  }
 
   /** The hourly sink's pre-write plan, exposed so ScalePlanSpec can assert
     * the rebalance actually resolves (a misspelled hint is silently

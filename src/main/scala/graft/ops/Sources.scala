@@ -76,12 +76,13 @@ object Sources {
     * common/txsfile.go:212-239). Headers are skipped by the hash-validity
     * filter itself — positional, like the reference. The fixed two-column
     * schema reads any column count, and spares the job a schema-less read
-    * runs to count the first line's columns. */
+    * runs to count the first line's columns. A hash listed twice stays
+    * twice: the merge's anti-join only tests existence, and a distinct
+    * here would cost it a shuffle. */
   def readMetadataHashes(spark: SparkSession, paths: String*): DataFrame =
     spark.read.schema("_c0 STRING, _c1 STRING").csv(paths: _*)
       .select(lower(col("_c1")).as("hash"))
       .filter(validHash(col("hash")))
-      .distinct()
 
   /** S2: CSV-in-ZIP ingestion (common/txsfile.go:46-68 behavior): iterate
     * the `.csv` members of each `.csv.zip` archive. Spark has no zip codec,

@@ -374,6 +374,7 @@ object Collect {
       trigger: Trigger, observeSources: Option[Seq[String]],
       dedupWith: DataFrame => DataFrame,
       beforeTrashPublish: Long => Unit): StreamingQuery = {
+    graft.ops.LocalFs.install(stream.sparkSession)
     val fs = new Path(outDir).getFileSystem(stream.sparkSession.sparkContext.hadoopConfiguration)
     val chk = new Path(outDir, "_chk")
     val old = Seq("transactions", "trash").map(new Path(chk, _)).filter(fs.exists)

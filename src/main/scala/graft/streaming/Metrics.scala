@@ -41,6 +41,10 @@ object CollectorMetrics {
   val TxReceived = "mempool_dumpster_tx_received_total"
   val TxReceivedFirst = "mempool_dumpster_tx_received_first"
   val TxReceivedTrash = "mempool_dumpster_tx_received_trash"
+  /** Rows the collector's dedup dropped behind its watermark: they reach
+    * neither sink and no `received_*` split. The reference has no such
+    * drop (its TTL keys on receipt), so the counter is this engine's. */
+  val TxDroppedLate = "mempool_dumpster_tx_dropped_late_total"
   // metrics/metrics.go:14-18 sink counters
   val ChErrors = "mempool_dumpster_clickhouse_errors_total"
   val ChErrorsBatchSave = "mempool_dumpster_clickhouse_errors_batch_save_total"
@@ -56,6 +60,11 @@ object CollectorMetrics {
     "graft_received" -> TxReceived, // tx_processor.go:207
     "graft_first" -> TxReceivedFirst, // tx_processor.go:291
     "graft_trash" -> TxReceivedTrash) // tx_processor.go:251,271
+
+  /** The state operators [[Collect.dedup]] and [[Collect.dedupStateful]]
+    * plan, by `StateOperatorProgress.operatorName`. */
+  private[streaming] val dedupOperators =
+    Set("dedupeWithinWatermark", "flatMapGroupsWithState")
 
   /** Attach a metrics observation to a stage: one exact count of the rows
     * matching `where` plus a count per configured source tag (the
@@ -73,16 +82,22 @@ object CollectorMetrics {
   }
 }
 
-/** Folds per-batch `observe()` rows into [[CollectorMetrics]] counters.
-  * Register once per session: `spark.streams.addListener(…)`. Events are
-  * delivered asynchronously after each micro-batch commits. */
+/** Folds per-batch `observe()` rows into [[CollectorMetrics]] counters,
+  * and the dedup operators' `numRowsDroppedByWatermark` into
+  * [[CollectorMetrics.TxDroppedLate]]. Register once per session:
+  * `spark.streams.addListener(…)`. Events are delivered asynchronously
+  * after each micro-batch commits. */
 final class GraftMetricsListener(metrics: CollectorMetrics)
     extends StreamingQueryListener {
 
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
   override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
 
-  override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+  override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+    val late = e.progress.stateOperators
+      .filter(op => CollectorMetrics.dedupOperators(op.operatorName))
+      .map(_.numRowsDroppedByWatermark).sum
+    if (late != 0L) metrics.add(CollectorMetrics.TxDroppedLate, late)
     e.progress.observedMetrics.asScala.foreach { case (name, row) =>
       CollectorMetrics.stageMetric.get(name).foreach { base =>
         val fields = row.schema.fieldNames
@@ -99,4 +114,5 @@ final class GraftMetricsListener(metrics: CollectorMetrics)
         }
       }
     }
+  }
 }

@@ -165,8 +165,10 @@ class CollectStreamSpec extends AnyFunSuite with SessionLeakCheck {
     // pass the filter, but a timeout at ts + 30 min would sit behind the
     // watermark, which Spark refuses with an IllegalArgumentException
     // that kills the query. Such a row is emitted with no state kept;
-    // batch 2's rows are behind batch 1's watermark and dropped as late.
-    import graft.streaming.Collect.{dedupStateful, feed, startCollector}
+    // batch 2's rows are behind batch 1's watermark and dropped as late,
+    // which both dedup paths count in the late-row counter.
+    import graft.streaming.Collect.{dedup, dedupStateful, feed, startCollector}
+    import graft.streaming.{CollectorMetrics, GraftMetricsListener}
     val in = Files.createTempDirectory("graft-feed-late").toString
     val out = Files.createTempDirectory("graft-collect-late").toString
     val t0 = 1693785600000L
@@ -186,10 +188,27 @@ class CollectStreamSpec extends AnyFunSuite with SessionLeakCheck {
         java.nio.file.attribute.FileTime.fromMillis(mtime0 + f * 1000L))
       lines.map(_._1)
     }
-    val q = startCollector(feed(spark, in), out, Trigger.AvailableNow(), None,
-      dedupStateful, _ => ())
-    try q.awaitTermination() finally q.stop()
+    // the drained query and the rows its listener counted as late
+    def drain(dedupWith: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+        dir: String) = {
+      val metrics = new CollectorMetrics
+      val listener = new GraftMetricsListener(metrics)
+      spark.streams.addListener(listener)
+      try {
+        val q = startCollector(feed(spark, in), dir, Trigger.AvailableNow(), None, dedupWith, _ => ())
+        try q.awaitTermination() finally q.stop()
+        // progress reaches listeners asynchronously
+        val deadline = System.nanoTime() + 10000000000L
+        while (metrics.get(CollectorMetrics.TxDroppedLate) < 24 && System.nanoTime() < deadline)
+          Thread.sleep(50)
+        (q, metrics.get(CollectorMetrics.TxDroppedLate))
+      } finally spark.streams.removeListener(listener)
+    }
+    val (q, late) = drain(dedupStateful, out)
     assert(q.exception.isEmpty, s"collector failed: ${q.exception}")
+    assert(late == 24, "batch 2's 8 files of 3 rows are the late rows")
+    val (builtin, builtinLate) = drain(dedup, Files.createTempDirectory("graft-collect-late-b").toString)
+    assert(builtin.exception.isEmpty && builtinLate == 24, s"built-in dedup: $builtinLate late rows")
     assert(q.recentProgress.count(_.numInputRows > 0) == 3,
       "the feed no longer splits into three 16-file batches")
     val got = spark.read.csv(s"$out/transactions").select("_c1")

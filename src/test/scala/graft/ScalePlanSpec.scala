@@ -113,6 +113,44 @@ class ScalePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"small dims should still broadcast:\n$smallPlan")
   }
 
+  test("merge DAG: no exchange under the blacklist broadcast, one on the sourcelog side") {
+    // the anti-join only tests existence, so the blacklist broadcasts as
+    // read; hashpartitioning(hash) serves both sourcelog aggregates. AQE
+    // is off so that the plan holds every exchange EnsureRequirements
+    // plans, including those inside the cached parse stage.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    val s = spark
+    import s.implicits._
+    val raws = (0 until 64).map(i => (1000L + i, f"0x$i%064x", "0x02dead"))
+      .toDF("timestamp_ms", "hash", "raw_tx_hex")
+    val slog = (0 until 64).flatMap(i => Seq((1000L + i, f"0x$i%064x", "a"), (900L + i, f"0x$i%064x", "b")))
+      .toDF("timestamp_ms", "hash", "source")
+    val blocks = (0 until 8).map(i => (f"0x$i%064x", 100L + i, 2000L + i))
+      .toDF("hash", "block_number", "block_ts_ms")
+    val bl = Seq(f"0x${3}%064x", f"0x${3}%064x").toDF("hash")
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case _ => p.children
+    }).flatMap(nodes)
+    def shuffles(p: SparkPlan): Int = nodes(p).count(_.isInstanceOf[ShuffleExchangeExec])
+    val plan = ops.SessionConf.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      val out = jobs.Merge.run(spark, jobs.Merge.Inputs(raws, slog, Some(bl), Some(blocks)))
+      try out.transactions.queryExecution.executedPlan finally out.parsed.unpersist(false)
+    }
+    val blacklist = nodes(plan).collect {
+      case b: BroadcastExchangeExec if b.child.output.map(_.name) == Seq("hash") => b
+    }
+    assert(blacklist.size == 1, s"no single blacklist broadcast:\n$plan")
+    assert(shuffles(blacklist.head) == 0, s"exchange under the blacklist broadcast:\n${blacklist.head}")
+    val sources = nodes(plan).collectFirst {
+      case a: BaseAggregateExec if a.output.exists(_.name == "sources") => a
+    }
+    assert(sources.exists(shuffles(_) == 1), s"sourcelog side:\n$plan")
+  }
+
   test("ungated merge joins: AQE promotes to broadcast from observed sizes") {
     // The other half of the gate's contract: when the STATIC estimate is
     // too coarse to hint (a range+filter plan estimates at the unfiltered

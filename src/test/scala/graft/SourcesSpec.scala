@@ -16,8 +16,21 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** File-to-file pipeline: collector CSV layouts in → merge → archive out,
   * exercising S1/S3 readers against S11/S12 writers. */
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with SessionLeakCheck {
   private lazy val spark = SparkTestSession.spark
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+  private var nanosAsLong: Option[String] = None
+
+  override protected def beforeAll(): Unit = {
+    super.beforeAll()
+    nanosAsLong = spark.conf.getAll.get(NanosAsLong)
+  }
+
+  // Tables.events sets the key for the plans it returns, and the daily
+  // events archive this suite reads is written by now
+  override protected def afterAll(): Unit =
+    try nanosAsLong.fold(spark.conf.unset(NanosAsLong))(spark.conf.set(NanosAsLong, _))
+    finally super.afterAll()
 
   test("collector CSVs -> merge -> parquet archive round-trip") {
     val dir = Files.createTempDirectory("graft-files").toString
@@ -58,6 +71,8 @@ class SourcesSpec extends AnyFunSuite {
       Sources.readSourcelogCsv(spark, s"$dir/sourcelog.csv"), s"$dir/sl_out")
     val slBack = Sources.readSourcelogCsv(spark, s"$dir/sl_out/*.csv")
     assert(slBack.count() > 0)
+    txs.unpersist()
+    out.parsed.unpersist()
   }
 
   test("readMetadataHashes: column-1 hashes of metadata, two-column, one-column and junk files") {
