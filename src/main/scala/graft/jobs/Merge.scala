@@ -1,7 +1,7 @@
 package graft.jobs
 
 import graft.functions.ParseTx
-import graft.ops.Sources
+import graft.ops.{Analyze, Sources}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,8 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object Merge {
 
-  val TxAlreadyIncludedThresholdMs = 12000L // common/consts.go:23-24
-
   final case class Inputs(
       rawTxs: DataFrame, // timestamp_ms LONG, hash STRING, raw_tx_hex STRING
       sourcelog: DataFrame, // timestamp_ms LONG, hash STRING, source STRING
@@ -44,10 +42,6 @@ object Merge {
   final case class Output(transactions: DataFrame, trash: DataFrame,
       parsed: DataFrame)
 
-  /** P11 hash validity (common/sourcelog.go:41-48). */
-  def validHash(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    length(c) === 66 && c.rlike("^0x[0-9a-f]{64}$")
-
   /** [[graft.ops.Hints.broadcastIfSmall]] for the blacklist and blocks
     * sides: both derive from the scaling input (blocks is the included-tx
     * subset, ~25 % of all rows), so the hint is size-gated — and since
@@ -60,8 +54,8 @@ object Merge {
     graft.ops.LocalFs.install(spark)
     // ── validate + dedup raw rows (F3, A1) ────────────────────────────
     val raw = in.rawTxs
-      .withColumn("hash", lower(col("hash")))
-      .filter(validHash(col("hash")) && col("timestamp_ms").isNotNull)
+      .withColumn("hash", Sources.hexHash(col("hash")))
+      .filter(col("hash").isNotNull && col("timestamp_ms").isNotNull)
     val deduped = raw
       .groupBy("hash")
       .agg(min(struct(col("timestamp_ms"), col("raw_tx_hex"))).as("f"))
@@ -73,7 +67,7 @@ object Merge {
     // a distinct there costs a shuffle of its own
     val fresh = in.blacklist match {
       case Some(bl) =>
-        val blNorm = bl.select(lower(col("hash")).as("hash"))
+        val blNorm = bl.select(Sources.hexHash(col("hash")).as("hash"))
         deduped.join(broadcastIfSmall(blNorm), Seq("hash"), "left_anti")
       case None => deduped
     }
@@ -99,8 +93,8 @@ object Merge {
     // one exchange on `hash` serves both aggregates: hashpartitioning(hash)
     // satisfies the (hash, source) grouping as well as the hash one
     val sourcesByHash = in.sourcelog
-      .withColumn("hash", lower(col("hash")))
-      .filter(validHash(col("hash")))
+      .withColumn("hash", Sources.hexHash(col("hash")))
+      .filter(col("hash").isNotNull)
       .repartition(col("hash"))
       .groupBy("hash", "source").agg(min("timestamp_ms").as("first_ts")) // A2
       .groupBy("hash")
@@ -115,7 +109,7 @@ object Merge {
     // ── inclusion enrichment (J3) + delay (P13) ───────────────────────
     val enriched = (in.blocks, in.inclusionRpc) match {
       case (Some(blocks), _) =>
-        val dim = blocks.select(lower(col("hash")).as("hash"),
+        val dim = blocks.select(Sources.hexHash(col("hash")).as("hash"),
           col("block_number"), col("block_ts_ms"))
         withSources.join(broadcastIfSmall(dim), Seq("hash"), "left")
           .withColumn("includedAtBlockHeight", coalesce(col("block_number"), lit(0L)))
@@ -135,8 +129,7 @@ object Merge {
 
     // ── F1 discard + O1 global sort, reference column order ───────────
     val out = enriched
-      .filter(!(col("includedAtBlockHeight") > 0 &&
-        col("inclusionDelayMs") <= -TxAlreadyIncludedThresholdMs))
+      .filter(!Analyze.alreadyIncluded)
       .select("timestamp", "hash", "chainId", "txType", "from", "to", "value",
         "nonce", "gas", "gasPrice", "gasTipCap", "gasFeeCap", "dataSize",
         "data4Bytes", "sources", "includedAtBlockHeight",

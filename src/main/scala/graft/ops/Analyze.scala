@@ -19,6 +19,15 @@ object Analyze {
       tsFirstMs: Long, tsLastMs: Long,
       perType: Seq[TypeStat], perSource: Seq[SourceStat])
 
+  val TxAlreadyIncludedThresholdMs = 12000L
+
+  /** F1 (common/analyzer.go:68-73, common/consts.go:23-24): a tx
+    * included on-chain at least [[TxAlreadyIncludedThresholdMs]] before its
+    * first receipt was already included when collected. The merge discards
+    * such rows and the analyzer skips them. */
+  def alreadyIncluded: Column = col("includedAtBlockHeight") > 0 &&
+    col("inclusionDelayMs") <= -TxAlreadyIncludedThresholdMs
+
   /** txs: the merged transactions DataFrame (reference parquet schema).
     * Applies the F1 filter itself, like NewAnalyzer2 (common/analyzer.go:68-73).
     *
@@ -41,7 +50,7 @@ object Analyze {
     val first = col("pos").isNull || col("pos") === 0
     val listed = col("pos").isNotNull
     val groups = txsIn
-      .filter(!(col("includedAtBlockHeight") > 0 && col("inclusionDelayMs") <= -12000))
+      .filter(!alreadyIncluded)
       .select(col("txType"), rawBytes.as("rawBytes"), col("timestamp").cast("long").as("ts"),
         flag(included).as("inc"), flag(!included).as("notInc"),
         flag(exclusive).as("excl"), flag(exclusive && included).as("exclInc"),
@@ -86,7 +95,7 @@ object Analyze {
     * aggregation, fully distributed. */
   def perSourceStats(txs: DataFrame): DataFrame =
     txs
-      .filter(!(col("includedAtBlockHeight") > 0 && col("inclusionDelayMs") <= -12000))
+      .filter(!alreadyIncluded)
       .select((col("includedAtBlockHeight") =!= 0).as("included"),
         size(col("sources")).as("nSrc"), explode(col("sources")).as("source"))
       .groupBy("source")

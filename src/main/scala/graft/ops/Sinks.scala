@@ -327,7 +327,7 @@ object Sinks {
     txs.select(
       col("timestamp").cast("long").as("timestamp_ms"),
       col("hash"),
-      concat(lit("0x"), lower(hex(col("rawTx")))).as("raw_tx"))
+      concat(lit("0x"), Sources.lowerHex(hex(col("rawTx")))).as("raw_tx"))
       .orderBy("timestamp_ms")
       .write.option("header", "true").mode("overwrite").csv(path)
   }

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
   ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -40,12 +40,27 @@ object Sources {
     StructField("reason", StringType),
     StructField("notes", StringType)))
 
-  private def validHash(c: org.apache.spark.sql.Column) =
-    length(c) === 66 && c.rlike("^0x[0-9a-f]{64}$")
+  /** ASCII lowercase for hex text: folds the only upper-case letters a hex
+    * string or its `0x` prefix can hold. Spark's `lower` builds ICU's case
+    * tables the first time it runs in a JVM, about 0.7 s of a cold start;
+    * this fold never reaches them. */
+  def lowerHex(c: Column): Column = translate(c, "ABCDEFX", "abcdefx")
+
+  /** P11, the one hash rule (common/sourcelog.go:41-48) for every hash
+    * column: the value folded to ASCII lowercase when it is `0x` plus 64
+    * hex digits in either case, else null. Where that holds, the fold
+    * equals `lower`: no other character lowercases to a hex digit or `x`.
+    * `\z`, unlike `$`, admits no trailing line break. An already-lowercase
+    * hash, nearly every row, skips the fold: `translate` costs more per
+    * row than the regex, and the merge's re-check of the readers' output
+    * runs inlined into their pushed-down filters. */
+  def hexHash(c: Column): Column =
+    when(c.rlike("^0x[0-9a-f]{64}\\z"), c)
+      .when(c.rlike("^0[xX][0-9a-fA-F]{64}\\z"), lowerHex(c))
 
   /** P5: source-name normalization (common/consts.go:27-42): map known
     * provider URIs to their short tags, pass anything else through. */
-  def normalizeSource(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def normalizeSource(c: Column): Column =
     when(c.contains("alchemy.com/"), "alchemy")
       .when(c.contains("infura.io/"), "infura")
       .otherwise(c)
@@ -55,22 +70,22 @@ object Sources {
   def readTxCsv(spark: SparkSession, paths: String*): DataFrame =
     spark.read.schema(txCsvSchema).option("mode", "PERMISSIVE")
       .csv(paths: _*)
-      .withColumn("hash", lower(col("hash")))
-      .filter(col("timestamp_ms").isNotNull && validHash(col("hash")) &&
+      .withColumn("hash", hexHash(col("hash")))
+      .filter(col("timestamp_ms").isNotNull && col("hash").isNotNull &&
         col("raw_tx_hex").isNotNull)
 
   def readSourcelogCsv(spark: SparkSession, paths: String*): DataFrame =
     spark.read.schema(sourcelogCsvSchema).option("mode", "PERMISSIVE")
       .csv(paths: _*)
-      .withColumn("hash", lower(col("hash")))
-      .filter(col("timestamp_ms").isNotNull && validHash(col("hash")) &&
+      .withColumn("hash", hexHash(col("hash")))
+      .filter(col("timestamp_ms").isNotNull && col("hash").isNotNull &&
         col("source").isNotNull)
 
   def readTrashCsv(spark: SparkSession, paths: String*): DataFrame =
     spark.read.schema(trashCsvSchema).option("mode", "PERMISSIVE")
       .csv(paths: _*)
-      .withColumn("hash", lower(col("hash")))
-      .filter(col("timestamp_ms").isNotNull && validHash(col("hash")))
+      .withColumn("hash", hexHash(col("hash")))
+      .filter(col("timestamp_ms").isNotNull && col("hash").isNotNull)
 
   /** J2 input: hashes from previous-day metadata CSVs (column 1;
     * common/txsfile.go:212-239). Headers are skipped by the hash-validity
@@ -81,8 +96,8 @@ object Sources {
     * here would cost it a shuffle. */
   def readMetadataHashes(spark: SparkSession, paths: String*): DataFrame =
     spark.read.schema("_c0 STRING, _c1 STRING").csv(paths: _*)
-      .select(lower(col("_c1")).as("hash"))
-      .filter(validHash(col("hash")))
+      .select(hexHash(col("_c1")).as("hash"))
+      .filter(col("hash").isNotNull)
 
   /** S2: CSV-in-ZIP ingestion (common/txsfile.go:46-68 behavior): iterate
     * the `.csv` members of each `.csv.zip` archive. Spark has no zip codec,
@@ -144,9 +159,9 @@ object Sources {
     lines.toDF("value")
       .select(
         element_at(cols, 1).cast("long").as("timestamp_ms"),
-        lower(element_at(cols, 2)).as("hash"),
+        hexHash(element_at(cols, 2)).as("hash"),
         element_at(cols, 3).as("raw_tx_hex"))
-      .filter(col("timestamp_ms").isNotNull && validHash(col("hash")) &&
+      .filter(col("timestamp_ms").isNotNull && col("hash").isNotNull &&
         col("raw_tx_hex").isNotNull)
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.ParseTx
+import graft.ops.Sources
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.io.Text
 import org.apache.hadoop.mapred.lib.MultipleTextOutputFormat
@@ -293,7 +294,7 @@ object Collect {
     // reference holds in its bounded in-memory known-tx cache, and a
     // non-broadcast stream-static join would re-shuffle the stream every
     // micro-batch
-    val dim = broadcast(blocks.select(lower(col("hash")).as("hash"))
+    val dim = broadcast(blocks.select(Sources.hexHash(col("hash")).as("hash"))
       .withColumn("onchain", lit(true)))
     stream.join(dim, Seq("hash"), "left")
       .withColumn("reason",

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** `Analyze.summarize` against a plain-Scala recount of the same rows, and
   * its cost in Spark jobs. */
-class AnalyzeSpec extends AnyFunSuite {
+class AnalyzeSpec extends AnyFunSuite with SessionLeakCheck {
   private lazy val spark = SparkTestSession.spark
 
   private val schema = StructType(Seq(

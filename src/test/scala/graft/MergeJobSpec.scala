@@ -8,12 +8,17 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end merge-job semantics on deterministic synthetic mempool data. */
-class MergeJobSpec extends AnyFunSuite {
+class MergeJobSpec extends AnyFunSuite with SessionLeakCheck {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001" // only used for scaling (n=2000)
 
+  // mergeOutput caches the merged transactions and its inputs per session
   private lazy val out = MempoolParse.mergeOutput(spark, dir)
-  private lazy val txs = out.transactions.cache()
+  private lazy val txs = out.transactions
+
+  override protected def afterAll(): Unit =
+    try MempoolParse.releaseMerge(spark, dir)
+    finally super.afterAll()
 
   test("dedup: output hashes are unique and earliest timestamp wins") {
     val n = txs.count()
@@ -159,6 +164,7 @@ class MergeJobSpec extends AnyFunSuite {
         case (x, y) => assert(x == y, s"$name: $x != $y")
       }
     }
+    one.unpersist()
   }
 
   test("daily archive: day=… partitions, same file format, lossless read-back") {

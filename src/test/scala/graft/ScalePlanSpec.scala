@@ -151,6 +151,44 @@ class ScalePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sources.exists(shuffles(_) == 1), s"sourcelog side:\n$plan")
   }
 
+  test("hash columns never case-map: no Lower/Upper/InitCap in the readers, merge or inclusion check") {
+    // Spark builds ICU's case tables the first time any of these runs in a
+    // JVM (about 0.7 s of a cold merge); hex hashes fold without them
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower, Upper}
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_casemap").toString
+    val h = f"0x${7}%064x"
+    def csv(name: String, line: String): String = {
+      Files.writeString(java.nio.file.Paths.get(s"$dir/$name"), line + "\n")
+      s"$dir/$name"
+    }
+    def caseMaps(df: DataFrame): Seq[String] =
+      df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+        case e @ (_: Lower | _: Upper | _: InitCap) => e.sql
+      }))
+    val raws = Seq((1000L, h, "0x02dead")).toDF("timestamp_ms", "hash", "raw_tx_hex")
+    val slog = Seq((900L, h, "a")).toDF("timestamp_ms", "hash", "source")
+    val blocks = Seq((h, 100L, 2000L)).toDF("hash", "block_number", "block_ts_ms")
+    val out = jobs.Merge.run(spark, jobs.Merge.Inputs(raws, slog, Some(raws.select("hash")), Some(blocks)))
+    try {
+      val plans = Seq(
+        "readTxCsv" -> ops.Sources.readTxCsv(spark, csv("tx.csv", s"1,$h,0x02")),
+        "readSourcelogCsv" -> ops.Sources.readSourcelogCsv(spark, csv("sl.csv", s"1,$h,a")),
+        "readTrashCsv" -> ops.Sources.readTrashCsv(spark, csv("trash.csv", s"1,$h,a,r,n")),
+        "readMetadataHashes" -> ops.Sources.readMetadataHashes(spark, csv("meta.csv", s"1,$h")),
+        "readTxCsvZip" -> ops.Sources.readTxCsvZip(spark, s"$dir/*.csv.zip"),
+        "Merge.run transactions" -> out.transactions,
+        "Merge.run trash" -> out.trash,
+        "Collect.inclusionCheck" -> streaming.Collect.inclusionCheck(
+          raws.withColumn("reason", lit(null).cast("string")), blocks.select("hash")))
+      plans.foreach { case (name, df) =>
+        assert(caseMaps(df).isEmpty, s"$name case-maps: ${caseMaps(df)}")
+      }
+    } finally out.parsed.unpersist(false)
+  }
+
   test("ungated merge joins: AQE promotes to broadcast from observed sizes") {
     // The other half of the gate's contract: when the STATIC estimate is
     // too coarse to hint (a range+filter plan estimates at the unfiltered

@@ -236,6 +236,48 @@ class SourcesSpec extends AnyFunSuite with SessionLeakCheck {
     assert(Sources.readArchive(spark, s"$dir/order").columns.toSeq == Seq("timestamp", "k"))
   }
 
+  test("hexHash equals the lower + length + rlike rule it replaces, on ASCII and non-ASCII input") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val hexDigit = Gen.oneOf("0123456789abcdefABCDEF".toSeq)
+    val Odd = "gGzZxX \n\u212A\uFF21\uFF41\u0130\u00DF"
+    // one character swapped in: non-hex ASCII, a line break, or a non-ASCII
+    // letter: the Kelvin sign (lower case ASCII k), fullwidth Ａ and ａ,
+    // İ (lower case two characters long) and ß
+    val odd = Gen.oneOf("gGzZxX \nKＡａİß".toSeq)
+    val gen: Gen[Option[String]] = for {
+      prefix <- Gen.oneOf("0x", "0x", "0x", "0X", "0", "Ox", "x0", "")
+      n <- Gen.oneOf(63, 64, 64, 64, 65)
+      body <- Gen.listOfN(n, hexDigit).map(_.mkString)
+      swap <- Gen.frequency(2 -> Gen.const(None), 1 -> Gen.some(Gen.zip(Gen.chooseNum(0, 65), odd)))
+      isNull <- Gen.frequency(1 -> true, 15 -> false)
+    } yield {
+      val s = prefix + body
+      val t = swap.fold(s) { case (i, c) => s.patch(i % s.length, c.toString, 1) }
+      if (isNull) None else Some(t)
+    }
+    val in = (0 until 3000).flatMap(i => gen(Gen.Parameters.default, Seed(7L + i)))
+    val bytes = (0 until 50).map(i => Array.tabulate(i * 7)(j => (i * 31 + j * 17).toByte))
+    import spark.implicits._
+    val folded = lower(col("s"))
+    val old = when(length(folded) === 66 && folded.rlike("^0x[0-9a-f]{64}$"), folded)
+    val got = in.toDF("s")
+      .select(col("s"), Sources.hexHash(col("s")), old).collect()
+      .map(r => (Option(r.getString(0)), Option(r.getString(1)), Option(r.getString(2))))
+    got.foreach { case (s, now, was) => assert(now == was, s"input $s") }
+    val valid = got.filter(_._2.nonEmpty)
+    // the sample reaches both outcomes, folded input and every odd character
+    assert(valid.size > 300 && got.count(r => r._1.nonEmpty && r._2.isEmpty) > 300)
+    assert(valid.count(r => r._1 != r._2) > 100, "too few upper-case valid inputs")
+    assert(got.exists(_._1.isEmpty))
+    "gGzZxX \nKＡａİß".foreach(c =>
+      assert(got.exists(_._1.exists(_.contains(c))), s"no input holds U+${c.toInt.toHexString}"))
+    // the raw-tx sink's payload fold
+    val hexes = bytes.toDF("b").select(Sources.lowerHex(hex(col("b"))), lower(hex(col("b"))))
+      .collect()
+    hexes.foreach(r => assert(r.getString(0) == r.getString(1)))
+  }
+
   test("readArchive without a data file fails as Spark's inference does") {
     val dir = Files.createTempDirectory("graft-archive-empty").toString
     Files.createDirectories(Paths.get(s"$dir/empty"))

@@ -1,13 +1,20 @@
 #!/usr/bin/env python3
 """Summarises a JDK Flight Recorder file: the processes the JVM started, by
-command, the threads it started, and the hottest frames of its `main` thread.
+command, the threads it started, the hottest frames of its `main` thread, and
+the samples spent in static initializers.
 
-    python3 tools/jfr_report.py <file.jfr> [--top N]
+    python3 tools/jfr_report.py <file.jfr> [--top N] [--stack-depth D]
 
 One benchmark run records such a file with no change to the benchmark:
 
     JAVA_TOOL_OPTIONS="-XX:StartFlightRecording=filename=run.jfr,settings=profile,dumponexit=true" \\
         python3 dumpsterbench/run.py --workload collect_stream --seed 1
+
+The static-initializer table counts, on every thread, the execution samples
+whose stack holds a `<clinit>` frame, under the outermost such frame: the class
+whose first use paid for the whole nested initialization. Only the innermost
+`--stack-depth` frames of a sample are read (64 by default), so a `<clinit>`
+deeper than that is not seen.
 
 The file is read through the JDK's `jfr` tool, which must be on the PATH.
 """
@@ -31,6 +38,12 @@ def frame(f):
     return f"{m['type']['name']}.{m['name']}"
 
 
+def outermost_clinit(sample):
+    """The sample's outermost `<clinit>` frame, or None. Frames run innermost first."""
+    frames = (sample.get("stackTrace") or {}).get("frames") or []
+    return next((frame(f) for f in reversed(frames) if f["method"]["name"] == "<clinit>"), None)
+
+
 def table(title, counts, top):
     total = sum(counts.values())
     print(f"{title}: {total}")
@@ -42,9 +55,10 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("jfr")
     ap.add_argument("--top", type=int, default=15)
+    ap.add_argument("--stack-depth", type=int, default=64)
     a = ap.parse_args()
     try:
-        evs = events(a.jfr, ["jdk.ProcessStart", "jdk.ThreadStart", "jdk.ExecutionSample"])
+        evs = events(a.jfr, ["jdk.ProcessStart", "jdk.ThreadStart", "jdk.ExecutionSample"], a.stack_depth)
     except (OSError, subprocess.CalledProcessError) as e:
         sys.exit(f"jfr print failed: {e}")
     by_type = collections.defaultdict(list)
@@ -62,6 +76,9 @@ def main():
     table("main-thread samples, by top frame", collections.Counter(
         frame(v["stackTrace"]["frames"][0]) for v in main_samples
         if v.get("stackTrace") and v["stackTrace"]["frames"]), a.top)
+    clinits = (outermost_clinit(v) for v in by_type["jdk.ExecutionSample"])
+    table("static-initializer samples, by outermost <clinit>",
+          collections.Counter(c for c in clinits if c), a.top)
 
 
 if __name__ == "__main__":
