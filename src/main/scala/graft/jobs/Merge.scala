@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 /** The flagship batch job (SURVEY.md §3.1; cmd/merge/transactions.go:22-185)
   * as one declarative Spark DAG:
   *
-  *   raw tx CSVs ─ validate (P11) ─ dedup earliest-wins on RAW rows (A1)
+  *   raw tx CSVs (validated by the reader, P11) ─ dedup earliest-wins on RAW rows (A1)
   *      ─ blacklist anti-join (J2) ─ parse_raw_tx (P1) ─ split valid/trash (F2)
   *      ─ sources-attach (J1/A2/O3) ─ inclusion enrich (J3/P13)
   *      ─ already-included filter (F1) ─ global sort (O1)
@@ -27,6 +27,12 @@ import org.apache.spark.sql.functions._
   */
 object Merge {
 
+  /** `rawTxs`, `sourcelog` and `blacklist` are taken as the [[Sources]]
+    * readers return them: `hash` already passed [[Sources.hexHash]] (valid,
+    * lowercase, never null) and `timestamp_ms` is never null. The merge does
+    * not check them again, as the reference's merge trusts its loaders
+    * (common/sourcelog.go:41-48). `blocks` has no reader and is folded
+    * here. */
   final case class Inputs(
       rawTxs: DataFrame, // timestamp_ms LONG, hash STRING, raw_tx_hex STRING
       sourcelog: DataFrame, // timestamp_ms LONG, hash STRING, source STRING
@@ -52,11 +58,8 @@ object Merge {
 
   def run(spark: SparkSession, in: Inputs): Output = {
     graft.ops.LocalFs.install(spark)
-    // ── validate + dedup raw rows (F3, A1) ────────────────────────────
-    val raw = in.rawTxs
-      .withColumn("hash", Sources.hexHash(col("hash")))
-      .filter(col("hash").isNotNull && col("timestamp_ms").isNotNull)
-    val deduped = raw
+    // ── dedup raw rows (A1) ───────────────────────────────────────────
+    val deduped = in.rawTxs
       .groupBy("hash")
       .agg(min(struct(col("timestamp_ms"), col("raw_tx_hex"))).as("f"))
       .select(col("hash"), col("f.timestamp_ms").as("timestamp_ms"),
@@ -67,8 +70,7 @@ object Merge {
     // a distinct there costs a shuffle of its own
     val fresh = in.blacklist match {
       case Some(bl) =>
-        val blNorm = bl.select(Sources.hexHash(col("hash")).as("hash"))
-        deduped.join(broadcastIfSmall(blNorm), Seq("hash"), "left_anti")
+        deduped.join(broadcastIfSmall(bl.select("hash")), Seq("hash"), "left_anti")
       case None => deduped
     }
 
@@ -93,8 +95,6 @@ object Merge {
     // one exchange on `hash` serves both aggregates: hashpartitioning(hash)
     // satisfies the (hash, source) grouping as well as the hash one
     val sourcesByHash = in.sourcelog
-      .withColumn("hash", Sources.hexHash(col("hash")))
-      .filter(col("hash").isNotNull)
       .repartition(col("hash"))
       .groupBy("hash", "source").agg(min("timestamp_ms").as("first_ts")) // A2
       .groupBy("hash")

@@ -50,13 +50,11 @@ object Sources {
     * column: the value folded to ASCII lowercase when it is `0x` plus 64
     * hex digits in either case, else null. Where that holds, the fold
     * equals `lower`: no other character lowercases to a hex digit or `x`.
-    * `\z`, unlike `$`, admits no trailing line break. An already-lowercase
-    * hash, nearly every row, skips the fold: `translate` costs more per
-    * row than the regex, and the merge's re-check of the readers' output
-    * runs inlined into their pushed-down filters. */
+    * `\z`, unlike `$`, admits no trailing line break. The readers below
+    * apply it once; [[graft.jobs.Merge.run]] takes their frames as they
+    * are. */
   def hexHash(c: Column): Column =
-    when(c.rlike("^0x[0-9a-f]{64}\\z"), c)
-      .when(c.rlike("^0[xX][0-9a-fA-F]{64}\\z"), lowerHex(c))
+    when(c.rlike("^0[xX][0-9a-fA-F]{64}\\z"), lowerHex(c))
 
   /** P5: source-name normalization (common/consts.go:27-42): map known
     * provider URIs to their short tags, pass anything else through. */

@@ -141,7 +141,7 @@ object Collect {
       import spark.implicits._
       drain(inclusionCheck(
         feed(spark, in).withColumn("reason", lit(null).cast("string")),
-        Seq("0xaa").toDF("hash")), "graft_warm_incl", "append")
+        Seq(f"0x${0xaa}%064x").toDF("hash")), "graft_warm_incl", "append")
     } finally {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse

@@ -54,7 +54,7 @@ class InclusionCheckSpec extends AnyFunSuite {
 
   /** The join-path enrichment, verbatim Merge.run semantics. */
   private def joinPath(df: DataFrame, dim: DataFrame): DataFrame =
-    df.join(broadcast(dim.select(lower(col("hash")).as("hash"),
+    df.join(broadcast(dim.select(graft.ops.Sources.hexHash(col("hash")).as("hash"),
         col("block_number"), col("block_ts_ms"))), Seq("hash"), "left")
       .withColumn("includedAtBlockHeight", coalesce(col("block_number"), lit(0L)))
       .withColumn("includedBlockTimestamp", coalesce(col("block_ts_ms"), lit(0L)))

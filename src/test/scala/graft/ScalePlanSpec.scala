@@ -151,11 +151,14 @@ class ScalePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sources.exists(shuffles(_) == 1), s"sourcelog side:\n$plan")
   }
 
-  test("hash columns never case-map: no Lower/Upper/InitCap in the readers, merge or inclusion check") {
-    // Spark builds ICU's case tables the first time any of these runs in a
-    // JVM (about 0.7 s of a cold merge); hex hashes fold without them
+  test("hash columns never case-map, and the merge runs one hash rule per input") {
+    // Spark builds ICU's case tables the first time Lower, Upper or InitCap
+    // runs in a JVM (about 0.7 s of a cold merge); hex hashes fold without
+    // them. Each reader applies Sources.hexHash once and Merge.run folds only
+    // the blocks dim, which has no reader: a re-check of the readers' output
+    // would run the rule again, inlined into the scans' filters.
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower, Upper}
+    import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower, RLike, Upper}
     val s = spark
     import s.implicits._
     val dir = Files.createTempDirectory("graft_casemap").toString
@@ -168,24 +171,28 @@ class ScalePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
         case e @ (_: Lower | _: Upper | _: InitCap) => e.sql
       }))
-    val raws = Seq((1000L, h, "0x02dead")).toDF("timestamp_ms", "hash", "raw_tx_hex")
-    val slog = Seq((900L, h, "a")).toDF("timestamp_ms", "hash", "source")
+    val txs = ops.Sources.readTxCsv(spark, csv("tx.csv", s"1,$h,0x02"))
+    val slog = ops.Sources.readSourcelogCsv(spark, csv("sl.csv", s"1,$h,a"))
+    val meta = ops.Sources.readMetadataHashes(spark, csv("meta.csv", s"1,$h"))
     val blocks = Seq((h, 100L, 2000L)).toDF("hash", "block_number", "block_ts_ms")
-    val out = jobs.Merge.run(spark, jobs.Merge.Inputs(raws, slog, Some(raws.select("hash")), Some(blocks)))
+    val out = jobs.Merge.run(spark, jobs.Merge.Inputs(txs, slog, Some(meta), Some(blocks)))
     try {
       val plans = Seq(
-        "readTxCsv" -> ops.Sources.readTxCsv(spark, csv("tx.csv", s"1,$h,0x02")),
-        "readSourcelogCsv" -> ops.Sources.readSourcelogCsv(spark, csv("sl.csv", s"1,$h,a")),
+        "readTxCsv" -> txs,
+        "readSourcelogCsv" -> slog,
         "readTrashCsv" -> ops.Sources.readTrashCsv(spark, csv("trash.csv", s"1,$h,a,r,n")),
-        "readMetadataHashes" -> ops.Sources.readMetadataHashes(spark, csv("meta.csv", s"1,$h")),
+        "readMetadataHashes" -> meta,
         "readTxCsvZip" -> ops.Sources.readTxCsvZip(spark, s"$dir/*.csv.zip"),
         "Merge.run transactions" -> out.transactions,
         "Merge.run trash" -> out.trash,
         "Collect.inclusionCheck" -> streaming.Collect.inclusionCheck(
-          raws.withColumn("reason", lit(null).cast("string")), blocks.select("hash")))
+          txs.withColumn("reason", lit(null).cast("string")), blocks.select("hash")))
       plans.foreach { case (name, df) =>
         assert(caseMaps(df).isEmpty, s"$name case-maps: ${caseMaps(df)}")
       }
+      val rules = out.transactions.queryExecution.analyzed
+        .flatMap(_.expressions.flatMap(_.collect { case r: RLike => r.sql }))
+      assert(rules.size == 4, s"three readers and the blocks dim: $rules")
     } finally out.parsed.unpersist(false)
   }
 

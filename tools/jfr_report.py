@@ -3,7 +3,7 @@
 command, the threads it started, the hottest frames of its `main` thread, and
 the samples spent in static initializers.
 
-    python3 tools/jfr_report.py <file.jfr> [--top N] [--stack-depth D]
+    python3 tools/jfr_report.py <file.jfr> [--top N]
 
 One benchmark run records such a file with no change to the benchmark:
 
@@ -13,8 +13,8 @@ One benchmark run records such a file with no change to the benchmark:
 The static-initializer table counts, on every thread, the execution samples
 whose stack holds a `<clinit>` frame, under the outermost such frame: the class
 whose first use paid for the whole nested initialization. Only the innermost
-`--stack-depth` frames of a sample are read (64 by default), so a `<clinit>`
-deeper than that is not seen.
+`STACK_DEPTH` frames of a sample are read, so a `<clinit>` deeper than that is
+not seen.
 
 The file is read through the JDK's `jfr` tool, which must be on the PATH.
 """
@@ -26,9 +26,12 @@ import subprocess
 import sys
 
 
-def events(path, names, depth=1):
-    """The recording's events of the given types, with `depth` stack frames."""
-    out = subprocess.run(["jfr", "print", "--json", "--stack-depth", str(depth), "--events",
+STACK_DEPTH = 64
+
+
+def events(path, names):
+    """The recording's events of the given types, with `STACK_DEPTH` stack frames."""
+    out = subprocess.run(["jfr", "print", "--json", "--stack-depth", str(STACK_DEPTH), "--events",
                           ",".join(names), path], check=True, capture_output=True, text=True).stdout
     return json.loads(out)["recording"]["events"]
 
@@ -55,10 +58,9 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("jfr")
     ap.add_argument("--top", type=int, default=15)
-    ap.add_argument("--stack-depth", type=int, default=64)
     a = ap.parse_args()
     try:
-        evs = events(a.jfr, ["jdk.ProcessStart", "jdk.ThreadStart", "jdk.ExecutionSample"], a.stack_depth)
+        evs = events(a.jfr, ["jdk.ProcessStart", "jdk.ThreadStart", "jdk.ExecutionSample"])
     except (OSError, subprocess.CalledProcessError) as e:
         sys.exit(f"jfr print failed: {e}")
     by_type = collections.defaultdict(list)
