@@ -2,7 +2,7 @@ package graft.jobs
 
 import graft.functions.ParseTx
 import graft.ops.{Analyze, Sources}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The flagship batch job (SURVEY.md §3.1; cmd/merge/transactions.go:22-185)
@@ -17,12 +17,19 @@ import org.apache.spark.sql.functions._
   *  - dedup + anti-join run on the cheap 3-column raw rows BEFORE the
   *    expensive parse UDF (§4.1 design rule — Catalyst cannot reorder
   *    through a non-deterministic-looking UDF, so the DAG orders it);
-  *  - the two aggregations (tx dedup, sourcelog dedup) and the attach join
-  *    all hash-partition on `hash`, so AQE coalesces into one co-located
-  *    exchange chain; blacklist and blocks broadcast only when Catalyst's
-  *    size estimate fits the session threshold (blocks is ~25 % of input
-  *    rows, not a bounded dim — see [[Merge.broadcastIfSmall]]), else the
-  *    join degrades to a shuffle on the already-partitioned `hash` key;
+  *  - the two aggregations and the attach join all hash-partition on
+  *    `hash`. Each aggregation is one `groupBy("hash")` with one exchange:
+  *    A1 keeps [[Merge.earliestRow]] (`array_min(collect_list(struct))`, an
+  *    ObjectHashAggregate with no sort stage), and A2 builds the sources
+  *    list with [[Merge.sourcesByFirstSeen]], which folds the per-(hash,
+  *    source) `min` into the same aggregate. Fewer operators mean fewer
+  *    generated classes per run, and Spark's codegen cache (100 entries
+  *    by default, each class keyed twice: driver and task classloader)
+  *    then holds more of a repeated merge's classes;
+  *  - blacklist and blocks broadcast only when Catalyst's size estimate
+  *    fits the session threshold (blocks is ~25 % of input rows, not a
+  *    bounded dim — see [[Merge.broadcastIfSmall]]), else the join
+  *    degrades to a shuffle on the already-partitioned `hash` key;
   *  - the final sort is a range-partitioned total order (SortExec spills).
   */
 object Merge {
@@ -61,7 +68,7 @@ object Merge {
     // ── dedup raw rows (A1) ───────────────────────────────────────────
     val deduped = in.rawTxs
       .groupBy("hash")
-      .agg(min(struct(col("timestamp_ms"), col("raw_tx_hex"))).as("f"))
+      .agg(earliestRow(col("timestamp_ms"), col("raw_tx_hex")).as("f"))
       .select(col("hash"), col("f.timestamp_ms").as("timestamp_ms"),
         col("f.raw_tx_hex").as("raw_tx_hex"))
 
@@ -92,15 +99,9 @@ object Merge {
         lit("merge").as("source"), col("reason"), lit("").as("notes"))
 
     // ── sources attach (A2 dedup → J1 join, O3 order) ─────────────────
-    // one exchange on `hash` serves both aggregates: hashpartitioning(hash)
-    // satisfies the (hash, source) grouping as well as the hash one
     val sourcesByHash = in.sourcelog
-      .repartition(col("hash"))
-      .groupBy("hash", "source").agg(min("timestamp_ms").as("first_ts")) // A2
       .groupBy("hash")
-      .agg(transform(
-        array_sort(collect_list(struct(col("first_ts"), col("source")))),
-        x => x.getField("source")).as("sources"))
+      .agg(sourcesByFirstSeen(col("timestamp_ms"), col("source")).as("sources"))
 
     val withSources = valid
       .join(sourcesByHash, Seq("hash"), "left")
@@ -139,6 +140,25 @@ object Merge {
     Output(out, trash, parsed)
   }
 
+  /** A1 earliest-wins: the least `(ts, payload)` struct of the group, the
+    * row `min(struct(ts, payload))` picks (a timestamp tie goes to the
+    * smaller payload). `min` over a struct with a string field has no
+    * mutable aggregation buffer and plans a SortAggregate with a sort on
+    * each side of its exchange; `array_min(collect_list(..))` plans an
+    * ObjectHashAggregate with no sort. */
+  private[graft] def earliestRow(ts: Column, payload: Column): Column =
+    array_min(collect_list(struct(ts, payload)))
+
+  /** A2 + O3 in one aggregate: a group's distinct sources, each at its
+    * earliest timestamp, ordered by (that timestamp, source). Sorting every
+    * (ts, source) pair and keeping each source's first occurrence gives
+    * the order of a per-(hash, source) `min(ts)` followed by a sorted
+    * `collect_list`, without the second aggregate. */
+  private[graft] def sourcesByFirstSeen(ts: Column, source: Column): Column =
+    array_distinct(transform(
+      array_sort(collect_list(struct(ts.as("ts"), source.as("source")))),
+      x => x.getField("source")))
+
   /** A2 standalone: sourcelog merge (cmd/merge/sourcelog.go:64-108 +
     * common/sourcelog.go:12-65): normalize source tags, keep the earliest
     * timestamp per (hash, source). One hash-partitioned aggregate with
@@ -152,7 +172,7 @@ object Merge {
 
   /** A3 standalone: trash merge (cmd/merge/trash.go:64-108 +
     * common/trashfile.go:66-103): earliest entry per (hash, source) wins,
-    * carrying its reason/notes (min-struct, same shape as the A1 dedup). */
+    * carrying its reason/notes (the least struct, the row A1 keeps). */
   def mergeTrash(trash: DataFrame): DataFrame =
     trash
       .withColumn("source", Sources.normalizeSource(col("source")))

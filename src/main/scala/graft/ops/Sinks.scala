@@ -340,11 +340,15 @@ object Sinks {
       .write.option("header", "true").mode("overwrite").csv(path)
   }
 
-  /** S12: trash CSV (cmd/merge/trash.go:64-108). */
+  /** S12: trash CSV, one ts-sorted file, as the reference writes one trash
+    * file per day (cmd/merge/trash.go:64-108). Trash is a small share of a
+    * day (malformed and rejected txs), so one writer task sorts it; a
+    * global `orderBy` would add a range-sampling job and write a file per
+    * range. */
   def writeTrashCsv(trash: DataFrame, path: String): Unit = {
     LocalFs.install(trash.sparkSession)
     trash.select("timestamp_ms", "hash", "source", "reason", "notes")
-      .orderBy("timestamp_ms")
+      .repartition(1).sortWithinPartitions("timestamp_ms")
       .write.option("header", "true").mode("overwrite").csv(path)
   }
 

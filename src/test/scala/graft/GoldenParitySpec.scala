@@ -15,9 +15,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * Goldens are frozen at sf0.01 specifically (row counts scale with the SF
   * inferred from the data dir), so this spec must not be pointed elsewhere.
   */
-class GoldenParitySpec extends AnyFunSuite {
+class GoldenParitySpec extends AnyFunSuite with SessionLeakCheck {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.01"
+
+  // the parse golden reads the session-cached fixture inputs
+  override protected def afterAll(): Unit =
+    try queries.MempoolParse.releaseInputs(spark, sf)
+    finally super.afterAll()
 
   test("Verify's off-SF skip set is exactly the frozen-oracle family") {
     // At the frozen SF nothing is skipped; anywhere else, exactly the

@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (cmd/merge/inclusioncheck.go) and produce byte-identical enrichment to
   * the blocks-dim join path.
   */
-class InclusionCheckSpec extends AnyFunSuite {
+class InclusionCheckSpec extends AnyFunSuite with SessionLeakCheck {
   private lazy val spark = SparkTestSession.spark
 
   // ── fixture: 200 txs, 8 blocks of 25 txs, last quarter never included ──
@@ -325,17 +325,21 @@ class InclusionCheckSpec extends AnyFunSuite {
 
     val raws = MempoolParse.rawTxs(spark, dir).cache()
     val srcs = MempoolParse.sourcelog(spark, dir)
-    def run(in: Merge.Inputs): Seq[Row] =
-      Merge.run(spark, in).transactions.drop("rawTx")
+    def run(in: Merge.Inputs): Seq[Row] = {
+      val out = Merge.run(spark, in)
+      try out.transactions.drop("rawTx")
         .withColumn("sources", concat_ws(" ", col("sources")))
         .orderBy("hash").collect().toSeq
-
-    val viaJoin = run(Merge.Inputs(raws, srcs, blocks = Some(dim)))
-    val viaRpc = withRpcServer(txBlock, blocks) { (uri, _, _) =>
-      run(Merge.Inputs(raws, srcs,
-        inclusionRpc = Some(InclusionCheck.JsonRpcFactory(uri))))
+      finally out.parsed.unpersist(false)
     }
-    assert(viaRpc == viaJoin)
-    dim.unpersist(); raws.unpersist()
+
+    try {
+      val viaJoin = run(Merge.Inputs(raws, srcs, blocks = Some(dim)))
+      val viaRpc = withRpcServer(txBlock, blocks) { (uri, _, _) =>
+        run(Merge.Inputs(raws, srcs,
+          inclusionRpc = Some(InclusionCheck.JsonRpcFactory(uri))))
+      }
+      assert(viaRpc == viaJoin)
+    } finally { dim.unpersist(); raws.unpersist() }
   }
 }

@@ -4,7 +4,10 @@ import graft.functions.TxFixtures
 import graft.jobs.Merge
 import graft.ops.{Analyze, Sinks}
 import graft.queries.MempoolParse
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end merge-job semantics on deterministic synthetic mempool data. */
@@ -70,6 +73,63 @@ class MergeJobSpec extends AnyFunSuite with SessionLeakCheck {
     assert(report.contains("Unique transactions:"))
     assert(report.contains("| Tx Type |"))
     assert(s.perType.nonEmpty && s.perSource.nonEmpty)
+  }
+
+  // Seeded ScalaCheck rows for the aggregate-form differentials: a few
+  // hashes and sources and a narrow timestamp range, so groups hold
+  // timestamp ties, one hash carries different payloads and (hash, source)
+  // pairs repeat; `s` keys 300 independent samples, aggregated in one job.
+  // Timestamps are never null: the readers drop such rows before the merge.
+  private def sampleRows(what: Gen[String]): Seq[(Int, String, Long, String)] = {
+    val row = for {
+      h <- Gen.oneOf("0xaa", "0xbb", "0xcc")
+      ts <- Gen.chooseNum(1000L, 1003L)
+      v <- Gen.frequency(12 -> what, 1 -> Gen.const(null.asInstanceOf[String]))
+    } yield (h, ts, v)
+    (0 until 300).flatMap { s =>
+      Gen.chooseNum(1, 12).flatMap(Gen.listOfN(_, row))
+        .apply(Gen.Parameters.default, Seed(11L + s)).toSeq.flatten
+        .map { case (h, ts, v) => (s, h, ts, v) }
+    }
+  }
+
+  private def sorted(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("A1 earliestRow equals min(struct) on ties, payload variants and repeats") {
+    import spark.implicits._
+    val rows = sampleRows(Gen.oneOf("0x01", "0x02", "0x0a", "0x0b"))
+    val in = spark.sparkContext.parallelize(rows, 4)
+      .toDF("s", "hash", "timestamp_ms", "raw_tx_hex")
+    def dedup(f: (Column, Column) => Column) = in.groupBy("s", "hash")
+      .agg(f(col("timestamp_ms"), col("raw_tx_hex")).as("f"))
+      .select(col("s"), col("hash"), col("f.timestamp_ms"), col("f.raw_tx_hex"))
+    val old = sorted(dedup((ts, v) => min(struct(ts, v))))
+    assert(old == sorted(dedup((ts, v) => Merge.earliestRow(ts, v))))
+    // the samples hold what the form must get right
+    val groups = rows.groupBy(r => (r._1, r._2)).values
+    assert(groups.exists(g => g.map(_._4).distinct.size > 1 &&
+      g.groupBy(_._3).values.exists(_.map(_._4).distinct.size > 1)),
+      "no timestamp tie between different payloads")
+    assert(groups.exists(g => g.size > g.distinct.size), "no repeated row")
+  }
+
+  test("A2 sourcesByFirstSeen equals the per-(hash, source) min then sorted list") {
+    import spark.implicits._
+    val rows = sampleRows(Gen.oneOf("a", "b", "c", "d"))
+    val in = spark.sparkContext.parallelize(rows, 4)
+      .toDF("s", "hash", "timestamp_ms", "source")
+    val old = in.groupBy("s", "hash", "source").agg(min("timestamp_ms").as("first_ts"))
+      .groupBy("s", "hash")
+      .agg(transform(array_sort(collect_list(struct(col("first_ts"), col("source")))),
+        x => x.getField("source")).as("sources"))
+    val now = in.groupBy("s", "hash")
+      .agg(Merge.sourcesByFirstSeen(col("timestamp_ms"), col("source")).as("sources"))
+    assert(sorted(old) == sorted(now))
+    val groups = rows.groupBy(r => (r._1, r._2, r._4)).values
+    assert(groups.exists(_.map(_._3).distinct.size > 1), "no (hash, source) seen twice")
+    assert(rows.groupBy(r => (r._1, r._2, r._3)).values.exists(_.map(_._4).distinct.size > 1),
+      "no timestamp tie between sources")
   }
 
   test("sourcelog merge: earliest per (hash, source), normalized, frozen layout") {

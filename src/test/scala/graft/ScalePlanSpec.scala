@@ -115,11 +115,13 @@ class ScalePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("merge DAG: no exchange under the blacklist broadcast, one on the sourcelog side") {
     // the anti-join only tests existence, so the blacklist broadcasts as
-    // read; hashpartitioning(hash) serves both sourcelog aggregates. AQE
-    // is off so that the plan holds every exchange EnsureRequirements
-    // plans, including those inside the cached parse stage.
+    // read; the sourcelog side is one groupBy(hash) (a partial and a final
+    // node around one exchange), and neither dedup sorts: a SortAggregate
+    // brings a Sort stage and its generated classes. AQE is off so that
+    // the plan holds every exchange EnsureRequirements plans, including
+    // those inside the cached parse stage.
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, SortAggregateExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     val s = spark
@@ -149,6 +151,41 @@ class ScalePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       case a: BaseAggregateExec if a.output.exists(_.name == "sources") => a
     }
     assert(sources.exists(shuffles(_) == 1), s"sourcelog side:\n$plan")
+    val sourceAggs = sources.toSeq.flatMap(nodes).collect { case a: BaseAggregateExec => a }
+    assert(sourceAggs.size == 2 &&
+      sourceAggs.forall(_.groupingExpressions.map(_.sql) == Seq("hash")),
+      s"sourcelog side is not one groupBy(hash):\n${sources.get}")
+    assert(!nodes(plan).exists(_.isInstanceOf[SortAggregateExec]), s"SortAggregate in the merge:\n$plan")
+  }
+
+  test("trash sink: one sorted file, no range sampling, two jobs") {
+    // the trash CSV is one ts-sorted file: a single-partition exchange and
+    // a sort inside it, where a global orderBy samples the input for its
+    // range bounds in a job of its own and writes a file per range
+    import org.apache.spark.JobCounter
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val trash = spark.range(0, 400, 1, 4).select(
+      (lit(5000L) - col("id") * 7 % 1000).as("timestamp_ms"),
+      format_string("0x%064x", col("id")).as("hash"), lit("merge").as("source"),
+      lit("decode-error").as("reason"), lit("").as("notes"))
+    val dir = Files.createTempDirectory("graft_trash").toString
+    var plans = Seq.empty[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans :+= qe.executedPlan.toString
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (_, jobs) = try JobCounter(spark.sparkContext)(ops.Sinks.writeTrashCsv(trash, s"$dir/out"))
+      finally spark.listenerManager.unregister(listener)
+    assert(jobs == 2, s"$jobs jobs")
+    assert(plans.size == 1 && !plans.head.toLowerCase.contains("rangepartitioning"),
+      s"trash sink plan:\n${plans.mkString("\n")}")
+    val files = new java.io.File(s"$dir/out").listFiles().filter(_.getName.startsWith("part-"))
+    assert(files.length == 1, files.map(_.getName).mkString(", "))
+    val ts = Files.readString(files.head.toPath).split("\n").toSeq.drop(1).map(_.takeWhile(_ != ',').toLong)
+    assert(ts.size == 400 && ts == ts.sorted)
   }
 
   test("hash columns never case-map, and the merge runs one hash rule per input") {
